@@ -3,7 +3,8 @@ package graft.functions
 import java.security.MessageDigest
 
 import org.apache.spark.sql.{Column, GraftColumnShim => ExpressionUtils}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression, Generator, GenericInternalRow, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
@@ -740,6 +741,55 @@ case class SrpSketchBits(child: Expression, planes: Array[Long],
     copy(child = newChild)
 }
 
+/** In-group pair expansion — the candidate generator every near-duplicate
+  * operator runs inside its bucket groups. Emits (a, b) rows that keep the
+  * input element type, read straight from the input array(s): no per-pair
+  * struct array and no lambda evaluation. Exactly two forms:
+  *  - self (one SORTED array xs): every (xs[i], xs[j]) with i < j when
+  *    size ≤ cap; otherwise the star (xs[0], xs[j]) for j ≥ 1;
+  *  - cross (ls, rs): every ls × rs pair when |ls|·|rs| ≤ cap, the product
+  *    taken in Long so a giant bucket cannot wrap under the cap; otherwise
+  *    (l, rs[0]) for each l (nothing when rs is empty).
+  * The star links every member to one hub in O(|group|) rows — the
+  * connectivity dedup consumes — so no group ever expands quadratically
+  * past its cap. A null array emits nothing. Per-pair fields and filters
+  * belong in the projection after the generator, where they codegen. */
+case class GroupPairs(children: Seq[Expression], cap: Long)
+  extends Generator with ExpectsInputTypes with CodegenFallback {
+  override def prettyName: String = "group_pairs"
+  override def inputTypes = children.map(_ => ArrayType)
+
+  // the (a, b) sides; the self form pairs its one array with itself
+  private def sides: Seq[ArrayType] =
+    Seq(children.head, children.last).map(_.dataType.asInstanceOf[ArrayType])
+  override def elementSchema: StructType = StructType(Seq("a", "b").zip(sides)
+    .map { case (n, t) => StructField(n, t.elementType, t.containsNull) })
+  @transient private lazy val (lt, rt) =
+    (sides.head.elementType, sides(1).elementType)
+
+  override def eval(input: InternalRow): IterableOnce[InternalRow] = {
+    val self = children.size == 1
+    val ls = children.head.eval(input).asInstanceOf[ArrayData]
+    val rs = if (self) ls else children(1).eval(input).asInstanceOf[ArrayData]
+    if (ls == null || rs == null) return Iterator.empty
+    val nl = ls.numElements(); val nr = rs.numElements()
+    val within = (if (self) nl.toLong else nl.toLong * nr) <= cap
+    // past the cap the self star keeps only row 0 as the hub, the cross
+    // star only column 0 (rs[0]) as every l's partner
+    val rows = if (self && !within) math.min(nl, 1) else nl
+    val cols = if (!self && !within) math.min(nr, 1) else nr
+    Iterator.range(0, rows).flatMap { i =>
+      val a = ls.get(i, lt)
+      Iterator.range(if (self) i + 1 else 0, cols)
+        .map(j => new GenericInternalRow(Array[Any](a, rs.get(j, rt))))
+    }
+  }
+
+  override protected def withNewChildrenInternal(
+      newChildren: IndexedSeq[Expression]): GroupPairs =
+    copy(children = newChildren)
+}
+
 object GraftExpressions {
   def float_vector_dot(a: Column, b: Column): Column =
     ExpressionUtils.column(FloatVectorDot(
@@ -789,4 +839,16 @@ object GraftExpressions {
   def minhash_signature(shingleArr: Column, numHashes: Int): Column =
     ExpressionUtils.column(MinHashSignature(
       ExpressionUtils.expression(shingleArr), numHashes))
+
+  /** See [[GroupPairs]], self form: pairs inside one sorted array, the star
+    * past `cap` members (default: no cap). Like any generator it is one per
+    * select; its output columns are `a` and `b`. */
+  def group_pairs(xs: Column, cap: Long = Long.MaxValue): Column =
+    ExpressionUtils.column(GroupPairs(Seq(ExpressionUtils.expression(xs)), cap))
+
+  /** See [[GroupPairs]], cross form: `ls` × `rs`, the star onto `rs[0]`
+    * past `cap` pairs. */
+  def group_pairs(ls: Column, rs: Column, cap: Long): Column =
+    ExpressionUtils.column(
+      GroupPairs(Seq(ls, rs).map(ExpressionUtils.expression), cap))
 }

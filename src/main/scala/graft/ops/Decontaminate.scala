@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.functions.GraftExpressions
 import graft.functions.TextFunctions
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
@@ -60,19 +61,9 @@ object Decontaminate {
       .withColumn("te", filter(col("ms"), m => m("t")))
       .withColumn("tr", filter(col("ms"), m => !m("t")))
       .where(size(col("te")) > 0 && size(col("tr")) > 0)
-    val full = flatten(transform(col("te"), e =>
-      transform(col("tr"), r =>
-        struct(e("id").as("test_id"), r("id").as("train_id")))))
-    val star = transform(col("te"), e =>
-      struct(e("id").as("test_id"),
-        element_at(col("tr"), 1)("id").as("train_id")))
     grouped
-      .select(explode(
-        // long arithmetic: Int size() products wrap for giant degenerate
-        // buckets, which would disable the cap exactly when it matters
-        when(size(col("te")).cast("long") * size(col("tr")).cast("long")
-          <= maxBucket, full).otherwise(star)).as("p"))
-      .select(col("p.test_id").as("test_id"), col("p.train_id").as("train_id"))
+      .select(GraftExpressions.group_pairs(col("te"), col("tr"), maxBucket))
+      .select(col("a.id").as("test_id"), col("b.id").as("train_id"))
       .distinct()
   }
 

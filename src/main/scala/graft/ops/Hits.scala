@@ -106,7 +106,9 @@ object Hits {
     // partials. Arithmetic unchanged: tot = sum(raw) over the same rows.
     val wAll = org.apache.spark.sql.expressions.Window
       .partitionBy(Seq.empty[org.apache.spark.sql.Column]: _*)
-    var auth: DataFrame = null
+    // a lazy placeholder (no job) so the output join below is well-defined
+    // for any round count; every round replaces it
+    var auth = nodes.select(col("node"), lit(0L).as("auth"))
     for (i <- 1 to iters) {
       // auth update: sum incoming hub mass, L1-normalize in fixed point.
       // auth stays LAZY inside the round — with the totals inline the hub

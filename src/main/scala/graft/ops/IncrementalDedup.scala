@@ -2,6 +2,7 @@ package graft.ops
 
 import java.io.File
 
+import graft.functions.GraftExpressions
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -60,6 +61,10 @@ class MinHashIndex(spark: SparkSession, path: String, idCol: String,
   // fresh-checkpoint footgun's shape for this store
   private val hwm = new OrdHighWater(new File(path), "minhash-lsh", strictOrd)
   private def currentGen(): Option[File] = gens.currentGen()
+
+  /** Runs just before the overlapped pair-expansion checkpoint — the seam a
+    * spec uses to make the concurrent postings append commit first. */
+  @volatile private[ops] var beforeExpansion: () => Unit = () => ()
 
   /** Absolute path of the live postings generation, if any — for plan
     * audits and external scans of the raw postings. */
@@ -197,22 +202,10 @@ class MinHashIndex(spark: SparkSession, path: String, idCol: String,
             element_at(col("msr"), i + lit(2))("id") =!= x("id")))
         .drop("msr")
         .where(size(col("ms")) > 1)
-      val pairsAll = flatten(transform(col("ms"), (x, i) =>
-        filter(
-          transform(slice(col("ms"), i + lit(2), size(col("ms"))),
-            y => struct(x("id").as("a"), y("id").as("b"),
-              (x("n") || y("n")).as("n"))),
-          p => p("n"))))
-      val hub = element_at(col("ms"), 1)
-      val pairsStar = filter(
-        transform(slice(col("ms"), lit(2), size(col("ms"))),
-          y => struct(hub("id").as("a"), y("id").as("b"),
-            (hub("n") || y("n")).as("n"))),
-        p => p("n"))
       val pairsLazy = grouped
-        .select(explode(when(size(col("ms")) <= maxBucket, pairsAll)
-          .otherwise(pairsStar)).as("p"))
-        .select(col("p.a").as("doc_a"), col("p.b").as("doc_b"))
+        .select(GraftExpressions.group_pairs(col("ms"), maxBucket))
+        .where(col("a.n") || col("b.n"))
+        .select(col("a.id").as("doc_a"), col("b.id").as("doc_b"))
         .distinct()
       // The pair-expansion checkpoint and the postings append are
       // INDEPENDENT consumers of the persisted newBB, so they run
@@ -235,6 +228,7 @@ class MinHashIndex(spark: SparkSession, path: String, idCol: String,
       val pairsHolder = new Array[DataFrame](1)
       Fs.inParallel(Seq(true, false), maxThreads = 2) {
         case true =>
+          beforeExpansion()
           // sever lineage BEFORE this call returns: a lazily recomputed
           // plan would read this batch's own postings back as "old"
           pairsHolder(0) = pairsLazy.localCheckpoint(true)

@@ -79,16 +79,10 @@ object MinHashLsh {
       .groupBy(col("band"), col("bucket"))
       .agg(sort_array(collect_list(col(idCol))).as("ds"))
       .where(size(col("ds")) > 1)
-    // ordered pairs (ds[i], ds[j]) for i < j, via indexed transform
-    val pairsAll = flatten(transform(col("ds"), (x, i) =>
-      transform(slice(col("ds"), i + lit(2), size(col("ds"))),
-        y => struct(x.as("a"), y.as("b")))))
-    // degenerate bucket: hub = smallest id (ds is sorted), linear fan-out
-    val pairsStar = transform(slice(col("ds"), lit(2), size(col("ds"))),
-      y => struct(element_at(col("ds"), 1).as("a"), y.as("b")))
-    grouped.select(explode(when(size(col("ds")) <= maxBucket, pairsAll)
-      .otherwise(pairsStar)).as("p"))
-      .select(col("p.a").as("doc_a"), col("p.b").as("doc_b"))
+    // pairs (ds[i], ds[j]) for i < j; a degenerate bucket fans out from
+    // its smallest id (ds is sorted)
+    grouped.select(GraftExpressions.group_pairs(col("ds"), maxBucket))
+      .select(col("a").as("doc_a"), col("b").as("doc_b"))
       .distinct()
   }
 

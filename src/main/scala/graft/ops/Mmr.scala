@@ -2,6 +2,7 @@ package graft.ops
 
 import graft.functions.VectorFunctions
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 
 /** Maximal Marginal Relevance re-ranking (Carbonell & Goldstein, SIGIR'98)
@@ -35,7 +36,7 @@ object Mmr {
              relCol: String, vecCol: String, n: Int,
              lam: Double, lamComp: Double): DataFrame = {
     require(n >= 1 && n <= 64, s"bad selection count $n")
-    var selected: Option[DataFrame] = None
+    val picks = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     // materialize the shortlist ONCE at entry: step 1 self-joins
     // `remaining` with its own projection (penalty side) and then
     // anti-joins it again, so a lazy `cands` re-runs the caller's
@@ -45,7 +46,7 @@ object Mmr {
     // checkpoints below.
     var remaining = cands.localCheckpoint(true)
     for (step <- 1 to n) {
-      val pen = selected match {
+      val pen = picks.reduceOption(_.unionByName(_)) match {
         case None => remaining
           .select(col(queryCol), col(candCol), lit(0.0).as("__pen"))
         case Some(sel) =>
@@ -78,7 +79,7 @@ object Mmr {
         // with n (the PageRank/HITS iterative discipline; measured 6.1 s →
         // sub-second at sf0.1 for n=5)
         .localCheckpoint(true)
-      selected = Some(selected.map(_.unionByName(pick)).getOrElse(pick))
+      picks += pick
       // drop the SUPERSEDED remaining's checkpoint blocks once the next
       // round's remaining is materialized from it (eager, so nothing can
       // ever re-read the old one): without this every round's blocks
@@ -89,12 +90,22 @@ object Mmr {
         pick.select(col(queryCol), col(candCol)), Seq(queryCol, candCol),
         "left_anti")
         .localCheckpoint(true)
-      prevRemaining.unpersist()
+      release(prevRemaining)
     }
-    // the final remaining is never read again (the result is the union of
-    // the per-round pick checkpoints)
-    remaining.unpersist()
-    selected.get.select(col(queryCol), col("step"), col(candCol),
-      col(relCol), round(col("__score"), 6).as("mmr_score"))
+    // the result is ONE checkpoint of the n picks, so every per-round
+    // checkpoint — picks and the final remaining — is freed here and a call
+    // leaves one persisted RDD behind whatever n is
+    val out = picks.reduce(_.unionByName(_)).select(col(queryCol), col("step"),
+      col(candCol), col(relCol), round(col("__score"), 6).as("mmr_score"))
+      .localCheckpoint(true)
+    (remaining +: picks.toSeq).foreach(release)
+    out
   }
+
+  /** Frees a local checkpoint's blocks. `Dataset.unpersist` frees nothing
+    * here — a checkpoint is not a CacheManager entry — so unpersist the
+    * checkpointed RDD under the frame's LogicalRDD leaf itself. */
+  private def release(checkpointed: DataFrame): Unit =
+    checkpointed.queryExecution.analyzed
+      .collect { case r: LogicalRDD => r.rdd.unpersist(blocking = false) }
 }

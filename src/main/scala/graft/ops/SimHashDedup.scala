@@ -1,7 +1,8 @@
 package graft.ops
 
+import graft.functions.GraftExpressions
 import graft.functions.TextFunctions._
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** SimHash near-duplicate detection: 16-bit token-weighted fingerprints,
@@ -56,17 +57,14 @@ object SimHashDedup {
       )): _*)).as("b"))
       .select(col(idCol), col("simhash"), col("b.blk"), col("b.v"))
     // ONE shuffle on (block, value); the grouped output is |buckets| rows —
-    // tiny — so splitting it into two filtered branches costs nothing (the
-    // exchange below the aggregate is canonically identical and reused),
-    // while keeping each branch's expression tree flat enough to evaluate
-    // cheaply. A single when(exact, capped) projection nests ~8 higher-order
-    // functions and HOFs never codegen, so the merged form ran the whole
-    // interpreted tree for every bucket (r2's 4x regression).
+    // tiny — so splitting it into filtered branches costs nothing (the
+    // exchange below the aggregate is canonically identical and reused).
     // explicit-N keyed repartition (the [[Par.byCols]] rationale): it
     // REPLACES the aggregate's own exchange but is exempt from AQE
     // byte-based coalescing, which folded the small-bytes/high-CPU
-    // in-bucket pair expansion to ~2 tasks (measured 0.5 s 2-task stage —
-    // the HOF expansion never codegens, so its cost is CPU, not bytes).
+    // in-bucket pair expansion to ~2 tasks (measured 0.5 s 2-task stage
+    // when the expansion was an interpreted higher-order-function tree;
+    // whether the native expansion still needs the width is unmeasured).
     // 512 distinct (blk, v) keys spread fine over the conf-driven N.
     val grouped = melted
       .repartition(melted.sparkSession.sessionState.conf.numShufflePartitions,
@@ -75,34 +73,27 @@ object SimHashDedup {
       .agg(sort_array(collect_list(struct(col(idCol).as("id"),
         col("simhash").as("sh")))).as("ds"))
       .where(size(col("ds")) > 1)
-    def pairOf(x: Column, y: Column) =
-      struct(x.getField("id").as("doc_a"), y.getField("id").as("doc_b"),
-        bit_count(x.getField("sh").bitwiseXOR(y.getField("sh"))).as("hamming"))
-    def allPairs(xs: Column) =
-      flatten(transform(xs, (x, i) =>
-        transform(slice(xs, i + lit(2), size(xs)), y => pairOf(x, y))))
     // exact branch: every member against every member (the common case)
     val exact = grouped.where(size(col("ds")) <= maxBucket)
-      .select(explode(allPairs(col("ds"))).as("p"))
+      .select(GraftExpressions.group_pairs(col("ds")))
     // capped branch: a degenerate bucket concentrates on FEW fingerprints —
-    // per-fingerprint stars (hamming 0) plus an all-pairs over one
+    // per-fingerprint stars (hamming 0; the self form with cap 1 is the
+    // star around each group's smallest id) plus an all-pairs over one
     // representative per distinct fingerprint, bounded by the fingerprint
     // space 2^(16−width), not the document count. Any qualifying pair (x, y)
-    // stays connected x—rep(x)—rep(y)—y. Staged projections keep each HOF
-    // tree shallow and scan the bucket once per distinct fingerprint.
-    val capped = grouped.where(size(col("ds")) > maxBucket)
-      .withColumn("members", transform(
+    // stays connected x—rep(x)—rep(y)—y. The members projection scans the
+    // bucket once per distinct fingerprint.
+    val members = grouped.where(size(col("ds")) > maxBucket)
+      .select(transform(
         array_sort(array_distinct(transform(col("ds"), x => x.getField("sh")))),
-        s => filter(col("ds"), x => x.getField("sh") === s)))
-      .withColumn("stars", flatten(transform(col("members"), m =>
-        transform(slice(m, lit(2), size(m)), y =>
-          struct(element_at(m, 1).getField("id").as("doc_a"),
-            y.getField("id").as("doc_b"), lit(0).as("hamming"))))))
-      .withColumn("reps", sort_array(transform(col("members"),
-        m => element_at(m, 1))))
-      .select(explode(concat(col("stars"), allPairs(col("reps")))).as("p"))
-    exact.union(capped)
-      .select(col("p.doc_a"), col("p.doc_b"), col("p.hamming"))
+        s => filter(col("ds"), x => x.getField("sh") === s)).as("members"))
+    val stars = members.select(explode(col("members")).as("m"))
+      .select(GraftExpressions.group_pairs(col("m"), 1))
+    val reps = members.select(GraftExpressions.group_pairs(
+      sort_array(transform(col("members"), m => element_at(m, 1)))))
+    exact.union(stars).union(reps)
+      .select(col("a.id").as("doc_a"), col("b.id").as("doc_b"),
+        bit_count(col("a.sh").bitwiseXOR(col("b.sh"))).as("hamming"))
       .where(col("hamming") <= maxHamming)
       .distinct()
   }

@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.functions.GraftExpressions
 import graft.functions.TextFunctions
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
@@ -92,19 +93,12 @@ object SpanDedup {
       .agg(sort_array(collect_list(struct(col(idCol).as("i"), col("pos").as("p"))))
         .as("ps"))
       .where(size(col("ps")) > 1)
-    val pairsAll = flatten(transform(col("ps"), (x, i) =>
-      transform(slice(col("ps"), i + lit(2), size(col("ps"))), y =>
-        struct(x("i").as("a"), x("p").as("pa"), y("i").as("b"), y("p").as("pb")))))
     // hot hash: star around the smallest posting — O(|group|) candidates
-    val hub = element_at(col("ps"), 1)
-    val pairsStar = transform(slice(col("ps"), lit(2), size(col("ps"))), y =>
-      struct(hub("i").as("a"), hub("p").as("pa"), y("i").as("b"), y("p").as("pb")))
     grouped
-      .select(explode(when(size(col("ps")) <= maxPostings, pairsAll)
-        .otherwise(pairsStar)).as("c"))
-      .where(col("c.a") =!= col("c.b"))
-      .select(col("c.a").as("doc_a"), col("c.b").as("doc_b"),
-        (col("c.pb") - col("c.pa")).as("d"))
+      .select(GraftExpressions.group_pairs(col("ps"), maxPostings))
+      .where(col("a.i") =!= col("b.i"))
+      .select(col("a.i").as("doc_a"), col("b.i").as("doc_b"),
+        (col("b.p") - col("a.p")).as("d"))
       .distinct()
   }
 
@@ -207,21 +201,10 @@ object SpanDedup {
       .withColumn("te", filter(col("ms"), m => m("t")))
       .withColumn("tr", filter(col("ms"), m => !m("t")))
       .where(size(col("te")) > 0 && size(col("tr")) > 0)
-    val full = flatten(transform(col("te"), e =>
-      transform(col("tr"), r => struct(e("i").as("a"), e("p").as("pa"),
-        r("i").as("b"), r("p").as("pb")))))
-    val hub = element_at(col("tr"), 1)
-    val star = transform(col("te"), e =>
-      struct(e("i").as("a"), e("p").as("pa"),
-        hub("i").as("b"), hub("p").as("pb")))
     val cand = grouped
-      // long arithmetic: Int size() products wrap for giant degenerate
-      // buckets, which would disable the cap exactly when it matters
-      .select(explode(when(size(col("te")).cast("long") *
-        size(col("tr")).cast("long") <= maxBucket, full).otherwise(star))
-        .as("c"))
-      .select(col("c.a").as("doc_a"), col("c.b").as("doc_b"),
-        (col("c.pb") - col("c.pa")).as("d"))
+      .select(GraftExpressions.group_pairs(col("te"), col("tr"), maxBucket))
+      .select(col("a.i").as("doc_a"), col("b.i").as("doc_b"),
+        (col("b.p") - col("a.p")).as("d"))
       .distinct()
     extendDiagonals(cand,
       test.select(col(idCol).as("doc_a"),

@@ -1,8 +1,9 @@
 package graft.functions
 
 import graft.SparkSuite
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StringType}
 
 /** Bit-identity of the fused ANN expressions ([[KMeansAssignArgmin]],
   * [[PqEncode]], [[PqAdcScore]]) against the compositional Column forms
@@ -137,6 +138,127 @@ class FusedExprSpec extends SparkSuite {
     val longCodes = Seq((1L, Array(1L, 2L, 3L, 4L))).toDF("id", "codes")
     assert(longCodes.select(graft.ops.Srp.sketchExpr($"codes", pl))
       .collect().length == 1)
+  }
+
+  /** The hand-written in-group expansions [[GroupPairs]] replaced — the
+    * test-only reference. Self: indexed transform over slices, star around
+    * element 1 past the cap. Cross: nested transform, star onto rs[1] past
+    * the cap, the size product in long. */
+  private def selfPairsHof(xs: Column, cap: Long): Column = {
+    val all = flatten(transform(xs, (x, i) =>
+      transform(slice(xs, i + lit(2), size(xs)),
+        y => struct(x.as("a"), y.as("b")))))
+    val star = transform(slice(xs, lit(2), size(xs)),
+      y => struct(element_at(xs, 1).as("a"), y.as("b")))
+    when(size(xs) <= cap, all).otherwise(star)
+  }
+
+  private def crossPairsHof(ls: Column, rs: Column, cap: Long): Column = {
+    val full = flatten(transform(ls, l =>
+      transform(rs, r => struct(l.as("a"), r.as("b")))))
+    val star = transform(ls, l => struct(l.as("a"), element_at(rs, 1).as("b")))
+    when(size(ls).cast("long") * size(rs).cast("long") <= cap, full)
+      .otherwise(star)
+  }
+
+  /** Runs `body` compiled (whole-stage codegen) and interpreted. */
+  private def inBothCodegenModes(body: => Unit): Unit =
+    Seq(("true", "FALLBACK"), ("false", "NO_CODEGEN")).foreach { case (ws, fm) =>
+      val ws0 = spark.conf.get("spark.sql.codegen.wholeStage")
+      val fm0 = spark.conf.get("spark.sql.codegen.factoryMode")
+      spark.conf.set("spark.sql.codegen.wholeStage", ws)
+      spark.conf.set("spark.sql.codegen.factoryMode", fm)
+      try body
+      finally {
+        spark.conf.set("spark.sql.codegen.wholeStage", ws0)
+        spark.conf.set("spark.sql.codegen.factoryMode", fm0)
+      }
+    }
+
+  /** (cap, id, a, b) multisets of the native and the reference expansion
+    * over every cap must be equal. */
+  private def assertSamePairs(native: DataFrame, reference: DataFrame,
+                              caps: Seq[Long], gp: Long => Column,
+                              hof: Long => Column): Unit = {
+    val got = caps.map(c => native.select(lit(c).as("cap"), $"id", gp(c)))
+      .reduce(_.union(_))
+    val want = caps.map(c => reference
+        .select(lit(c).as("cap"), $"id", explode(hof(c)).as("p"))
+        .select($"cap", $"id", $"p.a".as("a"), $"p.b".as("b")))
+      .reduce(_.union(_))
+    assert(got.count() > 0)
+    assert(got.exceptAll(want).count() == 0 && want.exceptAll(got).count() == 0,
+      "group_pairs diverged from the hand-written expansion")
+  }
+
+  test("group_pairs == the hand-written HOF expansions, both forms and modes") {
+    // sizes 0, 1, 2 plus random sorted arrays drawn from 4 values (repeats
+    // guaranteed), a null element and a null array
+    val sizes = Seq(0, 1, 2) ++ Seq.fill(30)(rnd.nextInt(7))
+    val arrays: Seq[Option[Seq[Option[Long]]]] =
+      sizes.map(n => Some(Seq.fill(n)(rnd.nextInt(4).toLong).sorted.map(Some(_)))) :+
+        Some(Seq(None, Some(1L), Some(1L))) :+ None
+    val selfDf = arrays.zipWithIndex.map { case (a, i) => (i.toLong, a) }
+      .toDF("id", "xs").cache()
+    // cross: every side-size pair in 0..2, then random sizes; long × string
+    // elements show each side keeps its own type
+    val sidePairs = (for (l <- 0 to 2; r <- 0 to 2) yield (l, r)) ++
+      Seq.fill(20)((rnd.nextInt(5), rnd.nextInt(5)))
+    val crossDf = sidePairs.zipWithIndex.map { case ((l, r), i) =>
+      (i.toLong, Seq.fill(l)(rnd.nextInt(3).toLong).sorted,
+        Seq.fill(r)(s"r${rnd.nextInt(3)}").sorted)
+    }.toDF("id", "ls", "rs").cache()
+    try {
+      // caps 0, 1, size−1, size, size+1 for every size present, unbounded
+      val selfCaps = (-1L to 8L) :+ Long.MaxValue
+      val crossCaps = (-1L to 17L) :+ Long.MaxValue
+      inBothCodegenModes {
+        assertSamePairs(selfDf, selfDf, selfCaps,
+          c => GraftExpressions.group_pairs($"xs", c),
+          c => selfPairsHof($"xs", c))
+        // the reference star indexes rs[1], so it only covers nonempty rs;
+        // the native form must emit nothing for the empty-rs rows
+        assertSamePairs(crossDf, crossDf.where(size($"rs") > 0), crossCaps,
+          c => GraftExpressions.group_pairs($"ls", $"rs", c),
+          c => crossPairsHof($"ls", $"rs", c))
+      }
+      val selfOut = selfDf.select(GraftExpressions.group_pairs($"xs")).schema
+      assert(selfOut.map(f => f.name -> f.dataType) ==
+        Seq("a" -> LongType, "b" -> LongType))
+      val crossOut = crossDf
+        .select(GraftExpressions.group_pairs($"ls", $"rs", 4)).schema
+      assert(crossOut.map(f => f.name -> f.dataType) ==
+        Seq("a" -> LongType, "b" -> StringType))
+    } finally { selfDf.unpersist(); crossDf.unpersist(); () }
+  }
+
+  test("group_pairs cross cap compares the size product in long") {
+    // 70 000 × 70 000 = 4.9e9 pairs; in Int the product wraps to 605 032 704,
+    // under an Int.MaxValue cap, and would expand all of them
+    val big = spark.range(1).select(sequence(lit(1L), lit(70000L)).as("ls"),
+      sequence(lit(1L), lit(70000L)).as("rs"))
+    inBothCodegenModes {
+      val star = big
+        .select(GraftExpressions.group_pairs($"ls", $"rs", Int.MaxValue.toLong))
+        .agg(count(lit(1)), countDistinct($"a"), min($"b"), max($"b"))
+        .head()
+      assert(star.getLong(0) == 70000L && star.getLong(1) == 70000L,
+        "the star pairs each l once")
+      assert(star.getLong(2) == 1L && star.getLong(3) == 1L,
+        "every l pairs with rs[0]")
+    }
+  }
+
+  test("group_pairs rejects non-array inputs at analysis time") {
+    val df = Seq((1L, Seq(1L, 2L))).toDF("x", "xs")
+    Seq(GraftExpressions.group_pairs($"x"),
+      GraftExpressions.group_pairs($"xs", $"x", 4)).foreach { gp =>
+      val ex = intercept[org.apache.spark.sql.AnalysisException] {
+        df.select(gp).collect()
+      }
+      assert(ex.getMessage.contains("UNEXPECTED_INPUT_TYPE") &&
+        ex.getMessage.contains("\"ARRAY\""), ex.getMessage)
+    }
   }
 
   test("fused forms survive both codegen and interpreted evaluation") {

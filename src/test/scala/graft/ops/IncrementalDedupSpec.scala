@@ -103,6 +103,39 @@ class IncrementalDedupSpec extends SparkSuite {
       pairSet(plain.addAndFindPairs(last)))
   }
 
+  test("an append committed before the overlapped expansion scans keeps the pair set exact") {
+    // the pair expansion and the postings append run concurrently; force the
+    // append to COMMIT before the expansion's checkpoint scans, so the scan
+    // runs over a directory that already holds this batch's own postings.
+    // The probe's listing was taken before the append; were it refreshed,
+    // the member dedup would still have to keep own-batch postings from
+    // pairing as old or with themselves.
+    val docs = corpus()
+    val dir = Files.createTempDirectory("lsh-idx-pinned").toFile.getAbsolutePath
+    val idx = new MinHashIndex(spark, dir, "doc_id", "text")
+    idx.addAndFindPairs(docs.where(col("doc_id") <= 8))
+    // the append's job commit rewrites the generation's _SUCCESS marker last
+    val marker = new java.io.File(idx.currentGenerationPath.get, "_SUCCESS")
+    assert(marker.delete(), "first append must have committed a _SUCCESS")
+    @volatile var appendCommittedFirst = false
+    idx.beforeExpansion = () => {
+      val deadline = System.nanoTime() + 120L * 1000000000L
+      while (!marker.exists() && System.nanoTime() < deadline) Thread.sleep(20)
+      appendCommittedFirst = marker.exists()
+    }
+    val batch = docs.where(col("doc_id") > 8)
+    val got = pairSet(idx.addAndFindPairs(batch))
+    assert(appendCommittedFirst, "the append did not commit before the scan")
+    val fresh = batch.select(col("doc_id")).as[Long].collect().toSet
+    val want = pairSet(MinHashLsh.candidatePairs(docs, "doc_id", "text"))
+      .filter { case (a, b) => fresh(a) || fresh(b) }
+    assert(want.exists { case (a, b) => fresh(a) && fresh(b) } &&
+      want.exists { case (a, b) => !fresh(a) || !fresh(b) },
+      "the corpus must pair the batch with itself and with the index")
+    assert(got.forall { case (a, b) => a < b }, s"self or unordered pairs: $got")
+    assert(got == want, s"missing ${want -- got}, extra ${got -- want}")
+  }
+
   test("compaction retention expires postings by batch ord") {
     val docs = corpus()
     val dir = Files.createTempDirectory("lsh-idx-ttl").toFile.getAbsolutePath

@@ -66,6 +66,21 @@ class MmrSpec extends SparkSuite {
       "equal scores break to the lexicographically smaller string id")
   }
 
+  test("per-round checkpoints are released: persisted RDDs do not grow with n") {
+    val sc = spark.sparkContext
+    def leftBehind(n: Int): Int = {
+      val before = sc.getPersistentRDDs.keySet
+      val out = Mmr.rerank(cands, "query_id", "cand_id", "rel", "vec",
+        n = n, lam = 0.7, lamComp = 0.3)
+      assert(out.count() == n)
+      (sc.getPersistentRDDs.keySet -- before).size
+    }
+    val one = leftBehind(1)
+    assert(one <= 1, s"n=1 left $one persisted RDDs behind")
+    assert(leftBehind(3) == one,
+      "every round's checkpoint must be freed, not left to ContextCleaner")
+  }
+
   test("selection stops cleanly when candidates run out") {
     val one = Seq((0L, 5L, 0.8, Seq(1.0, 0.0)))
       .toDF("query_id", "cand_id", "rel", "vec")

@@ -140,6 +140,14 @@ class PlanAuditSpec extends SparkSuite {
       assert(!p.contains("CartesianProduct") &&
         !p.contains("BroadcastNestedLoopJoin"), s"$q plan has an all-pairs join")
     }
+    // in-group expansion is the one native generator, never a hand-written
+    // nested lambda tree
+    Seq("q_minhash_lsh", "q_simhash_dedup", "q_decontaminate_near").foreach { q =>
+      val p = plan(q)
+      assert(p.contains("group_pairs"), s"$q must expand pairs with group_pairs:\n$p")
+      assert(!p.contains("flatten(transform("),
+        s"$q has a nested-HOF pair expansion:\n$p")
+    }
   }
 
   test("incremental-index probe prunes the postings scan by partition") {
