@@ -1,5 +1,7 @@
 package graft
 
+import scala.collection.concurrent.TrieMap
+
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
 
@@ -24,39 +26,41 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkList
   */
 object Plans {
 
-  private final class JobTimer extends SparkListener {
+  /** Per-job wall time, stage/task counts and shuffle volume. A stage
+    * belongs to the job whose `SparkListenerJobStart.stageIds` first named
+    * it — exact when jobs overlap (`Fs.inParallel`), and a stage a later
+    * job reuses (and skips) stays with the job that ran it. */
+  private[graft] final class JobTimer extends SparkListener {
     case class JobRec(id: Int, desc: String, started: Long,
                       var ended: Long = -1L,
                       var stages: Int = 0, var tasks: Int = 0,
                       var shuffleReadMb: Double = 0.0,
                       var shuffleWriteMb: Double = 0.0)
     val jobs = new java.util.concurrent.ConcurrentHashMap[Int, JobRec]()
+    private val stageJob = TrieMap.empty[Int, Int]
     override def onJobStart(js: SparkListenerJobStart): Unit = {
       val desc = Option(js.properties)
         .flatMap(p => Option(p.getProperty("spark.job.description")))
         .getOrElse("")
       jobs.put(js.jobId, JobRec(js.jobId, desc, js.time))
+      js.stageIds.foreach(stageJob.putIfAbsent(_, js.jobId))
     }
     override def onJobEnd(je: SparkListenerJobEnd): Unit =
       Option(jobs.get(je.jobId)).foreach(_.ended = je.time)
-    override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
-      // attribute the stage to the job that owns it via the stage's
-      // jobIds is not exposed here; approximate by most recent open job
-      val open = jobs.values().toArray(Array.empty[JobRec])
-        .filter(_.ended < 0)
-      if (open.nonEmpty) {
-        val j = open.maxBy(_.id)
-        j.stages += 1
-        j.tasks += sc.stageInfo.numTasks
-        j.shuffleReadMb +=
-          sc.stageInfo.taskMetrics.shuffleReadMetrics.totalBytesRead / 1e6
-        j.shuffleWriteMb +=
-          sc.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten / 1e6
-      }
-    }
+    override def onStageCompleted(sc: SparkListenerStageCompleted): Unit =
+      stageJob.get(sc.stageInfo.stageId).flatMap(id => Option(jobs.get(id)))
+        .foreach { j =>
+          j.stages += 1
+          j.tasks += sc.stageInfo.numTasks
+          Option(sc.stageInfo.taskMetrics).foreach { m =>
+            j.shuffleReadMb += m.shuffleReadMetrics.totalBytesRead / 1e6
+            j.shuffleWriteMb += m.shuffleWriteMetrics.bytesWritten / 1e6
+          }
+        }
     def drainReport(): String = {
       val rs = jobs.values().toArray(Array.empty[JobRec]).sortBy(_.id)
       jobs.clear()
+      stageJob.clear()
       rs.map { r =>
         val dur = if (r.ended < 0) -1.0 else (r.ended - r.started) / 1e3
         f"  job ${r.id}%3d ${dur}%7.2fs stages=${r.stages}%2d " +

@@ -2,7 +2,7 @@ package graft.ops
 
 import java.io.File
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Connected components over a near-duplicate pair list — the step between
@@ -15,16 +15,18 @@ import org.apache.spark.sql.functions._
   * pair graph.
   *
   * Scale design: alternating large-star/small-star (Kiveris et al.,
-  * "Connected Components in MapReduce and Beyond", ACM SoCC 2014). Each
-  * round is two shuffle stages keyed on the node id (a groupBy-min and a
-  * co-partitioned join); the edge set only ever shrinks toward disjoint
-  * min-rooted stars, and convergence is O(log² n) rounds on ANY graph —
+  * "Connected Components in MapReduce and Beyond", ACM SoCC 2014). A round
+  * is ONE plan — large-star then small-star, each a groupBy-min keyed on
+  * the node id joined back to the edges — materialized once, then one
+  * per-node aggregate over its edges that is both the labelling and the
+  * exit check: the loop stops on the first round whose edges form a
+  * min-rooted star forest. Convergence is O(log² n) rounds on ANY graph —
   * a chained cluster of length L costs O(log L) rounds where naive label
-  * propagation needs L. No neighbor list is ever collected: a 100M-member
-  * boilerplate cluster contributes one min per partition to its hub's
-  * aggregate, never an array. The driver loop is bounded (maxRounds) and
-  * each round's result is localCheckpointed, so plan depth stays O(1)
-  * instead of growing with rounds.
+  * propagation needs L; cliques and star forests close in one. No neighbor
+  * list is ever collected: a 100M-member boilerplate cluster contributes
+  * one min per partition to its hub's aggregate, never an array. The
+  * driver loop is bounded (maxRounds) and every materialization truncates
+  * lineage, so plan depth stays O(1) instead of growing with rounds.
   */
 object Components {
 
@@ -43,12 +45,12 @@ object Components {
     *
     * Lineage truncation between rounds: with a session checkpoint dir
     * configured (the real-cluster deployment shape), each round's edge set
-    * is written to `<checkpointDir>/graft-cc/<uuid>/rN` and read back —
-    * reliable (survives executor loss, where localCheckpoint blocks die
-    * with their executor), computed once (Dataset.checkpoint would run the
-    * plan twice), and BOUNDED: a round's file set is deleted as soon as no
-    * later round can read it, so a call holds at most two edge-set copies
-    * on disk and leaves exactly one (backing the returned frame). Lazy
+    * and labelling are written to `<checkpointDir>/graft-cc/<uuid>/rN` and
+    * read back — reliable (survives executor loss, where localCheckpoint
+    * blocks die with their executor), computed once (Dataset.checkpoint
+    * would run the plan twice), and BOUNDED: a file set is deleted as soon
+    * as nothing later reads it, so a call holds at most two copies on disk
+    * and leaves exactly one (backing the returned frame). Lazy
     * consumers clean the `graft-cc/` parent once results are consumed;
     * eager consumers use [[connectedThenClean]], which leaves nothing.
     * Without a checkpoint dir: localCheckpoint (local mode, tests). */
@@ -85,102 +87,94 @@ object Components {
     val spark = pairs.sparkSession
     val ckptBase = spark.sparkContext.getCheckpointDir.map(d =>
       s"$d/graft-cc/${java.util.UUID.randomUUID()}")
-    def rm(p: String): Unit = rmPath(spark, p)
     var written = List.empty[String] // newest first
     var seq = 0
     def materialize(df: DataFrame): DataFrame = ckptBase match {
       case Some(base) =>
         val p = s"$base/r$seq"; seq += 1
         df.write.parquet(p)
-        // each round reads only the immediately previous materialization
-        // (and its signature) — anything older is unreachable
         written = p :: written
-        written.drop(2).foreach(rm)
-        written = written.take(2)
         spark.read.parquet(p)
       case None => df.localCheckpoint()
     }
-
-    var e = materialize(pairs.select(col(aCol).as("a"), col(bCol).as("b"))
-      .where(col("a") =!= col("b"))
-      .distinct())
-    val empty = e.select(col("a").as("id"), col("a").as("component")).limit(0)
-
-    // Probabilistic edge-set signature: (count, sum of pair hashes, xor of
-    // pair hashes). Two independent 64-bit digests alongside the count make
-    // a false "unchanged" verdict vanishingly unlikely (~2⁻¹²⁸ per round),
-    // at the cost of one cheap aggregate instead of an except() shuffle.
-    // The sum runs in decimal(38,0) — long sums of 64-bit hashes overflow
-    // under ANSI arithmetic.
-    def sig(df: DataFrame): (Long, BigDecimal, Long) = {
-      val r = df.agg(
-        count(lit(1)),
-        coalesce(sum(xxhash64(col("a"), col("b")).cast("decimal(38,0)")),
-          lit(0).cast("decimal(38,0)")),
-        coalesce(expr("bit_xor(xxhash64(a, b))"), lit(0L))).head()
-      (r.getLong(0), BigDecimal(r.getDecimal(1)), r.getLong(2))
+    // each materialization reads only the one before it, so a call holds
+    // at most two on disk and keeps only the returned frame's
+    def delete(pick: List[String] => List[String]): Unit = {
+      val gone = pick(written)
+      gone.foreach(rmPath(spark, _))
+      written = written.diff(gone)
     }
 
     // large-star: every node u links its LARGER neighbors to the smallest
     // node it can see (min of u and u's neighbors) — long chains contract
-    // geometrically because minima hop two edges per round.
+    // geometrically because minima hop two edges per round. Every output
+    // edge points down (b < a).
     def largeStar(cur: DataFrame): DataFrame = {
       val sym = cur.union(cur.select(col("b").as("a"), col("a").as("b")))
       val mins = sym.groupBy("a").agg(min("b").as("mn"))
       sym.join(mins, "a")
         .where(col("b") > col("a"))
         .select(col("b").as("a"), least(col("a"), col("mn")).as("b"))
+    }
+
+    // small-star over down-pointing edges: every node u re-points its
+    // SMALLER neighbors (and itself) at the smallest of them — flattens
+    // local trees into stars. Output edges point down too.
+    def smallStar(down: DataFrame): DataFrame = {
+      val mins = down.groupBy("a").agg(min("b").as("mn"))
+      down.join(mins, "a")
+        .select(col("b").as("a"), col("mn").as("b"))
+        .union(mins)
         .where(col("a") =!= col("b"))
         .distinct()
     }
 
-    // small-star: every node u re-points its SMALLER neighbors (and itself)
-    // at the smallest of them — flattens local trees into stars.
-    def smallStar(cur: DataFrame): DataFrame = {
-      val dir = cur.select(greatest(col("a"), col("b")).as("u"),
-        least(col("a"), col("b")).as("v"))
-      val mins = dir.groupBy("u").agg(min("v").as("mn"))
-      dir.join(mins, "u")
-        .select(col("v").as("a"), col("mn").as("b"))
-        .union(mins.select(col("u").as("a"), col("mn").as("b")))
-        .where(col("a") =!= col("b"))
-        .distinct()
-    }
+    // Down-pointing distinct edges form a min-rooted star forest — the
+    // answer, and a fixed point of both operations — exactly when no node
+    // has two out-edges, or an out-edge and an in-edge. One aggregate per
+    // node yields both that check (observed while the labelling is
+    // materialized, so it costs no job of its own) and the labelling:
+    // a node's only target is its root, a node without one is a root.
+    def labelling(down: DataFrame, bad: Observation): DataFrame =
+      down.select(col("a").as("id"), col("b").as("t"))
+        .union(down.select(col("b").as("id"),
+          lit(null).cast(down.schema("b").dataType).as("t")))
+        .groupBy("id")
+        .agg(count("t").as("out"), (count(lit(1)) - count("t")).as("in"),
+          min("t").as("t"))
+        .observe(bad, count(when(col("out") > 1 ||
+          (col("out") > 0 && col("in") > 0), 1)).as("bad"))
+        .select(col("id"), coalesce(col("t"), col("id")).as("component"))
 
-    // once the loop (or an early return) settles on a final frame, only
-    // its own files remain on disk
-    def retainOnlyNewest(): Unit = {
-      written.drop(1).foreach(rm)
-      written = written.take(1)
-    }
+    // one row per undirected edge, larger id first
+    val edges = Observation()
+    val e0 = materialize(pairs
+      .select(greatest(col(aCol), col(bCol)).as("a"),
+        least(col(aCol), col(bCol)).as("b"))
+      .where(col("a") =!= col("b"))
+      .distinct()
+      .observe(edges, count(lit(1)).as("n")))
 
-    var rounds = 0
-    // the first signature doubles as the emptiness check — no separate
-    // isEmpty job
-    var prev = sig(e)
-    if (prev._1 == 0) { retainOnlyNewest(); return (empty, 0, ckptBase) }
-    var done = false
-    while (!done) {
-      rounds += 1
-      require(rounds <= maxRounds,
+    @annotation.tailrec
+    def loop(e: DataFrame, rounds: Int): (DataFrame, Int, Option[String]) = {
+      require(rounds < maxRounds,
         s"connected components did not converge in $maxRounds rounds")
-      val l = materialize(largeStar(e))
-      val s = materialize(smallStar(l))
-      val (sl, ss) = (sig(l), sig(s))
-      // converged only when BOTH operations fix the edge set — the paper's
-      // fixed points (min-rooted disjoint stars) fix each individually, so
-      // requiring both rules out a cycle of the composed map.
-      done = sl == prev && ss == prev
-      prev = ss
-      e = s
+      val s = materialize(smallStar(largeStar(e)))
+      delete(_.drop(1)) // e
+      val bad = Observation()
+      val labels = materialize(labelling(s, bad))
+      if (bad.get("bad") == 0L) {
+        delete(_.drop(1)) // s
+        (labels, rounds + 1, ckptBase)
+      } else {
+        delete(_.take(1)) // labels
+        loop(s, rounds + 1)
+      }
     }
 
-    // fixed point = stars: every edge is (member, root); roots appear only
-    // on the b side and label themselves.
-    retainOnlyNewest()
-    val members = e.select(col("a").as("id"), col("b").as("component"))
-    val roots = e.select(col("b").as("id"), col("b").as("component")).distinct()
-    (members.unionByName(roots).distinct(), rounds, ckptBase)
+    if (edges.get("n") == 0L)
+      (e0.select(col("a").as("id"), col("b").as("component")), 0, ckptBase)
+    else loop(e0, 0)
   }
 
   /** Near-duplicate clusters of `docs`: MinHash+LSH candidate pairs

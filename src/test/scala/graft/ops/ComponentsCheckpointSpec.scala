@@ -20,6 +20,13 @@ class ComponentsCheckpointSpec extends SparkSuite {
       val got = Components.connected(pairs, "doc_a", "doc_b")
         .as[(Long, Long)].collect().toMap
       assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 10L -> 10L, 11L -> 10L))
+      // a path needs several rounds, each discarding a non-final labelling
+      val (path, rounds) = Components.connectedWithRounds(
+        (0L until 63L).map(i => (i, i + 1)).toDF("doc_a", "doc_b"),
+        "doc_a", "doc_b")
+      assert(rounds > 1)
+      assert(path.as[(Long, Long)].collect().toMap ==
+        (0L until 64L).map(_ -> 0L).toMap)
       // reliable materializations landed under the configured dir, and the
       // footprint is BOUNDED: after the call, exactly the final round's
       // file set remains (earlier rounds deleted as they became unreachable)

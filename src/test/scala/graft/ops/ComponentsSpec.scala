@@ -1,8 +1,9 @@
 package graft.ops
 
 import graft.SparkSuite
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.LongType
 
 class ComponentsSpec extends SparkSuite {
   import spark.implicits._
@@ -29,8 +30,19 @@ class ComponentsSpec extends SparkSuite {
   private def run(pairs: Seq[(Long, Long)]): (Map[Long, Long], Int) = {
     val df = pairs.toDF("doc_a", "doc_b")
     val (cc, rounds) = Components.connectedWithRounds(df, "doc_a", "doc_b")
-    (cc.as[(Long, Long)].collect().toMap, rounds)
+    val rows = cc.as[(Long, Long)].collect()
+    assert(rows.length == rows.map(_._1).distinct.length,
+      "a node carries more than one label")
+    (rows.toMap, rounds)
   }
+
+  /** `k` disjoint cliques of `size` nodes each. */
+  private def cliques(k: Int, size: Int): Seq[(Long, Long)] =
+    for {
+      c <- 0 until k
+      i <- 0 until size
+      j <- i + 1 until size
+    } yield ((c * size + i).toLong, (c * size + j).toLong)
 
   test("random graphs match driver-side union-find") {
     val rnd = new scala.util.Random(42)
@@ -62,9 +74,54 @@ class ComponentsSpec extends SparkSuite {
 
   test("empty pair set yields an empty, well-typed result") {
     val df = Seq.empty[(Long, Long)].toDF("doc_a", "doc_b")
-    val cc = Components.connected(df, "doc_a", "doc_b")
-    assert(cc.columns.toSeq == Seq("id", "component"))
+    val (cc, rounds) = Components.connectedWithRounds(df, "doc_a", "doc_b")
+    assert(cc.schema.map(f => f.name -> f.dataType) ==
+      Seq("id" -> LongType, "component" -> LongType))
     assert(cc.isEmpty)
+    assert(rounds == 0)
+  }
+
+  test("cliques and an input that is already a star forest close in one round") {
+    val (got, rounds) = run(cliques(30, 5))
+    assert(got == (0L until 150L).map(i => i -> (i / 5 * 5)).toMap)
+    assert(rounds == 1, s"cliques took $rounds rounds")
+    // min-rooted stars, given in both orientations
+    val stars = Seq((1L, 2L), (3L, 1L), (1L, 4L), (10L, 11L), (12L, 10L))
+    val (got2, rounds2) = run(stars)
+    assert(got2 == bruteForce(stars))
+    assert(rounds2 == 1, s"a star forest took $rounds2 rounds")
+  }
+
+  test("a call over 30 five-cliques runs at most 14 Spark jobs") {
+    val group = "components-jobs"
+    val sentinel = "components-jobs-end"
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+    @volatile var sawSentinel = false
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        Option(js.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some(`group`) => jobs.add(js.jobId)
+          case Some(`sentinel`) => sawSentinel = true
+          case _ =>
+        }
+    }
+    val df = cliques(30, 5).toDF("doc_a", "doc_b")
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "connected over 30 five-cliques")
+      try Components.connected(df, "doc_a", "doc_b").collect()
+      finally sc.clearJobGroup()
+      // listener events arrive in order: once the sentinel job's start is
+      // seen, every job of the call has been counted
+      sc.setJobGroup(sentinel, "listener barrier")
+      try spark.range(1).collect()
+      finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30e9.toLong
+      while (!sawSentinel && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(sawSentinel, "listener never saw the barrier job")
+    } finally sc.removeSparkListener(listener)
+    assert(jobs.size <= 14, s"${jobs.size} jobs for one call")
   }
 
   test("clusters chains LSH pairs transitively and keepBest keeps one per cluster") {
