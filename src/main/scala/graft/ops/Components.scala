@@ -53,7 +53,9 @@ object Components {
     * and leaves exactly one (backing the returned frame). Lazy
     * consumers clean the `graft-cc/` parent once results are consumed;
     * eager consumers use [[connectedThenClean]], which leaves nothing.
-    * Without a checkpoint dir: localCheckpoint (local mode, tests). */
+    * Without a checkpoint dir: localCheckpoint (local mode, tests), each
+    * checkpoint released as soon as nothing later reads it, so a call
+    * leaves one persisted RDD. */
   def connectedWithRounds(pairs: DataFrame, aCol: String, bCol: String,
                           maxRounds: Int = 50): (DataFrame, Int) = {
     val (df, rounds, _) = connectedImpl(pairs, aCol, bCol, maxRounds)
@@ -87,21 +89,28 @@ object Components {
     val spark = pairs.sparkSession
     val ckptBase = spark.sparkContext.getCheckpointDir.map(d =>
       s"$d/graft-cc/${java.util.UUID.randomUUID()}")
-    var written = List.empty[String] // newest first
+    // newest first: each materialized frame, with its files on the
+    // reliable path
+    type Held = (DataFrame, Option[String])
+    var written = List.empty[Held]
     var seq = 0
-    def materialize(df: DataFrame): DataFrame = ckptBase match {
-      case Some(base) =>
-        val p = s"$base/r$seq"; seq += 1
-        df.write.parquet(p)
-        written = p :: written
-        spark.read.parquet(p)
-      case None => df.localCheckpoint()
+    def materialize(df: DataFrame): DataFrame = {
+      val (m, p) = ckptBase match {
+        case Some(base) =>
+          val p = s"$base/r$seq"; seq += 1
+          df.write.parquet(p)
+          (spark.read.parquet(p), Some(p))
+        case None => (df.localCheckpoint(), None)
+      }
+      written = (m, p) :: written
+      m
     }
     // each materialization reads only the one before it, so a call holds
-    // at most two on disk and keeps only the returned frame's
-    def delete(pick: List[String] => List[String]): Unit = {
+    // at most two and keeps only the returned frame's: files are deleted,
+    // local checkpoints released (Mmr.release)
+    def delete(pick: List[Held] => List[Held]): Unit = {
       val gone = pick(written)
-      gone.foreach(rmPath(spark, _))
+      gone.foreach { case (m, p) => p.fold(Mmr.release(m))(rmPath(spark, _)) }
       written = written.diff(gone)
     }
 

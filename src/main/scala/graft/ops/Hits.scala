@@ -1,7 +1,13 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import scala.collection.mutable
+
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField}
+
+import LinkGraph.{Node, Slice}
 
 /** HITS hubs-and-authorities (Kleinberg, JACM 1999) over a link graph —
   * the complement of [[PageRank]] in web-corpus curation: PageRank ranks
@@ -20,12 +26,16 @@ import org.apache.spark.sql.functions._
   * units) — safe to in-degrees of ~9·10⁶, far beyond any host graph's
   * per-node degree after the [[UrlOps.domainCap]] stage.
   *
-  * '''Scale shape.''' Score tables are NODE-sized (hosts). One round =
-  * two joins of node scores onto the edge list (each keyed by one edge
-  * endpoint — co-partitionable with the edge list) + two map-side-combined
-  * sums + two one-row total aggregates broadcast back into the
-  * normalization. Iteration count is a fixed constant; per-round lineage
-  * is truncated the same way [[PageRank.ranks]] does it.
+  * '''Scale shape.''' Score vectors are NODE-sized (hosts) and live
+  * co-partitioned with the edge list ([[LinkGraph]]): the distinct edges
+  * are shuffled once by source and once by target, so joining a score
+  * vector onto its edges is narrow and each half-round is ONE shuffle of
+  * map-side-combined sums to the other endpoint. The half-round's L1
+  * total rides inside that shuffle: every map task sends its partial sum
+  * to every reducer, so no partition waits on the driver or on a
+  * single-partition exchange. A call runs one job for the overflow check
+  * (which also writes both edge shuffles) and one local-checkpoint job
+  * for all rounds; iteration count is a fixed constant.
   *
   * Reference analog: the load manager's two-sided ranking of brokers vs
   * bundles — each side scored by the other side's scores
@@ -63,20 +73,14 @@ object Hits {
     require(iters >= 1 && iters <= 50, s"bad iteration count $iters")
     // scale² must not overflow before the degree bound below can apply
     require(scale >= 1L && scale <= 1000000000L, s"bad scale $scale")
-    val e = edges.select(col(srcCol).cast("long").as("src"),
-      col(dstCol).cast("long").as("dst")).distinct().persist()
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct().persist()
+    val g = new LinkGraph(edges, srcCol, dstCol)
     // ENFORCE the scaladoc's overflow bound instead of trusting it: the
     // normalization multiplies a raw edge-sum (≤ maxDegree·scale) by
     // `scale`, so maxDegree·scale² must stay under 2⁶³ or a pathological
-    // pre-domainCap graph silently wraps. One map-side-combined degree
-    // aggregate + one-row max — cheap next to `iters` join rounds.
+    // pre-domainCap graph silently wraps. The check is the call's first
+    // job, and it also writes both edge shuffles the rounds read.
     val degBound = Long.MaxValue / scale / scale
-    val maxDeg = e.select(col("dst").as("n"))
-      .union(e.select(col("src").as("n")))
-      .groupBy(col("n")).agg(count(lit(1)).as("deg"))
-      .agg(coalesce(max(col("deg")), lit(0L)).as("m")).head.getLong(0)
+    val (maxDeg, n) = g.degreeAndCount()
     require(maxDeg < degBound,
       s"HITS overflow: max node degree $maxDeg * scale^2 ($scale^2) would " +
         s"exceed 2^63; lower `scale` or cap degrees (UrlOps.domainCap) first")
@@ -85,61 +89,48 @@ object Hits {
     // unit), or at the previous snapshot's hub vector with delta nodes
     // at the uniform share (see [[scoresWarm]])
     var hub = init match {
-      case None => nodes.select(col("node"), lit(scale).as("hub"))
-      case Some(prev) =>
-        val n = nodes.count()
-        nodes.join(
-            prev.select(col("node"), col("hub").cast("long").as("__ph")),
-            Seq("node"), "left")
-          .select(col("node"),
-            coalesce(col("__ph"), lit(scale / math.max(n, 1L))).as("hub"))
-          .localCheckpoint(true)
+      case None => g.uniform(scale)
+      case Some(prev) => g.seeded(prev, "hub", scale / math.max(n, 1L))
     }
-    // the L1 total of each half-round is attached INLINE as a
-    // window-over-() on the raw-sum frame (node-sized, post-aggregation)
-    // instead of a separate one-row aggregate broadcast back: the
-    // broadcast build was its own driver job per half-round, and auth
-    // needed its own checkpoint to keep those builds from re-deriving it
-    // — 4 jobs per round where the data dependencies need ONE. The
-    // single-partition window exchange carries only the aggregated
-    // (node, raw) rows, same bytes the old final-agg task read as
-    // partials. Arithmetic unchanged: tot = sum(raw) over the same rows.
-    val wAll = org.apache.spark.sql.expressions.Window
-      .partitionBy(Seq.empty[org.apache.spark.sql.Column]: _*)
-    // a lazy placeholder (no job) so the output join below is well-defined
-    // for any round count; every round replaces it
-    var auth = nodes.select(col("node"), lit(0L).as("auth"))
-    for (i <- 1 to iters) {
-      // auth update: sum incoming hub mass, L1-normalize in fixed point.
-      // auth stays LAZY inside the round — with the totals inline the hub
-      // checkpoint job is its only per-round consumer, so it is computed
-      // exactly once per round. The FINAL round's auth is checkpointed
-      // (one extra job per call, not per round) so the output join below
-      // reads two checkpoints — the O(1)-final-plan contract PlanAuditSpec
-      // pins.
-      val aRaw = e.join(hub.withColumnRenamed("node", "src"), "src")
-        .groupBy(col("dst").as("node")).agg(sum(col("hub")).as("raw"))
-        .withColumn("tot", sum(col("raw")).over(wAll))
-      auth = nodes.join(aRaw, Seq("node"), "left")
-        .select(col("node"),
-          coalesce(expr(s"(raw * $scale) div tot"), lit(0L)).as("auth"))
-      if (i == iters) auth = auth.localCheckpoint(true)
-      // hub update: sum outgoing authority mass, normalize likewise
-      val hRaw = e.join(auth.withColumnRenamed("node", "dst"), "dst")
-        .groupBy(col("src").as("node")).agg(sum(col("auth")).as("raw"))
-        .withColumn("tot", sum(col("raw")).over(wAll))
-      hub = nodes.join(hRaw, Seq("node"), "left")
-        .select(col("node"),
-          coalesce(expr(s"(raw * $scale) div tot"), lit(0L)).as("hub"))
-        .localCheckpoint(true)
+    var auth = hub // every round replaces it (iters ≥ 1)
+    for (_ <- 1 to iters) {
+      auth = normalized(g, g.out, hub, scale) // incoming hub mass
+      hub = normalized(g, g.in, auth, scale) // outgoing authority mass
     }
-    // both sides are node-sized checkpoints (no stats ⇒ SMJ by default);
-    // broadcasting one keeps the final pass shuffle-free
-    val out = hub.join(broadcast(auth), "node")
-      .select(col("node"), col("hub"), col("auth"))
-    e.unpersist(); nodes.unpersist()
-    out
+    // one job for every round: the graph's nodes with both final slices
+    g.checkpointed(
+      g.out.zipPartitions(g.in, hub, auth) { (o, i, h, a) =>
+        val (hs, as) = (h.next(), a.next())
+        LinkGraph.owned(o, i).filter(_ != null).map(v => Row(v, hs(v), as(v)))
+      },
+      StructField("hub", LongType, nullable = false),
+      StructField("auth", LongType, nullable = false))
   }
+
+  /** One half-round: each edge of `adj` (owned endpoint, other endpoint)
+    * carries its owner's `from` score to the other endpoint; every node
+    * that receives any is L1-normalized in fixed point,
+    * `(raw · scale) div tot`, over the total of ALL sums (those sent to
+    * a null endpoint included); the rest score 0. */
+  private def normalized(g: LinkGraph, adj: RDD[(Node, Node)],
+                         from: RDD[Slice], scale: Long): RDD[Slice] =
+    g.sumToOwners(adj.zipPartitions(from) { (es, f) =>
+      val x = f.next()
+      val sums = mutable.HashMap.empty[Long, Long]
+      var partial = 0L
+      es.foreach { case (own, other) =>
+        if (own != null) { // a null endpoint never joins its score
+          val v = x(own)
+          partial = Math.addExact(partial, v)
+          if (other != null)
+            sums(other) = Math.addExact(sums.getOrElse(other, 0L), v)
+        }
+      }
+      Iterator((sums, partial))
+    }).map { case (raw, tot) =>
+      Slice(raw.map { case (v, r) => v -> Math.multiplyExact(r, scale) / tot },
+        default = 0L)
+    }
 
   /** Top-k authorities (auth desc, node asc — deterministic), hub score
     * carried: the content-page head a curation run up-weights. */

@@ -105,7 +105,7 @@ object Mmr {
   /** Frees a local checkpoint's blocks. `Dataset.unpersist` frees nothing
     * here — a checkpoint is not a CacheManager entry — so unpersist the
     * checkpointed RDD under the frame's LogicalRDD leaf itself. */
-  private def release(checkpointed: DataFrame): Unit =
+  private[ops] def release(checkpointed: DataFrame): Unit =
     checkpointed.queryExecution.analyzed
       .collect { case r: LogicalRDD => r.rdd.unpersist(blocking = false) }
 }

@@ -1,7 +1,12 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import scala.collection.mutable
+
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField}
+
+import LinkGraph.Slice
 
 /** Damped PageRank over a link graph (Brin & Page 1998) — the host-level
   * reputation signal web-corpus curation uses alongside quality rules
@@ -17,13 +22,18 @@ import org.apache.spark.sql.functions._
   * partition-order addition alone). Floor losses are deterministic and
   * identical in both engines.
   *
-  * '''Scale shape.''' The rank table is NODE-sized (hosts, not
-  * documents — orders of magnitude smaller than the corpus). Each
-  * iteration costs one join of ranks onto edges (both keyed by `src` —
-  * co-partitionable, and outdeg is a node-sized broadcast candidate) and
-  * one map-side-combined sum by `dst`; the dangling mass is a one-row
-  * aggregate broadcast back. Nothing in the loop touches document
-  * payloads, and iteration count is a fixed constant.
+  * '''Scale shape.''' The rank vector is NODE-sized (hosts, not
+  * documents — orders of magnitude smaller than the corpus) and lives
+  * co-partitioned with the edge list ([[LinkGraph]]): the distinct edges
+  * are shuffled once by source and once by target, so joining ranks onto
+  * out-edges is narrow and each iteration is ONE shuffle of
+  * map-side-combined contributions to their targets. The dangling mass
+  * rides inside that shuffle: every map task sends its partial to every
+  * reducer, so no partition waits on the driver or on a single-partition
+  * exchange. A call runs one job for the node count (which also writes
+  * both edge shuffles) and one local-checkpoint job for all rounds; the
+  * warm face adds one job for its seed's total. Nothing in the loop
+  * touches document payloads, and iteration count is a fixed constant.
   *
   * Reference analog: the broker's load manager ranks brokers/bundles by
   * iteratively-updated load scores to steer placement
@@ -76,37 +86,24 @@ object PageRank {
     // the headroom instead of documenting it (the HITS discipline)
     require(scale >= 1L && scale <= Long.MaxValue / 170L,
       s"PageRank overflow: 85*2*scale must stay under 2^63, got $scale")
-    // edges/nodes/outdeg are reused every round — materialize once, or
-    // the iterative lineage re-derives them per reference and the final
-    // plan grows exponentially with the iteration count
-    val e = edges.select(col(srcCol).cast("long").as("src"),
-      col(dstCol).cast("long").as("dst")).distinct().persist()
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct().persist()
-    // n is a scalar COUNT over the node table — the one bounded driver
-    // value the algorithm needs (it parameterizes the integer formulas)
-    val n = nodes.count()
+    val g = new LinkGraph(edges, srcCol, dstCol)
+    // n is the scalar node count — the one bounded driver value the
+    // algorithm needs (it parameterizes the integer formulas); its job
+    // also writes both edge shuffles the rounds read
+    val (_, n) = g.degreeAndCount()
     require(n > 0, "PageRank: empty graph")
-    val outdeg = e.groupBy("src").agg(count(lit(1)).as("outdeg")).persist()
     val base = 15L * scale / (100L * n)
     // start vector: uniform scale/n, or the previous snapshot's ranks
-    // with delta nodes (absent from init) at the uniform value — a
-    // node-sized left join, evaluated once before the loop. Delta nodes
-    // push the total above scale; renormalize it back down so the
+    // with delta nodes (absent from init) at the uniform value. Delta
+    // nodes push the total above scale; renormalize it back down so the
     // iteration starts at fixed-point mass (see [[ranksWarm]]).
     var rank = init match {
-      case None => nodes.select(col("node"), lit(scale / n).as("rank"))
+      case None => g.uniform(scale / n)
       case Some(prev) =>
-        val raw = nodes.join(
-            prev.select(col("node"), col("rank").cast("long").as("__pr")),
-            Seq("node"), "left")
-          .select(col("node"),
-            coalesce(col("__pr"), lit(scale / n)).as("rank"))
-          .localCheckpoint(true)
-        // one-row total — the bounded driver value that decides (and
+        val raw = g.seeded(prev, "rank", scale / n)
+        // the total — the bounded driver value that decides (and
         // parameterizes) the renormalization
-        val total = raw.agg(coalesce(sum(col("rank")), lit(0L))).head()
-          .getLong(0)
+        val total = g.total(raw)
         if (total <= scale) raw
         else {
           require(scale <= 2100000000L,
@@ -117,45 +114,44 @@ object PageRank {
           require(total <= 2L * scale,
             s"PageRank warm seed mass $total exceeds 2*scale — not a " +
               "snapshot+delta vector")
-          raw.select(col("node"),
-              expr(s"(rank * ${scale}L) div ${total}L").as("rank"))
-            .localCheckpoint(true)
+          def renorm(r: Long) = Math.multiplyExact(r, scale) / total
+          raw.map(s => Slice(s.vals.map { case (v, r) => v -> renorm(r) },
+            renorm(s.default)))
         }
     }
-    // dangling mass rides INLINE as a window-over-() instead of a one-row
-    // aggregate broadcast back: the broadcast build was its own driver job
-    // per round (2 jobs/round where the dependencies need one). The rank
-    // frame is node-COMPLETE by construction (init selects from `nodes`,
-    // each round rebuilds every row), so the next vector is built from the
-    // checkpointed rank itself: a left join marks out-edge-less nodes and
-    // the window sums their rank over the (node-sized, post-checkpoint)
-    // frame. Arithmetic unchanged — same dang value, same integer formula.
-    val wAll = org.apache.spark.sql.expressions.Window
-      .partitionBy(Seq.empty[org.apache.spark.sql.Column]: _*)
+    // a round is one shuffle: every edge sends `rank div outdeg` to its
+    // target's owner, and every partition sends its dangling mass (nodes
+    // without out-edges; a null node never joins its out-degree, so it
+    // always is one) to all of them
     for (_ <- 1 to iters) {
-      val contrib = e.join(rank.withColumnRenamed("node", "src"), "src")
-        .join(outdeg, "src")
-        .select(col("dst").as("node"), expr("rank div outdeg").as("c"))
-      val inSum = contrib.groupBy("node").agg(sum(col("c")).as("in_sum"))
-      // node-sized: eagerly materialized per round, truncating the
-      // lineage so the job graph stays O(1) per iteration (the classic
-      // iterative-algorithm discipline; content is integer-deterministic,
-      // so checkpointing cannot change any value)
-      rank = rank
-        .join(outdeg.select(col("src").as("node"), lit(1).as("__o")),
-          Seq("node"), "left")
-        .join(inSum, Seq("node"), "left")
-        .withColumn("dang",
-          sum(when(col("__o").isNull, col("rank")).otherwise(lit(0L)))
-            .over(wAll))
-        .select(col("node"),
-          (lit(base) +
-            expr(s"(85 * (coalesce(in_sum, 0) + (dang div $n))) div 100"))
-            .as("rank"))
-        .localCheckpoint(true)
+      rank = g.sumToOwners(g.out.zipPartitions(g.in, rank) { (o, i, r) =>
+        val x = r.next()
+        val es = o.toArray
+        val outdeg = mutable.HashMap.empty[Long, Long]
+        es.foreach { case (s, _) =>
+          if (s != null) outdeg(s) = outdeg.getOrElse(s, 0L) + 1L }
+        val inSum = mutable.HashMap.empty[Long, Long]
+        es.foreach { case (s, d) =>
+          if (s != null && d != null)
+            inSum(d) = Math.addExact(inSum.getOrElse(d, 0L), x(s) / outdeg(s))
+        }
+        val dang = LinkGraph.owned(es.iterator, i)
+          .filter(v => v == null || !outdeg.contains(v))
+          .foldLeft(0L)((t, v) => Math.addExact(t, x(v)))
+        Iterator((inSum, dang))
+      }).map { case (inSum, dang) =>
+        def next(in: Long) = Math.addExact(base,
+          Math.multiplyExact(85L, Math.addExact(in, dang / n)) / 100L)
+        Slice(inSum.map { case (v, s) => v -> next(s) }, next(0L))
+      }
     }
-    e.unpersist(); nodes.unpersist(); outdeg.unpersist()
-    rank
+    // one job for every round: the graph's nodes (a null one included)
+    g.checkpointed(
+      g.out.zipPartitions(g.in, rank) { (o, i, r) =>
+        val x = r.next()
+        LinkGraph.owned(o, i).map(v => Row(v, x(v)))
+      },
+      StructField("rank", LongType, nullable = iters > 0))
   }
 
   /** Top-k nodes by rank (rank desc, node asc — deterministic): the

@@ -1,7 +1,6 @@
 package graft.ops
 
 import graft.SparkSuite
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 
@@ -93,35 +92,19 @@ class ComponentsSpec extends SparkSuite {
   }
 
   test("a call over 30 five-cliques runs at most 14 Spark jobs") {
-    val group = "components-jobs"
-    val sentinel = "components-jobs-end"
-    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
-    @volatile var sawSentinel = false
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit =
-        Option(js.properties).map(_.getProperty("spark.jobGroup.id")) match {
-          case Some(`group`) => jobs.add(js.jobId)
-          case Some(`sentinel`) => sawSentinel = true
-          case _ =>
-        }
-    }
     val df = cliques(30, 5).toDF("doc_a", "doc_b")
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "connected over 30 five-cliques")
-      try Components.connected(df, "doc_a", "doc_b").collect()
-      finally sc.clearJobGroup()
-      // listener events arrive in order: once the sentinel job's start is
-      // seen, every job of the call has been counted
-      sc.setJobGroup(sentinel, "listener barrier")
-      try spark.range(1).collect()
-      finally sc.clearJobGroup()
-      val deadline = System.nanoTime() + 30e9.toLong
-      while (!sawSentinel && System.nanoTime() < deadline) Thread.sleep(10)
-      assert(sawSentinel, "listener never saw the barrier job")
-    } finally sc.removeSparkListener(listener)
-    assert(jobs.size <= 14, s"${jobs.size} jobs for one call")
+    val jobs = jobsRunBy(Components.connected(df, "doc_a", "doc_b").collect())
+    assert(jobs <= 14, s"$jobs jobs for one call")
+  }
+
+  test("a local-checkpoint call leaves only the returned labelling persisted") {
+    // each superseded round's checkpoint must be released, not left to
+    // the ContextCleaner: a 512-path runs ~9 rounds
+    val df = (0L until 511L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
+    val left = persistedBy {
+      assert(Components.connected(df, "doc_a", "doc_b").count() == 512)
+    }
+    assert(left.size <= 1, s"${left.size} persisted RDDs left behind")
   }
 
   test("clusters chains LSH pairs transitively and keepBest keeps one per cluster") {

@@ -1,7 +1,7 @@
 package graft.ops
 
 import graft.SparkSuite
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.LongType
 
 /** [[Hits]] — integer fixed-point mutual reinforcement. */
 class HitsSpec extends SparkSuite {
@@ -80,5 +80,60 @@ class HitsSpec extends SparkSuite {
       .as[(Long, Long, Long)].collect().toSeq
     assert(top.size == 3)
     assert(top.map(_._3).sliding(2).forall(p => p.head >= p.last))
+  }
+
+  test("null endpoints feed the totals but are never scored; dups and self-loops") {
+    // distinct edges: 1→2, 2→2, 1→null, null→3, 2→3, null→null.
+    // auth half: hubs all S; raw(2) = 2S, raw(3) = S, raw(null) = S
+    //   (1→null), tot = 4S ⇒ auth(2) = S/2, auth(3) = S/4
+    // hub half: raw(1) = auth(2), raw(2) = auth(2) + auth(3),
+    //   raw(null) = auth(3) (null→3), tot = 3S/2
+    //   ⇒ hub(1) = S/3 (floor), hub(2) = S/2
+    val e = Seq[(java.lang.Long, java.lang.Long)]((1L, 2L), (1L, 2L),
+      (2L, 2L), (1L, null), (null, 3L), (2L, 3L), (null, null))
+      .toDF("src", "dst")
+    def run(iters: Int) = Hits.scores(e, "src", "dst", iters)
+      .orderBy("node").as[(Long, Long, Long)].collect().toSeq
+    assert(run(1) == Seq((1L, S / 3, 0L), (2L, S / 2, S / 2), (3L, 0L, S / 4)))
+    // three rounds, as the SQL formulation computed them
+    assert(run(3) ==
+      Seq((1L, 309523L, 0L), (2L, 500000L, 500000L), (3L, 0L, 307692L)))
+  }
+
+  test("empty input yields an empty (node, hub, auth) frame, cold and warm") {
+    val e = Seq.empty[(Long, Long)].toDF("src", "dst")
+    val cold = Hits.scores(e, "src", "dst", iters = 2)
+    assert(cold.schema.map(f => f.name -> f.dataType) ==
+      Seq("node" -> LongType, "hub" -> LongType, "auth" -> LongType))
+    assert(cold.collect().isEmpty)
+    val warm = Hits.scoresWarm(e, "src", "dst", iters = 2,
+      init = Seq((1L, 5L)).toDF("node", "hub"))
+    assert(warm.collect().isEmpty)
+  }
+
+  test("the same scores at 1, 3 and 7 shuffle partitions") {
+    val e = (0L until 150L).map(d => (d % 10, (d * 7 + 3) % 12))
+      .toDF("src", "dst")
+    def at(parts: Int) =
+      withConf("spark.sql.shuffle.partitions", parts.toString) {
+        Hits.scores(e, "src", "dst", 4).orderBy("node")
+          .as[(Long, Long, Long)].collect().toSeq
+      }
+    val want = at(4)
+    for (p <- Seq(1, 3, 7)) assert(at(p) == want, s"$p partitions")
+  }
+
+  test("a call runs at most 3 Spark jobs and leaves one persisted RDD") {
+    val rnd = new scala.util.Random(600)
+    val e = Seq.fill(2400)((rnd.nextInt(600).toLong, rnd.nextInt(600).toLong))
+      .toDF("src", "dst")
+    for (iters <- Seq(2, 10)) {
+      var jobs = 0
+      val left = persistedBy {
+        jobs = jobsRunBy(Hits.scores(e, "src", "dst", iters).collect())
+      }
+      assert(jobs <= 3, s"$jobs jobs at $iters rounds")
+      assert(left.size == 1, s"${left.size} persisted RDDs at $iters rounds")
+    }
   }
 }

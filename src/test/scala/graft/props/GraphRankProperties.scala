@@ -1,14 +1,14 @@
 package graft.props
 
 import graft.SparkSuite
-import graft.ops.{DecisionTree, Mmr, PageRank}
+import graft.ops.{DecisionTree, Hits, Mmr, PageRank}
 import org.apache.spark.sql.functions._
 
 /** Generated-input differential properties for the round's graph/rank/
   * tree ops: a plain-Scala reference recomputes every answer on random
   * inputs and the Spark result must match exactly — integer fixed-point
-  * PageRank, greedy MMR (incl. float tie paths), and histogram-split
-  * tree training (incl. argmax tie-breaks). */
+  * PageRank and HITS (cold and warm), greedy MMR (incl. float tie paths),
+  * and histogram-split tree training (incl. argmax tie-breaks). */
 class GraphRankProperties extends SparkSuite {
   import spark.implicits._
 
@@ -44,6 +44,53 @@ class GraphRankProperties extends SparkSuite {
       val got = PageRank.ranks(edges.toDF("src", "dst"), "src", "dst", 4)
         .as[(Long, Long)].collect().toMap
       assert(got == modelRanks(edges, 4), s"seed=$seed")
+    }
+  }
+
+  private val HS = 1000000L
+
+  /** Sequential integer HITS — the model [[Hits.scores]] (seed `None`)
+    * and [[Hits.scoresWarm]] must reproduce bit-for-bit. A warm seed
+    * gives the start hub of the nodes it names; the others start at the
+    * uniform share HS / n. */
+  private def modelHits(edges: Seq[(Long, Long)], iters: Int,
+                        seed: Option[Map[Long, Long]])
+      : Map[Long, (Long, Long)] = {
+    val e = edges.distinct
+    val nodes = (e.map(_._1) ++ e.map(_._2)).distinct.sorted
+    def normalized(raw: Map[Long, Long]): Map[Long, Long] = {
+      val tot = raw.values.sum
+      nodes.map(v => v -> raw.get(v).fold(0L)(_ * HS / tot)).toMap
+    }
+    var hub = seed.fold(nodes.map(_ -> HS).toMap)(s =>
+      nodes.map(v => v -> s.getOrElse(v, HS / nodes.length)).toMap)
+    var auth = nodes.map(_ -> 0L).toMap
+    for (_ <- 1 to iters) {
+      auth = normalized(e.groupMapReduce(_._2)(p => hub(p._1))(_ + _))
+      hub = normalized(e.groupMapReduce(_._1)(p => auth(p._2))(_ + _))
+    }
+    nodes.map(v => v -> (hub(v), auth(v))).toMap
+  }
+
+  test("hits equals the sequential integer model on random graphs, cold and warm") {
+    for (seed <- Seq(3L, 11L, 29L)) {
+      val rnd = new scala.util.Random(seed)
+      val edges = Seq.fill(70)(
+        (rnd.nextInt(10).toLong, rnd.nextInt(13).toLong))
+        .filter { case (a, b) => a != b }
+      val df = edges.toDF("src", "dst")
+      def collect(d: org.apache.spark.sql.DataFrame) =
+        d.as[(Long, Long, Long)].collect().map(t => t._1 -> (t._2, t._3)).toMap
+      for (iters <- Seq(1, 3)) {
+        assert(collect(Hits.scores(df, "src", "dst", iters)) ==
+          modelHits(edges, iters, None), s"cold seed=$seed iters=$iters")
+      }
+      // a seed over some graph nodes and one node outside the graph
+      val init = ((0L until 13L).filter(_ => rnd.nextBoolean()) :+ 99L)
+        .map(_ -> rnd.nextInt(1000000).toLong)
+      assert(collect(Hits.scoresWarm(df, "src", "dst", 2,
+          init.toDF("node", "hub"))) ==
+        modelHits(edges, 2, Some(init.toMap)), s"warm seed=$seed")
     }
   }
 

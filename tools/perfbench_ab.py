@@ -15,8 +15,13 @@ time out of the pairs.
 
 Printed: one line per run (tree, seed, correct, failed/attempted), then
 per metric the median of each tree, the ratio B/A, the interquartile
-range of A's runs, and the pairs B won, with "better" read from A's
-BENCHMARK.json. --out writes every run's result line.
+range of each tree's runs, the pairs B won and a verdict, with "better"
+and "bound" read from A's BENCHMARK.json. The verdict is "gain" when B
+wins at least nine tenths of the pairs (ties count for neither) and the
+medians differ by more than A's interquartile range; "WORSE>bound" marks
+a median worse than A's by more than the metric's bound. A run that
+fails is recorded and reported, and its pair is left out of the
+comparison. --out writes every run's result line.
 """
 import argparse
 import json
@@ -31,16 +36,20 @@ def run_once(tree, workload, seed, seconds):
            "--seed", str(seed), "--seconds", str(seconds), "--trace", "0"]
     r = subprocess.run(cmd, cwd=tree, stdout=subprocess.PIPE, text=True)
     lines = [ln for ln in r.stdout.splitlines() if ln.strip()]
-    if r.returncode != 0 or not lines:
-        sys.exit(f"run failed in {tree} (seed {seed}, exit {r.returncode})")
-    return json.loads(lines[-1])
+    try:
+        if r.returncode != 0:
+            raise ValueError(f"exit {r.returncode}")
+        return json.loads(lines[-1])
+    except (ValueError, IndexError) as e:
+        return {"error": f"run failed: {e}"}
 
 
-def quartiles(xs):
+def iqr(xs):
+    xs = sorted(xs)
     if len(xs) < 2:
-        return xs[0], xs[0]
+        return 0.0
     q = statistics.quantiles(xs, n=4, method="inclusive")
-    return q[0], q[2]
+    return q[2] - q[0]
 
 
 def main():
@@ -61,28 +70,43 @@ def main():
         for label in ("A", "B") if i % 2 == 0 else ("B", "A"):
             res = run_once(trees[label], a.workload, seed, a.seconds)
             runs.append({"tree": label, "seed": seed, **res})
-            print(f"{label} seed {seed}: correct={res['correct']} "
-                  f"failed={res['failed']}/{res['attempted']}", flush=True)
+            status = res["error"] if "error" in res else (
+                f"correct={res['correct']} "
+                f"failed={res['failed']}/{res['attempted']}")
+            print(f"{label} seed {seed}: {status}", flush=True)
 
     with open(os.path.join(trees["A"], "BENCHMARK.json")) as fh:
-        better = {m["name"]: m["better"] for m in json.load(fh)["end_to_end"]}
+        metrics = json.load(fh)["end_to_end"]
+
+    broken = {r["seed"] for r in runs if "error" in r}
+    pairs = [s for s in seeds if s not in broken]
+    print(f"\n{a.workload}, {len(pairs)} pairs"
+          + (f" ({len(broken)} left out: a run failed)" if broken else ""))
+    if not pairs:
+        return
+    print(f"{'metric':<14}{'median A':>12}{'median B':>12}{'B/A':>8}"
+          f"{'IQR A':>10}{'IQR B':>10}{'B wins':>8}  verdict")
 
     def values(label, name):
         return {r["seed"]: r["metrics"][name]["value"]
-                for r in runs if r["tree"] == label}
+                for r in runs if r["tree"] == label and r["seed"] in pairs}
 
-    print(f"\n{a.workload}, {len(seeds)} pairs")
-    print(f"{'metric':<14}{'median A':>12}{'median B':>12}{'B/A':>8}"
-          f"{'IQR A':>10}{'B wins':>8}")
-    for name, how in better.items():
+    for m in metrics:
+        name = m["name"]
         va, vb = values("A", name), values("B", name)
         ma, mb = statistics.median(va.values()), statistics.median(vb.values())
-        q1, q3 = quartiles(sorted(va.values()))
-        sign = 1 if how == "higher" else -1
-        wins = sum(sign * (vb[s] - va[s]) > 0 for s in seeds)
+        iqr_a, iqr_b = iqr(va.values()), iqr(vb.values())
+        sign = 1 if m["better"] == "higher" else -1
+        wins = sum(sign * (vb[s] - va[s]) > 0 for s in pairs)
         ratio = mb / ma if ma else float("nan")
+        verdict = ("gain" if wins >= 0.9 * len(pairs)
+                   and sign * (mb - ma) > iqr_a else "-")
+        # relative worsening of B's median against A's
+        if ma and sign * (ma - mb) / abs(ma) > m["bound"]:
+            verdict += f"  WORSE>bound({m['bound']})"
         print(f"{name:<14}{ma:>12.4g}{mb:>12.4g}{ratio:>8.3f}"
-              f"{q3 - q1:>10.3g}{wins:>5}/{len(seeds)}")
+              f"{iqr_a:>10.3g}{iqr_b:>10.3g}{wins:>5}/{len(pairs)}  "
+              f"{verdict}")
 
     if a.out:
         with open(a.out, "w") as fh:
