@@ -1,16 +1,56 @@
 package graft.props
 
 import graft.SparkSuite
-import graft.ops.{Normalize, Shards, UrlOps}
+import graft.ops.{Hits, Normalize, Shards, UrlOps}
 import org.apache.spark.sql.functions._
 
 /** Generated-input differential properties for the round's web-curation
   * ops: a plain-Scala reference recomputes every answer on random inputs
-  * and the Spark result must match exactly — the normalization chain
-  * (idempotence + reference model), key-consistent splits, and anchor
-  * aggregation under re-partitioning. */
+  * and the Spark result must match exactly — integer fixed-point HITS,
+  * the normalization chain (idempotence + reference model), key-consistent
+  * splits, and anchor aggregation under re-partitioning. */
 class WebCurationProperties extends SparkSuite {
   import spark.implicits._
+
+  private val S = 1000000L
+
+  /** Sequential integer HITS — the model [[Hits.scores]] must reproduce
+    * bit-for-bit. */
+  private def modelHits(edges: Seq[(Long, Long)], iters: Int)
+      : Map[Long, (Long, Long)] = {
+    val e = edges.distinct
+    val nodes = (e.map(_._1) ++ e.map(_._2)).distinct.sorted
+    var hub = nodes.map(_ -> S).toMap
+    var auth = Map.empty[Long, Long]
+    for (_ <- 1 to iters) {
+      val aRaw = scala.collection.mutable.Map.empty[Long, Long]
+        .withDefaultValue(0L)
+      for ((s, d) <- e) aRaw(d) += hub(s)
+      val aTot = aRaw.values.sum
+      auth = nodes.map(v =>
+        v -> (if (aRaw.contains(v)) aRaw(v) * S / aTot else 0L)).toMap
+      val hRaw = scala.collection.mutable.Map.empty[Long, Long]
+        .withDefaultValue(0L)
+      for ((s, d) <- e) hRaw(s) += auth(d)
+      val hTot = hRaw.values.sum
+      hub = nodes.map(v =>
+        v -> (if (hRaw.contains(v)) hRaw(v) * S / hTot else 0L)).toMap
+    }
+    nodes.map(v => v -> (hub(v), auth(v))).toMap
+  }
+
+  test("HITS equals the sequential integer model on random graphs") {
+    for (seed <- Seq(3L, 11L, 29L)) {
+      val rnd = new scala.util.Random(seed)
+      val edges = Seq.fill(70)(
+        (rnd.nextInt(10).toLong, rnd.nextInt(13).toLong))
+        .filter { case (a, b) => a != b }
+      val got = Hits.scores(edges.toDF("src", "dst"), "src", "dst", 3)
+        .as[(Long, Long, Long)].collect()
+        .map(t => t._1 -> (t._2, t._3)).toMap
+      assert(got == modelHits(edges, 3), s"seed=$seed")
+    }
+  }
 
   /** Random strings over an alphabet rich in normalization triggers. */
   private def randomMessy(rnd: scala.util.Random, len: Int): String = {
