@@ -150,26 +150,6 @@ final class Bm25Index(spark: SparkSession, path: String,
     d.digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
   }
 
-  /** Format marker for the per-ord `_stats` layout. Stores compacted
-    * under PRE-per-ord code collapsed `_stats` to one aggregate row
-    * labeled `max(ord)` — indistinguishable row-by-row from a per-batch
-    * row, so a sanctioned same-ord replay of that max-ord batch would
-    * collide with the aggregate on the ord key and `search`'s
-    * dropDuplicates could keep either, silently collapsing N/Σtokens to
-    * one batch's counts. The marker (store root, survives generation
-    * swaps) is written at store CREATION only: its absence on a
-    * non-empty store means the store predates the marker and MAY carry
-    * the legacy aggregate — [[add]] warns loudly and the safe path is a
-    * rebuild (re-add every batch into a fresh store); no in-place
-    * migration can tell the aggregate from a genuine batch row. */
-  private def statsFormatMarker = new File(path, "_stats_format")
-
-  /** True when this store's `_stats` may carry a pre-per-ord aggregate
-    * row (stats data present, format marker absent). */
-  def legacyStatsRisk: Boolean =
-    gens.currentGen().exists(g => Fs.hasDataFiles(new File(g, "_stats"))) &&
-      !statsFormatMarker.exists()
-
   /** Append one batch's postings + stats row. `ord` identifies the batch
     * for replay-dedup; pass the same ord when retrying a crashed append.
     * An EMPTY batch appends nothing, and a batch whose every doc
@@ -181,26 +161,7 @@ final class Bm25Index(spark: SparkSession, path: String,
     * Lucene) and is written from driver-side scalars (n_docs from a
     * column-pruned count, n_toks read off the persisted postings), so
     * both guards cost no tokenize pass. */
-  def add(batch: DataFrame, ord: Long): Unit =
-      StoreLock.exclusive(new File(path)) {
-    hwm.check(ord)
-    if (legacyStatsRisk)
-      org.slf4j.LoggerFactory.getLogger(getClass).warn(
-        s"BM25 store at $path has stats data but no _stats_format marker " +
-          "— it was created or compacted under pre-per-ord code and may " +
-          "carry a legacy AGGREGATE stats row labeled max(ord). A " +
-          "same-ord replay of that batch would collide with the " +
-          "aggregate and silently collapse N/Σtokens to one batch's " +
-          "counts. Safe path: rebuild (re-add every batch into a fresh " +
-          "store); no in-place migration can tell the aggregate from a " +
-          "genuine batch row.")
-    else if (!statsFormatMarker.exists())
-      // no stats data yet (legacyStatsRisk is false), so there is
-      // nothing a legacy aggregate could hide in: stamp the layout
-      // before this add lands the store's FIRST stats row — covers both
-      // store creation and a pre-marker store whose adds were all empty
-      Fs.atomicWriteString(statsFormatMarker, "per-ord-v2")
-    val gen = gens.liveOrCreate()
+  def add(batch: DataFrame, ord: Long): Unit = gens.append(hwm, ord) { gen =>
     val (postings, _) = Bm25.postingsOf(batch, idCol, textCol)
     // n_docs counts ALL batch rows (token-less docs dilute avgdl, as in
     // Lucene) — a column-pruned count, no tokenize. The old shape
@@ -228,18 +189,20 @@ final class Bm25Index(spark: SparkSession, path: String,
         Seq((nDocs, nToks, ord)).toDF("n_docs", "n_toks", "ord")
           .coalesce(1)
           .write.mode("append").parquet(gen.getAbsolutePath + "/_stats")
-        hwm.advance(ord)
       } finally { posts.unpersist(); () }
     }
   }
 
-  private def live(): File = gens.currentGen().getOrElse(
-    throw new IllegalStateException(s"empty BM25 index at $path"))
+  /** A generation holds postings once any add had a token: a batch of
+    * token-less docs lands a stats row and no postings. */
+  private val postingsPresent: File => Boolean =
+    f => f.getName == "postings" && Fs.hasDataFiles(f)
 
   /** Top-k per query, reading only the query terms' `tp` partitions.
     * Byte-identical to [[Bm25.score]] over the same accumulated corpus. */
   def search(queries: Seq[(String, String)], k: Int): DataFrame = {
-    val gen = live()
+    val gen = gens.currentGen().getOrElse(
+      throw new IllegalStateException(s"empty BM25 index at $path"))
     // a store fed only token-less docs so far has stats but no postings
     if (!Fs.hasDataFiles(new File(gen, "postings")))
       throw new IllegalStateException(s"BM25 index at $path has no postings")
@@ -272,36 +235,19 @@ final class Bm25Index(spark: SparkSession, path: String,
     * row dedups against its byte-identical original instead. Cost: one
     * tiny row per batch ever ingested in a single coalesced file — the
     * per-search stats read stays one file scan. */
-  def compact(): Unit = StoreLock.exclusive(new File(path)) {
-    val cur = live()
-    if (Fs.hasDataFiles(new File(cur, "postings"))) {
-      val postings = spark.read.parquet(cur.getAbsolutePath + "/postings")
-        .dropDuplicates("t", idCol)
-      val stats = spark.read.parquet(cur.getAbsolutePath + "/_stats")
-        .dropDuplicates("ord")
-      val next = gens.newGenDir()
-      postings.transform(d => Par.byCols(d, col("tp"))).write.mode("overwrite")
-        .partitionBy("tp").parquet(next.getAbsolutePath + "/postings")
-      stats.coalesce(1).write.mode("overwrite")
-        .parquet(next.getAbsolutePath + "/_stats")
-      gens.swapPointer(next.getName)
-      gens.reapExcept(Set(next.getName, cur.getName))
-    }
+  def compact(): Unit = gens.rewrite(postingsPresent) { (cur, next) =>
+    spark.read.parquet(cur.getAbsolutePath + "/postings")
+      .dropDuplicates("t", idCol)
+      .transform(d => Par.byCols(d, col("tp"))).write.mode("overwrite")
+      .partitionBy("tp").parquet(next.getAbsolutePath + "/postings")
+    spark.read.parquet(cur.getAbsolutePath + "/_stats")
+      .dropDuplicates("ord")
+      .coalesce(1).write.mode("overwrite")
+      .parquet(next.getAbsolutePath + "/_stats")
   }
 
-  /** Count-triggered compaction — the maintenance-loop policy
-    * ([[EdgeIndex.compactIfDue]] generalized to the probe stores):
-    * compact when the widest partition has accumulated `maxBatches`
-    * uncompacted append files ([[GenStore.appendDepth]]); price K with
-    * [[CompactionPolicy.maxBatches]] and this family's measured
-    * per-append read cost ([[CompactionPolicy.ProbeStorePerBatchReadCostS]]
-    * — milder than the edge store's union-plan growth, so K is larger).
-    * Each cron fire is a pure directory listing unless the store is
-    * actually due; `>=` so the advertised budget is never overshot.
-    * Returns true when it compacted. */
-  def compactIfDue(maxBatches: Int): Boolean = {
-    val due = gens.appendDepth() >= maxBatches
-    if (due) compact()
-    due
-  }
+  /** [[GenStore.compactIfDue]] over the widest `tp` partition's file
+    * count. */
+  def compactIfDue(maxBatches: Int): Boolean =
+    gens.compactIfDue(maxBatches)(compact())
 }

@@ -13,8 +13,9 @@ package graft.ops
   *
   *   K = readLatencyBudget / perBatchReadCost
   *
-  * — compact when more than K batches have accumulated since the last
-  * compaction. Count, not cadence: a cron that compacts every fire
+  * — compact once K batches have accumulated since the last compaction
+  * (the one trigger every store runs is [[GenStore.compactIfDue]]).
+  * Count, not cadence: a cron that compacts every fire
   * rewrites quiet stores for nothing (EdgeIndex compaction was the
   * single most expensive maintenance op measured, 24.7 s at n=200),
   * while a cron too slow for a hot store lets reads degrade past the

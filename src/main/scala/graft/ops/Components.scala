@@ -275,8 +275,8 @@ object Components {
   *
   * Crash contract: appends are plain parquet appends of DISTINCT pairs, so
   * a replayed batch re-appends identical links — duplicate link rows never
-  * change the resolved clusters (idempotent replay). Appends/compacts are
-  * serialized by a single driver, like the other stores.
+  * change the resolved clusters (idempotent replay). Appends and compacts
+  * serialize on [[StoreLock]] ([[GenStore]]), like the other stores.
   *
   * Reference analog: compacted subscription state that outlives any run
   * (`MessageDeduplication.takeSnapshot`,
@@ -293,14 +293,22 @@ class ComponentsIndex(spark: SparkSession, path: String,
   private val hwm = new OrdHighWater(new java.io.File(path), "components",
     strictOrd)
 
-  private def appendGen(): File = gens.liveOrCreate()
-
-  private def parquetFilesIn(dir: File): Array[File] =
-    Option(dir.listFiles()).getOrElse(Array.empty)
+  /** Parquet files directly in `dir` that hold rows. A zero-row append
+    * still lands one schema-only file, which holds nothing to read or
+    * compact; its row count comes from the file footer, no Spark job. */
+  private def dataFilesIn(dir: File): Iterable[File] =
+    Option(dir.listFiles()).getOrElse(Array.empty).view
       .filter(f => f.isFile && f.getName.endsWith(".parquet"))
+      .filter { f =>
+        val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+            new org.apache.hadoop.fs.Path(f.toURI),
+            spark.sparkContext.hadoopConfiguration))
+        try r.getRecordCount > 0 finally r.close()
+      }
 
   private def readDir(dir: File): Option[DataFrame] =
-    if (parquetFilesIn(dir).isEmpty) None
+    if (dataFilesIn(dir).isEmpty) None
     else Some(spark.read.parquet(dir.getAbsolutePath))
 
   /** Flat member→root stars (a, b=root, ord) from the last [[compact]];
@@ -309,30 +317,9 @@ class ComponentsIndex(spark: SparkSession, path: String,
   private def stars(): Option[DataFrame] =
     gens.currentGen().flatMap(g => readDir(new File(g, "stars")))
 
-  /** Post-compact link appends. Legacy root-level files (the
-    * pre-subdirectory layout wrote both appends and stars flat into the
-    * generation) are read as plain links too — a star row IS a link of the
-    * same component, so treating it as one only forgoes the snapshot
-    * shortcut, never correctness. Listed explicitly so the read never
-    * trips over the subdirectories. */
-  private def delta(): Option[DataFrame] = gens.currentGen().flatMap { g =>
-    val legacy = parquetFilesIn(g)
-    val legacyDf =
-      if (legacy.isEmpty) None
-      else Some(spark.read.parquet(legacy.map(_.getAbsolutePath).toSeq: _*))
-    val d = readDir(new File(g, "delta"))
-    (legacyDf, d) match {
-      case (Some(l), Some(x)) => Some(l.unionByName(x))
-      case (l, x) => l.orElse(x)
-    }
-  }
-
-  /** Everything stored, viewed as link rows (a, b, ord) — the retention /
-    * evidence domain. */
-  private def allRows(): Option[DataFrame] = (stars(), delta()) match {
-    case (Some(s), Some(d)) => Some(s.unionByName(d))
-    case (s, d) => s.orElse(d)
-  }
+  /** Post-compact link appends (a, b, ord), in `delta/`. */
+  private def delta(): Option[DataFrame] =
+    gens.currentGen().flatMap(g => readDir(new File(g, "delta")))
 
   /** Wall-clock-stamped append — for stores whose evidence-age axis IS
     * ingest time. Refused on a strict-ord store (one ~epoch-ms stamp
@@ -355,16 +342,14 @@ class ComponentsIndex(spark: SparkSession, path: String,
     * append is O(2·batch) rows; no closure work happens here. */
   def addPairs(pairs: DataFrame, aCol: String = "doc_a",
                bCol: String = "doc_b", ord: Long): Unit =
-      StoreLock.exclusive(new File(path)) {
-    hwm.check(ord)
+      gens.append(hwm, ord) { gen =>
     val p = pairs.select(col(aCol).as("a"), col(bCol).as("b"))
       .where(col("a") =!= col("b"))
       .distinct()
     p.unionByName(p.select(col("b").as("a"), col("a").as("b")))
       .withColumn("ord", graft.functions.Params.paramLong(ord))
       .write.mode("append")
-      .parquet(new File(appendGen(), "delta").getAbsolutePath)
-    hwm.advance(ord)
+      .parquet(new File(gen, "delta").getAbsolutePath)
   }
 
   /** Delta links contracted onto their snapshot roots: each endpoint maps
@@ -427,65 +412,52 @@ class ComponentsIndex(spark: SparkSession, path: String,
     * generation is kept one cycle for lazy readers; older ones are
     * deleted. */
   def compact(retainOrdGe: Option[Long] = None): Unit =
-      StoreLock.exclusive(new File(path)) {
-    val prev = gens.currentGen()
-    allRows().foreach { all =>
-      // newest evidence per node: max ord over the rows it heads. Raw
-      // links are stored in both directions and stars/self-rows head
-      // their member, so the a-side max is exactly the node's own newest
-      // evidence — a star's b-side (the root) gains nothing from its
-      // members' freshness.
-      val nodeOrd = all.groupBy(col("a").as("id")).agg(max("ord").as("__no"))
-      def write(cc: DataFrame): Unit = {
-        val starRows = cc.join(nodeOrd, "id")
-          .select(col("id").as("a"), col("component").as("b"),
-            col("__no").as("ord"))
-        val next = gens.newGenDir()
-        starRows.write.parquet(new File(next, "stars").getAbsolutePath)
-        gens.swapPointer(next.getName)
-        gens.reapExcept(Set(next.getName) ++ prev.map(_.getName))
-      }
-      // the eager-consumer shape: the closure's reliable-materialization
-      // residue is deleted as soon as the stars generation is written, so
-      // the cron loop accumulates nothing under the checkpoint dir
-      (retainOrdGe, stars(), delta()) match {
-        case (Some(h), _, _) =>
-          val fresh = nodeOrd.where(col("__no") >= h)
-          val kept = all.where(col("a") =!= col("b"))
-            .join(fresh.select(col("id").as("a")), Seq("a"), "left_semi")
-            .join(fresh.select(col("id").as("b")), Seq("b"), "left_semi")
-          Components.connectedThenClean(kept, "a", "b")(write)
-        case (None, Some(s), Some(d)) =>
-          Components.connectedThenClean(contracted(s, d), "ra", "rb")(
-            cc => write(assemble(s, cc)))
-        case (None, Some(s), None) =>
-          write(s.select(col("a").as("id"), col("b").as("component")))
-        case (None, None, Some(d)) =>
-          Components.connectedThenClean(d, "a", "b")(write)
-        case (None, None, None) => ()
-      }
+      gens.rewrite(f => Seq("stars", "delta").contains(f.getName) &&
+        dataFilesIn(f).nonEmpty) { (_, next) =>
+    val (st, dl) = (stars(), delta())
+    // everything stored, viewed as link rows (a, b, ord) — the
+    // retention / evidence domain
+    val all = (st ++ dl).reduce(_ unionByName _)
+    // newest evidence per node: max ord over the rows it heads. Raw
+    // links are stored in both directions and stars/self-rows head
+    // their member, so the a-side max is exactly the node's own newest
+    // evidence — a star's b-side (the root) gains nothing from its
+    // members' freshness.
+    val nodeOrd = all.groupBy(col("a").as("id")).agg(max("ord").as("__no"))
+    def write(cc: DataFrame): Unit =
+      cc.join(nodeOrd, "id")
+        .select(col("id").as("a"), col("component").as("b"),
+          col("__no").as("ord"))
+        .write.parquet(new File(next, "stars").getAbsolutePath)
+    // the eager-consumer shape: the closure's reliable-materialization
+    // residue is deleted as soon as the stars generation is written, so
+    // the cron loop accumulates nothing under the checkpoint dir
+    (retainOrdGe, st, dl) match {
+      case (Some(h), _, _) =>
+        val fresh = nodeOrd.where(col("__no") >= h)
+        val kept = all.where(col("a") =!= col("b"))
+          .join(fresh.select(col("id").as("a")), Seq("a"), "left_semi")
+          .join(fresh.select(col("id").as("b")), Seq("b"), "left_semi")
+        Components.connectedThenClean(kept, "a", "b")(write)
+      case (None, Some(s), Some(d)) =>
+        Components.connectedThenClean(contracted(s, d), "ra", "rb")(
+          cc => write(assemble(s, cc)))
+      case (None, Some(s), None) =>
+        write(s.select(col("a").as("id"), col("b").as("component")))
+      case _ => Components.connectedThenClean(all, "a", "b")(write)
     }
   }
 
-  /** Count-triggered [[compact]] — the maintenance-loop policy
-    * ([[EdgeIndex.compactIfDue]] generalized): fires when the DELTA dir
-    * has accumulated `maxBatches` uncompacted append files (`>=` so the
-    * advertised read budget is never overshot), forwarding
+  /** Count-triggered [[compact]] ([[GenStore.compactIfDue]]), forwarding
     * `retainOrdGe` to the compaction it triggers. Due-ness counts the
-    * delta side only, NOT [[GenStore.appendDepth]] over the whole
-    * generation: `stars/` is the compacted form itself and its file
+    * DELTA dir's append files only, NOT [[GenStore.appendDepth]] over the
+    * whole generation: `stars/` is the compacted form itself and its file
     * count is the closure write's shuffle width — counting it would
     * re-rewrite a quiet store on every fire once K is at or below that
-    * width. A fire on an under-threshold store is a pure directory
-    * listing. Returns true when it compacted. */
+    * width. Zero-row appends do not count. */
   def compactIfDue(maxBatches: Int,
-                   retainOrdGe: Option[Long] = None): Boolean = {
-    val deltaDepth = gens.currentGen().map { g =>
-      Option(new File(g, "delta").listFiles()).getOrElse(Array.empty)
-        .count(f => f.isFile && f.getName.endsWith(".parquet"))
-    }.getOrElse(0)
-    val due = deltaDepth >= maxBatches
-    if (due) compact(retainOrdGe)
-    due
-  }
+                   retainOrdGe: Option[Long] = None): Boolean =
+    gens.compactIfDue(maxBatches,
+      gens.currentGen().map(g => dataFilesIn(new File(g, "delta")).size)
+        .getOrElse(0))(compact(retainOrdGe))
 }

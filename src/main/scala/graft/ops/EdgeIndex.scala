@@ -79,7 +79,7 @@ final class EdgeIndex(spark: SparkSession, path: String) {
     // multi-driver fencing check runs explicitly: an appender whose
     // driver lost (or never held) a fenced store's ownership fails
     // loudly here instead of publishing into a store it no longer owns
-    StoreFence.verify(new File(path))
+    StoreFence.verify(gens.root)
     var attempts = 0
     var done = false
     while (!done) {
@@ -93,19 +93,21 @@ final class EdgeIndex(spark: SparkSession, path: String) {
     }
   }
 
+  /** The live generation. Cold start is the ONE append step that must
+    * serialize across processes (two creators could allocate DIFFERENT
+    * generations and the later pointer swap would orphan the earlier
+    * one's batches — GenStore's in-process lock can't see another JVM),
+    * so it takes the [[StoreLock]]; steady-state appends never do. */
+  private def liveGen(): File = gens.currentGen().getOrElse(
+    StoreLock.exclusive(gens.root)(gens.liveOrCreate()))
+
   /** One staged-write + publish attempt. Returns false — replay the
     * batch — only when a concurrent reap deleted it before it reached
     * the live generation (two full maintenance cycles inside one
     * publish window); a replayed batch that ALSO survived elsewhere
     * collapses under the store's replay dedup. */
   private def tryPublish(batch: DataFrame, ord: Long): Boolean = {
-    // cold start is the ONE append step that must serialize across
-    // processes (two creators could allocate DIFFERENT generations and
-    // the later pointer swap would orphan the earlier one's batches —
-    // GenStore's in-process lock can't see another JVM). Steady-state
-    // appends never take the lock.
-    val gen = gens.currentGen().getOrElse(
-      StoreLock.exclusive(new File(path))(gens.liveOrCreate()))
+    val gen = liveGen()
     val stage = new File(path,
       s".stage-${java.util.UUID.randomUUID()}")
     batch.select(col("src"), col("dst")).distinct()
@@ -119,7 +121,7 @@ final class EdgeIndex(spark: SparkSession, path: String) {
     // fence right before the batch becomes visible, so a takeover landing
     // mid-write is caught at the publish instant instead of leaking one
     // batch into a store this driver no longer owns
-    try StoreFence.verify(new File(path))
+    try StoreFence.verify(gens.root)
     catch { case t: Throwable => Fs.deleteRecursively(stage); throw t }
     val name = s"batch-$ord-${java.util.UUID.randomUUID()}"
     // publish: the generation we grabbed can be reaped under us by
@@ -134,8 +136,7 @@ final class EdgeIndex(spark: SparkSession, path: String) {
       } catch {
         case _: java.nio.file.NoSuchFileException =>
           if (!stage.isDirectory) return false
-          target = new File(gens.currentGen().getOrElse(
-            StoreLock.exclusive(new File(path))(gens.liveOrCreate())), name)
+          target = new File(liveGen(), name)
       }
     }
     Fs.step("edge.batch-published")
@@ -209,7 +210,7 @@ final class EdgeIndex(spark: SparkSession, path: String) {
     * race `nextGenIndex` onto one generation name and share a committer
     * `_temporary` root inside it (the corruption StoreLock exists for);
     * appends never take the lock. */
-  def compact(): Unit = StoreLock.exclusive(new File(path)) {
+  def compact(): Unit = StoreLock.exclusive(gens.root) {
     gens.currentGen().foreach { cur =>
     val dirs = batchDirs(cur)
     if (dirs.nonEmpty) {
@@ -246,26 +247,14 @@ final class EdgeIndex(spark: SparkSession, path: String) {
   def uncompactedBatches: Int =
     gens.currentGen().map(batchDirs(_).size).getOrElse(0)
 
-  /** Count-triggered compaction — the maintenance-loop policy: compact
-    * when the accumulated batch count exceeds `maxBatches`
-    * ([[CompactionPolicy.maxBatches]] derives the threshold from the
-    * measured per-batch read cost and a read-latency budget), so read
-    * latency is bounded by the BUDGET rather than by how often the cron
-    * happens to fire, and a quiet store is never rewritten just because
-    * time passed. `>=`, not `>`: at exactly K batches reads already sit
-    * at floor + the full budget, so waiting for K+1 would overshoot the
-    * advertised budget by one per-batch cost before the NEXT loop fire
-    * even starts. Returns true when it compacted. */
-  def compactIfDue(maxBatches: Int): Boolean = {
-    val due = uncompactedBatches >= maxBatches
-    if (due) compact()
-    due
-  }
+  /** Count-triggered compaction ([[GenStore.compactIfDue]]) over
+    * [[uncompactedBatches]], the union-plan width reads pay for. */
+  def compactIfDue(maxBatches: Int): Boolean =
+    gens.compactIfDue(maxBatches, uncompactedBatches)(compact())
 
   /** Whether any batch has been published (a pure directory listing). */
   def hasData: Boolean = gens.currentGen().exists(batchDirs(_).nonEmpty)
 
   /** Live generation path (plan audits / external scans). */
-  def currentGenerationPath: Option[String] =
-    gens.currentGen().map(_.getAbsolutePath)
+  def currentGenerationPath: Option[String] = gens.currentGenerationPath
 }

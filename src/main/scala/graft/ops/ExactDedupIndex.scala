@@ -62,6 +62,8 @@ final class ExactDedupIndex(spark: SparkSession, path: String,
 
   private def fpp = concat(lit("p"), substring(col("fp"), 1, 1))
 
+  private val present = GenStore.partitionDir("fpp")
+
   /** Bloom rows per hash row — 2×4096 bits caps the summary at 8 KB of
     * (r, bit) rows regardless of store size. */
   private val BloomK = 2
@@ -83,14 +85,11 @@ final class ExactDedupIndex(spark: SparkSession, path: String,
     * batch) reads kilobytes instead of scanning postings. */
   def addAndDedup(batch: DataFrame, ord: Long,
                   bloom: Boolean = false): DataFrame =
-      StoreLock.exclusive(new File(path)) {
-    hwm.check(ord)
-    val gen = gens.liveOrCreate()
+      gens.append(hwm, ord) { gen =>
     val fps = batch
       .select(col(idCol), fingerprint(col(textCol)).as("fp"))
       .groupBy(col("fp")).agg(min(col(idCol)).as(idCol))
-    val stored = gens.readLive(spark,
-      f => f.isDirectory && f.getName.startsWith("fpp="))
+    val stored = gens.readLive(spark, present)
     def antiJoin(probes: DataFrame): DataFrame = stored match {
       case None => probes
       case Some(st) =>
@@ -140,38 +139,31 @@ final class ExactDedupIndex(spark: SparkSession, path: String,
       .withColumn("fpp", fpp)
       .write.mode("append").partitionBy("fpp")
       .parquet(gen.getAbsolutePath)
-    hwm.advance(ord)
     novel.select(col(idCol), col("fp"))
   }
+
+  /** One arbitrated (fp, id, ord) row per fingerprint: a crashed append
+    * replayed under a racing reader could have landed a fingerprint
+    * twice — the (ord, id) total order the ingest path uses decides, so
+    * the keeper never flips. */
+  private def arbitrated(rows: DataFrame): DataFrame =
+    rows.groupBy(col("fp"))
+      .agg(min(struct(col("ord"), col(idCol))).as("__first"))
+      .select(col("fp"), col(s"__first.$idCol").as(idCol),
+        col("__first.ord").as("ord"))
 
   /** The accumulated keeper set: one (content_hash, keeper_id) row per
     * distinct fingerprint ever ingested. */
   def keepers(): DataFrame =
-    gens.readLive(spark,
-        f => f.isDirectory && f.getName.startsWith("fpp="))
-      .getOrElse(throw new IllegalStateException(
-        s"empty exact-dedup index at $path"))
-      // a crashed append replayed under a racing reader could have landed
-      // a fingerprint twice — arbitrate by the same (ord, id) total order
-      // the ingest path uses, so the keeper never flips
-      .groupBy(col("fp"))
-      .agg(min(struct(col("ord"), col(idCol))).as("__first"))
-      .select(col("fp").as("content_hash"),
-        col(s"__first.$idCol").as("keeper_id"))
+    arbitrated(gens.readLive(spark, present).getOrElse(
+        throw new IllegalStateException(s"empty exact-dedup index at $path")))
+      .select(col("fp").as("content_hash"), col(idCol).as("keeper_id"))
 
   /** Rewrite the live generation to one arbitrated row per fingerprint,
     * one file per partition; keeps the replaced generation for one cycle. */
-  def compact(): Unit = StoreLock.exclusive(new File(path)) {
-    gens.currentGen()
-      .filter(_ => gens.hasData(f =>
-        f.isDirectory && f.getName.startsWith("fpp=")))
-      .foreach { cur =>
-    val next = gens.newGenDir()
-    spark.read.parquet(cur.getAbsolutePath)
-      .groupBy(col("fp"))
-      .agg(min(struct(col("ord"), col(idCol))).as("__first"))
-      .select(col("fp"), col(s"__first.$idCol").as(idCol),
-        col("__first.ord").as("ord"), fpp.as("fpp"))
+  def compact(): Unit = gens.rewrite(present) { (cur, next) =>
+    arbitrated(spark.read.parquet(cur.getAbsolutePath))
+      .withColumn("fpp", fpp)
       .transform(d => Par.byCols(d, col("fpp")))
       .write.mode("overwrite").partitionBy("fpp")
       .parquet(next.getAbsolutePath)
@@ -181,9 +173,7 @@ final class ExactDedupIndex(spark: SparkSession, path: String,
       Bloom.bits(spark.read.parquet(next.getAbsolutePath).select(col("fp")),
           BloomK)
         .write.mode("overwrite").parquet(bloomDir(next).getAbsolutePath)
-    gens.swapPointer(next.getName)
-    gens.reapExcept(Set(next.getName, cur.getName))
-  } }
+  }
 
   /** Files accumulated in the WIDEST partition of the live generation —
     * the count [[compactIfDue]] triggers on, exposed for monitoring and
@@ -191,23 +181,12 @@ final class ExactDedupIndex(spark: SparkSession, path: String,
     * [[EdgeIndex.uncompactedBatches]]). A pure directory listing. */
   def appendDepth: Int = gens.appendDepth()
 
-  /** Count-triggered compaction — the maintenance-loop policy
-    * ([[EdgeIndex.compactIfDue]] generalized to the probe stores):
-    * compact when the widest partition has accumulated `maxBatches`
-    * uncompacted append files ([[GenStore.appendDepth]]); price K with
-    * [[CompactionPolicy.maxBatches]] and this family's measured
-    * per-append read cost ([[CompactionPolicy.ProbeStorePerBatchReadCostS]]
-    * — milder than the edge store's union-plan growth, so K is larger).
-    * Each cron fire is a pure directory listing unless the store is
-    * actually due; `>=` so the advertised budget is never overshot.
-    * Returns true when it compacted. */
-  def compactIfDue(maxBatches: Int): Boolean = {
-    val due = gens.appendDepth() >= maxBatches
-    if (due) compact()
-    due
-  }
+  /** [[GenStore.compactIfDue]] over [[appendDepth]]; price K with this
+    * family's per-append read cost,
+    * [[CompactionPolicy.ProbeStorePerBatchReadCostS]]. */
+  def compactIfDue(maxBatches: Int): Boolean =
+    gens.compactIfDue(maxBatches)(compact())
 
   /** Live generation path (plan audits / external scans). */
-  def currentGenerationPath: Option[String] =
-    gens.currentGen().map(_.getAbsolutePath)
+  def currentGenerationPath: Option[String] = gens.currentGenerationPath
 }

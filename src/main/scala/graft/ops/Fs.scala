@@ -46,12 +46,12 @@ object Fs {
   /** Whether the tree under `dir` holds any actual data file (a
     * partitioned parquet write of ZERO rows leaves only `_SUCCESS` —
     * schema inference over such a dir fails, so stores check this before
-    * publishing or reading). */
+    * publishing or reading). A missing `dir` holds none. */
   def hasDataFiles(dir: File): Boolean = {
     def walk(f: File): Boolean =
       if (f.isDirectory)
         Option(f.listFiles()).getOrElse(Array.empty[File]).exists(walk)
-      else !f.getName.startsWith("_") && !f.getName.startsWith(".")
+      else f.isFile && !f.getName.startsWith("_") && !f.getName.startsWith(".")
     walk(dir)
   }
 

@@ -2,23 +2,50 @@ package graft.ops
 
 import java.io.File
 
-/** Crash-safe generation-directory layout shared by the persisted indexes
-  * ([[ParquetKvStore]], [[MinHashIndex]], [[ComponentsIndex]]): state lives
-  * in `gen-N` directories under `path`, with a `_current` pointer file
-  * atomically renamed onto the live one.
+/** The one generation-store lifecycle every persisted index runs
+  * through: state lives in `gen-N` directories under `path`, with a
+  * `_current` pointer file atomically renamed onto the live one.
   *
-  * Contract: writers materialize a full new generation (or append into the
-  * live one, where the store's semantics make partial appends replayable),
-  * then [[swapPointer]]; a crash between write and swap leaves an orphan
-  * that [[nextGenIndex]] counts, so a retry never writes into a
-  * half-written directory. Readers bound to a replaced generation stay
-  * scannable until the owner calls [[reapExcept]] — each store keeps the
-  * replaced generation for one cycle (the documented staleness bound).
+  *  - '''Append''' ([[append]]): under [[StoreLock]], check the batch's
+  *    ord against the store's [[OrdHighWater]], write into the live (or
+  *    freshly created) generation, then advance the mark.
+  *  - '''Rewrite''' ([[rewrite]], [[replaceLive]]): under [[StoreLock]],
+  *    write a whole new generation, [[swapPointer]] onto it, and reap
+  *    every generation but the new one and the one it replaced.
+  *  - '''Compaction policy''' ([[compactIfDue]]): rewrite once the live
+  *    generation's append depth reaches a count threshold.
+  *
+  * Crash contract: a crash between write and swap leaves an orphan that
+  * [[nextGenIndex]] counts, so a retry never writes into a half-written
+  * directory. Readers bound to a replaced generation stay scannable until
+  * the next rewrite reaps it — each store keeps the replaced generation
+  * for one cycle (the documented staleness bound).
+  *
+  * Reference analog: one ledger lifecycle — open-or-create, append, then
+  * compaction triggered by a threshold (managed-ledger/.../
+  * ManagedLedgerImpl.java open-or-create; pulsar-broker/.../persistent/
+  * PersistentTopic.java checkCompaction).
   */
 private[ops] final class GenStore(path: String) {
 
+  /** The store root: the [[StoreLock]] and the root-level side files
+    * (`_ord_hwm`, `_owner`) live here. */
+  val root = new File(path)
+
   def pointer = new File(path, "_current")
   private def prevPointer = new File(path, "_current.prev")
+
+  private def list(d: File): Array[File] =
+    Option(d.listFiles()).getOrElse(Array.empty)
+
+  private def genDirs(): Array[File] =
+    list(root).filter(f => f.isDirectory && f.getName.startsWith("gen-"))
+
+  /** Whether generation `g` holds data per `present` — a pure listing of
+    * its top level, no Spark job. A zero-row append leaves only a
+    * `_SUCCESS` marker, which a schema-inferring read cannot open. */
+  private def holds(present: File => Boolean)(g: File): Boolean =
+    g.isDirectory && list(g).exists(present)
 
   private def readNamed(f: File): Option[File] =
     if (!f.exists()) None
@@ -40,12 +67,14 @@ private[ops] final class GenStore(path: String) {
       recovered
     }
 
+  /** Live generation path (plan audits / external scans). */
+  def currentGenerationPath: Option[String] =
+    currentGen().map(_.getAbsolutePath)
+
   /** Next unused generation index — crash orphans (written, never pointed
     * at) count too. */
   def nextGenIndex(): Int = {
-    val existing = Option(new File(path).listFiles()).getOrElse(Array.empty)
-      .filter(f => f.isDirectory && f.getName.startsWith("gen-"))
-      .map(_.getName.stripPrefix("gen-").toInt)
+    val existing = genDirs().map(_.getName.stripPrefix("gen-").toInt)
     if (existing.isEmpty) 0 else existing.max + 1
   }
 
@@ -83,18 +112,13 @@ private[ops] final class GenStore(path: String) {
   /** Delete every generation directory not named in `keep` (the live one
     * and, by convention, the one it just replaced). */
   def reapExcept(keep: Set[String]): Unit =
-    Option(new File(path).listFiles()).getOrElse(Array.empty)
-      .filter(f => f.isDirectory && f.getName.startsWith("gen-") &&
-        !keep(f.getName))
+    genDirs().filterNot(g => keep(g.getName))
       .foreach { g => Fs.step("reap.delete"); Fs.deleteRecursively(g) }
 
   /** The generation appends land in: the live one, or a freshly-created
     * `gen-0` (pointer swapped before the first write, so a crash
     * mid-append leaves a pointed-at generation with partial state — which
-    * each store's append semantics must make replayable). `beforeCreate`
-    * runs whenever no live generation exists — the first creation, or
-    * recovery after a crashed pointer swap — so keep it idempotent
-    * (layout guards, not one-time initialization).
+    * each store's append semantics must make replayable).
     *
     * '''Concurrency''': IN-PROCESS concurrent creators (e.g. crawl
     * workers fanning out onto one empty [[EdgeIndex]]) serialize on a
@@ -110,15 +134,13 @@ private[ops] final class GenStore(path: String) {
     * metadata-op-before-appends: a ledger is created in one metadata
     * operation before entries are appended
     * (managed-ledger/.../ManagedLedgerImpl.java open-or-create). */
-  def liveOrCreate(beforeCreate: File => Unit = _ => ()): File =
+  def liveOrCreate(): File =
     currentGen().getOrElse {
       val lock = GenStore.createLocks.computeIfAbsent(
-        new File(path).getAbsolutePath, _ => new Object)
+        root.getAbsolutePath, _ => new Object)
       lock.synchronized {
         currentGen().getOrElse {
-          val root = new File(path)
           root.mkdirs()
-          beforeCreate(root)
           val gen = newGenDir()
           gen.mkdirs()
           Fs.step("create.gen-made")
@@ -127,6 +149,69 @@ private[ops] final class GenStore(path: String) {
         }
       }
     }
+
+  /** Append one ord-stamped batch: under [[StoreLock]], check `ord`
+    * against `hwm` (see [[OrdHighWater]]), run `write` on the live (or
+    * freshly created) generation, then advance the mark. A crash before
+    * the advance leaves the mark stale-low, which only weakens the
+    * advisory and never blocks the sanctioned same-ord replay. */
+  def append[T](hwm: OrdHighWater, ord: Long)(write: File => T): T =
+    StoreLock.exclusive(root) {
+      hwm.check(ord)
+      val out = write(liveOrCreate())
+      hwm.advance(ord)
+      out
+    }
+
+  /** Rewrite the live generation — every store's compaction. Under
+    * [[StoreLock]], and only when the live generation holds data per
+    * `present`: `write(live, next)` fills a fresh generation directory
+    * (not yet created — writers may use the error-if-exists save mode),
+    * which is then swapped in ([[replaceLive]]). None, with nothing
+    * written, on a store without data. */
+  def rewrite[T](present: File => Boolean)(write: (File, File) => T)
+  : Option[T] =
+    StoreLock.exclusive(root) {
+      currentGen().filter(holds(present))
+        .map(cur => replace(Some(cur))(write(cur, _)))
+    }
+
+  /** Replace whatever is live — possibly nothing — with a generation
+    * `write(live, next)` fills: the merge-on-write face
+    * ([[ParquetKvStore.merge]]). The pointer swaps after the write, then
+    * every generation but the new one and the one it replaced is reaped
+    * (crash orphans included). */
+  def replaceLive[T](write: (Option[File], File) => T): T =
+    StoreLock.exclusive(root) {
+      val cur = currentGen()
+      replace(cur)(write(cur, _))
+    }
+
+  private def replace[T](cur: Option[File])(write: File => T): T = {
+    val next = newGenDir()
+    val out = write(next)
+    swapPointer(next.getName)
+    reapExcept(Set(next.getName) ++ cur.map(_.getName))
+    out
+  }
+
+  /** Count-triggered compaction — the maintenance-loop policy shared by
+    * every store: run `compact` when `depth` (by default [[appendDepth]])
+    * has reached `maxBatches`, and return whether it ran. Price K with
+    * [[CompactionPolicy.maxBatches]] from a read-latency budget and the
+    * store family's measured per-batch read cost, so read latency is
+    * bounded by the BUDGET rather than by how often the cron happens to
+    * fire, and a quiet store is never rewritten just because time
+    * passed. `>=`, not `>`: at exactly K batches reads already sit at
+    * floor + the full budget, so waiting for K+1 would overshoot the
+    * advertised budget by one per-batch cost before the next fire. A
+    * fire on an under-threshold store is a pure directory listing. */
+  def compactIfDue(maxBatches: Int, depth: => Int = appendDepth())
+                  (compact: => Unit): Boolean = {
+    val due = depth >= maxBatches
+    if (due) compact
+    due
+  }
 
   /** Append depth of the live generation: the maximum number of data
     * files accumulated in any ONE directory (a Hive partition leaf, or a
@@ -142,9 +227,8 @@ private[ops] final class GenStore(path: String) {
     * pure recursive directory listing, no Spark job. */
   def appendDepth(): Int = {
     def walk(d: File): Int = {
-      val kids = Option(d.listFiles()).getOrElse(Array.empty)
-        .filterNot(f => f.getName.startsWith("_") ||
-          f.getName.startsWith("."))
+      val kids = list(d).filterNot(f => f.getName.startsWith("_") ||
+        f.getName.startsWith("."))
       val here = kids.count(f => f.isFile && f.getName.endsWith(".parquet"))
       val below = kids.filter(_.isDirectory).map(walk)
       (here +: below.toSeq).max
@@ -156,16 +240,12 @@ private[ops] final class GenStore(path: String) {
     * directory listing, no Spark job (use for guards where [[readLive]]'s
     * schema-inference read would be wasted work). */
   def hasData(present: File => Boolean): Boolean =
-    currentGen().exists(g =>
-      Option(g.listFiles()).getOrElse(Array.empty).exists(present))
+    currentGen().exists(holds(present))
 
   /** All retained generation names, oldest index first — the live one
     * plus any not-yet-reaped predecessors/orphans. */
   def generations(): Seq[String] =
-    Option(new File(path).listFiles()).getOrElse(Array.empty)
-      .filter(f => f.isDirectory && f.getName.startsWith("gen-"))
-      .map(_.getName)
-      .sortBy(_.stripPrefix("gen-").toInt).toSeq
+    genDirs().map(_.getName).sortBy(_.stripPrefix("gen-").toInt).toSeq
 
   /** A RETAINED generation's data by name — the store's time-travel /
     * rollback read face (the reference's seek-to-earlier-position,
@@ -176,9 +256,7 @@ private[ops] final class GenStore(path: String) {
   def readGeneration(spark: org.apache.spark.sql.SparkSession,
                      genName: String,
                      present: File => Boolean): Option[org.apache.spark.sql.DataFrame] =
-    Some(new File(path, genName))
-      .filter(g => g.isDirectory &&
-        Option(g.listFiles()).getOrElse(Array.empty).exists(present))
+    Some(new File(path, genName)).filter(holds(present))
       .map(g => spark.read.parquet(g.getAbsolutePath))
 
   /** The store's schema, learned from the FIRST real read and pinned for
@@ -191,27 +269,30 @@ private[ops] final class GenStore(path: String) {
   : Option[org.apache.spark.sql.types.StructType] = None
 
   /** The live generation's data as a DataFrame, when `present` says it
-    * holds any (a zero-row append leaves only a _SUCCESS marker — reading
-    * that would fail schema inference). Only a MISSING store maps to None;
-    * an actual read failure (permissions, corrupt footer) propagates
-    * rather than degrading into "empty store". */
+    * holds any. Only a MISSING store maps to None; an actual read failure
+    * (permissions, corrupt footer) propagates rather than degrading into
+    * "empty store". */
   def readLive(spark: org.apache.spark.sql.SparkSession,
                present: File => Boolean): Option[org.apache.spark.sql.DataFrame] =
-    currentGen().filter(g =>
-      Option(g.listFiles()).getOrElse(Array.empty).exists(present))
-      .map { g =>
-        schemaCache match {
-          case Some(s) => spark.read.schema(s).parquet(g.getAbsolutePath)
-          case None =>
-            val df = spark.read.parquet(g.getAbsolutePath)
-            schemaCache = Some(df.schema)
-            df
-        }
+    currentGen().filter(holds(present)).map { g =>
+      schemaCache match {
+        case Some(s) => spark.read.schema(s).parquet(g.getAbsolutePath)
+        case None =>
+          val df = spark.read.parquet(g.getAbsolutePath)
+          schemaCache = Some(df.schema)
+          df
       }
+    }
 }
 
 private[ops] object GenStore {
   /** Per-path cold-start creation locks (see [[GenStore.liveOrCreate]]). */
   private val createLocks =
     new java.util.concurrent.ConcurrentHashMap[String, Object]()
+
+  /** The `present` test of the hash-partitioned stores: a Hive partition
+    * directory `<column>=...` (a zero-row partitioned append creates
+    * none). */
+  def partitionDir(column: String): File => Boolean =
+    f => f.isDirectory && f.getName.startsWith(column + "=")
 }

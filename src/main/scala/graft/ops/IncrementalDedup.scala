@@ -38,12 +38,11 @@ import org.apache.spark.sql.functions._
   * document silently stops matching future near-dups, which is the
   * retention contract, not a bug.
   *
-  * Appends, probes, and compaction are serialized by a SINGLE driver (the
-  * cron-loop contract shared with [[graft.streaming.DelayedBuckets]]): a
-  * reader holding a pre-compact [[addAndFindPairs]] result stays scannable
-  * for one compact cycle (the replaced generation is retained until the
-  * next one), but an append racing a concurrent compact could land in a
-  * generation that is about to be retired — do not run them concurrently.
+  * Appends, probes, and compaction serialize across threads and processes
+  * on [[StoreLock]] ([[GenStore.append]], [[GenStore.rewrite]]): a reader
+  * holding a pre-compact [[addAndFindPairs]] result stays scannable for
+  * one compact cycle (the replaced generation is retained until the next
+  * one).
   *
   * The reference analog is dedup state that outlives any one run (broker
   * dedup cursors persisted in `MessageDeduplication.java` snapshots).
@@ -55,12 +54,12 @@ class MinHashIndex(spark: SparkSession, path: String, idCol: String,
 
   // generation-directory layout + crash-safe pointer: shared [[GenStore]]
   private val gens = new GenStore(path)
+  private val present = GenStore.partitionDir("band")
 
   // shared ord-discipline advisory: a below-high-water ord mis-AGES the
   // appended postings (compact's retention horizon prunes on ord), the
   // fresh-checkpoint footgun's shape for this store
   private val hwm = new OrdHighWater(new File(path), "minhash-lsh", strictOrd)
-  private def currentGen(): Option[File] = gens.currentGen()
 
   /** Runs just before the overlapped pair-expansion checkpoint — the seam a
     * spec uses to make the concurrent postings append commit first. */
@@ -68,26 +67,11 @@ class MinHashIndex(spark: SparkSession, path: String, idCol: String,
 
   /** Absolute path of the live postings generation, if any — for plan
     * audits and external scans of the raw postings. */
-  def currentGenerationPath: Option[String] =
-    currentGen().map(_.getAbsolutePath)
-
-  /** Mid-append crash contract: the pointer swaps before the first write,
-    * so a partial generation's rows simply re-pair idempotently on replay. */
-  private def appendGen(): File = gens.liveOrCreate { d =>
-    // a pre-generation index (band= dirs at the top level) must fail loudly:
-    // silently probing an empty generation would drop every cross-batch pair
-    if (Option(d.listFiles()).getOrElse(Array.empty)
-        .exists(f => f.isDirectory && f.getName.startsWith("band=")))
-      throw new IllegalStateException(
-        s"index at $path uses the pre-generation flat layout — rebuild it " +
-          "(probing past it would silently drop every cross-batch pair)")
-  }
+  def currentGenerationPath: Option[String] = gens.currentGenerationPath
 
   /** The stored postings, partitioned on (band, bucket-prefix) inside the
     * live generation ([[GenStore.readLive]] missing-vs-failure contract). */
-  private def postings(): Option[DataFrame] =
-    gens.readLive(spark,
-      f => f.isDirectory && f.getName.startsWith("band="))
+  private def postings(): Option[DataFrame] = gens.readLive(spark, present)
 
   /** The prefix width the index was CREATED with wins over the
     * constructor: probing p3a-style directories with p3-style filters (or
@@ -141,8 +125,7 @@ class MinHashIndex(spark: SparkSession, path: String, idCol: String,
     * monotone batch stamp) persisted on the appended postings — the age
     * axis [[compact]]'s retention horizon prunes on. */
   def addAndFindPairs(batch: DataFrame, batchOrd: Long): DataFrame =
-      StoreLock.exclusive(new File(path)) {
-    hwm.check(batchOrd)
+      gens.append(hwm, batchOrd) { gen =>
     val rowsPerBand = numHashes / bands
     val newBB = MinHashLsh.bandBuckets(
       MinHashLsh.signatures(batch, idCol, textCol, shingleK, numHashes),
@@ -216,7 +199,9 @@ class MinHashIndex(spark: SparkSession, path: String, idCol: String,
       // severs lineage before this call returns — the RETURNED pairs can
       // never re-read the postings path. A crash between the two is the
       // already-designed replay case: the member-dedup keeps re-appended
-      // postings idempotent.
+      // postings idempotent. The generation is live before the first
+      // write (GenStore.append), so a partial one's rows simply re-pair
+      // idempotently on replay.
       //
       // Append shape notes (unchanged): repartition ON the partition
       // columns (one file per touched directory, not tasks × dirs tiny
@@ -238,9 +223,8 @@ class MinHashIndex(spark: SparkSession, path: String, idCol: String,
             .repartition(spark.sessionState.conf.numShufflePartitions,
               col("band"), col("bp"))
             .write.mode("append").partitionBy("band", "bp")
-            .parquet(appendGen().getAbsolutePath)
+            .parquet(gen.getAbsolutePath)
       }
-      hwm.advance(batchOrd)
       pairsHolder(0)
     } finally newBB.unpersist()
   }
@@ -257,29 +241,17 @@ class MinHashIndex(spark: SparkSession, path: String, idCol: String,
     * anything older (including crash orphans) is deleted. No-op on an
     * empty index. */
   def compact(retainOrdGe: Option[Long] = None): Unit =
-      StoreLock.exclusive(new File(path)) {
-    val prev = currentGen()
-    postings().foreach { p =>
-      val kept = retainOrdGe.map(h => p.where(col("ord") >= h)).getOrElse(p)
-      val next = gens.newGenDir()
-      Par.byCols(kept, col("band"), col("bp"))
-        .write.partitionBy("band", "bp").parquet(next.getAbsolutePath)
-      gens.swapPointer(next.getName)
-      gens.reapExcept(Set(next.getName) ++ prev.map(_.getName))
-    }
+      gens.rewrite(present) { (cur, next) =>
+    val p = spark.read.parquet(cur.getAbsolutePath)
+    Par.byCols(retainOrdGe.map(h => p.where(col("ord") >= h)).getOrElse(p),
+        col("band"), col("bp"))
+      .write.partitionBy("band", "bp").parquet(next.getAbsolutePath)
   }
 
-  /** Count-triggered [[compact]] — the maintenance-loop policy
-    * ([[EdgeIndex.compactIfDue]] generalized): fires when the widest
-    * partition holds `maxBatches` uncompacted append files
-    * ([[GenStore.appendDepth]]; `>=` so the advertised read budget is
-    * never overshot), forwarding `retainOrdGe` to the compaction it
-    * triggers. A fire on an under-threshold store is a pure directory
-    * listing. Returns true when it compacted. */
+  /** Count-triggered [[compact]] ([[GenStore.compactIfDue]] over the
+    * widest partition's file count), forwarding `retainOrdGe` to the
+    * compaction it triggers. */
   def compactIfDue(maxBatches: Int,
-                   retainOrdGe: Option[Long] = None): Boolean = {
-    val due = gens.appendDepth() >= maxBatches
-    if (due) compact(retainOrdGe)
-    due
-  }
+                   retainOrdGe: Option[Long] = None): Boolean =
+    gens.compactIfDue(maxBatches)(compact(retainOrdGe))
 }

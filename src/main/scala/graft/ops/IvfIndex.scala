@@ -27,7 +27,7 @@ import org.apache.spark.sql.functions._
   *
   * Crash contract: a replayed append re-lands the same (id, vector, cell)
   * rows; [[search]] de-duplicates postings by id, so replay never changes
-  * results. Appends/compacts are serialized by a single driver.
+  * results. Appends and compacts serialize on [[StoreLock]].
   *
   * Reference analog: tiered index state that outlives any run — offloaded
   * ledger indexes (`tiered-storage/.../OffloadIndexBlockImpl.java`).
@@ -37,25 +37,22 @@ class IvfIndex(spark: SparkSession, path: String, idCol: String,
   import IvfIndex.{CompactStats, RecallPolicy}
 
   private val gens = new GenStore(path)
-
-  private def appendGen(): File = gens.liveOrCreate()
-
-  private def hasCells(g: File): Boolean =
-    Option(g.listFiles()).getOrElse(Array.empty)
-      .exists(f => f.isDirectory && f.getName.startsWith("cell="))
+  private val present = GenStore.partitionDir("cell")
 
   private def postingsIn(g: File): Option[DataFrame] =
-    if (hasCells(g)) Some(spark.read.parquet(g.getAbsolutePath)) else None
+    gens.readGeneration(spark, g.getName, present)
 
   // readLive (not postingsIn): the GenStore schema cache spares the
   // per-call footer-inference job — this is the per-micro-batch read path
-  private def postings(): Option[DataFrame] =
-    gens.readLive(spark, f => f.isDirectory && f.getName.startsWith("cell="))
+  private def postings(): Option[DataFrame] = gens.readLive(spark, present)
 
   /** The quantizer bound to generation `g`: the in-generation artifact
     * (written by [[centroids]] and carried/retrained by [[compact]]), or
-    * the legacy root-level `_centroids` for stores created before the
-    * quantizer moved inside the generation. */
+    * the root-level `_centroids` of a store created before the quantizer
+    * moved inside the generation. That fallback stays: `rag-ivf-store`
+    * lives under `Artifacts.baseDir`, which survives Bench runs, and
+    * without it an old store would retrain its quantizer and then
+    * silently probe the wrong cells. */
   private def quantizerIn(g: Option[File]): Option[Array[Array[Double]]] =
     (g.map(new File(_, "_quantizer")).toSeq :+ new File(path, "_centroids"))
       .find(d => new File(d, "_SUCCESS").exists())
@@ -68,23 +65,30 @@ class IvfIndex(spark: SparkSession, path: String, idCol: String,
   // retraining [[compact]] DROPS it: a budget priced for the old cell
   // layout says nothing about the new one
   override protected def probeBudgetGens: GenStore = gens
-  override protected def probeBudgetRoot: File = new File(path)
 
   /** Append one batch: each vector lands in the cell `cell` evaluates to.
     * One file per touched cell. A null cell fails the write loudly — Hive
     * partitioning would otherwise bury the row in the default partition
     * where search's cell filter can never find it (silent data loss). */
   def add(batch: DataFrame, cell: Column): Unit =
-      StoreLock.exclusive(new File(path)) {
-    val c = cell.cast("int")
-    val guarded = when(c.isNull, raise_error(
-      lit("IvfIndex.add: null cell assignment — row would be unsearchable")))
-      .otherwise(c)
-    batch.select(col(idCol), col(vecCol), guarded.as("cell"))
-      .transform(d => Par.byCols(d, col("cell")))
-      .write.mode("append").partitionBy("cell")
-      .parquet(appendGen().getAbsolutePath)
+      StoreLock.exclusive(gens.root) {
+    appendCells(assigned(batch, cell, "add"))
   }
+
+  /** (id, vec, cell) rows; a null cell fails the write loudly. */
+  private def assigned(batch: DataFrame, cell: Column,
+                       face: String): DataFrame = {
+    val c = cell.cast("int")
+    batch.select(col(idCol), col(vecCol), when(c.isNull, raise_error(lit(
+      s"IvfIndex.$face: null cell assignment — row would be unsearchable")))
+      .otherwise(c).as("cell"))
+  }
+
+  /** One file per touched cell into the live (or created) generation. */
+  private def appendCells(rows: DataFrame): Unit =
+    rows.transform(d => Par.byCols(d, col("cell")))
+      .write.mode("append").partitionBy("cell")
+      .parquet(gens.liveOrCreate().getAbsolutePath)
 
   /** Replay-idempotent append — the STREAMING face of [[add]]: batch ids
     * are anti-joined against the stored ids of only the touched cells
@@ -96,39 +100,29 @@ class IvfIndex(spark: SparkSession, path: String, idCol: String,
     * every later compaction/count. O(batch + touched-cell postings) work
     * against a corpus-sized store. */
   def addIdempotent(batch: DataFrame, cell: Column): Unit =
-      StoreLock.exclusive(new File(path)) {
-    val c = cell.cast("int")
-    val guarded = when(c.isNull, raise_error(
-      lit("IvfIndex.addIdempotent: null cell assignment — row would be " +
-        "unsearchable"))).otherwise(c)
+      StoreLock.exclusive(gens.root) {
     // two consumers (touched-cell collect, append) — materialize the
     // assignment once
-    val assigned = batch.select(col(idCol), col(vecCol), guarded.as("cell"))
-      .persist()
+    val rows = assigned(batch, cell, "addIdempotent").persist()
     try {
-      val touched = assigned.select(col("cell")).distinct()
+      val touched = rows.select(col("cell")).distinct()
         .collect().map(_.getInt(0))
       val storedIds = postings()
         .filter(_ => touched.nonEmpty)
         .map(_.where(col("cell").isin(touched.toSeq: _*))
           .select(col(idCol)).distinct())
-      val fresh = storedIds
-        .map(si => assigned.join(si, Seq(idCol), "left_anti"))
-        .getOrElse(assigned)
-      fresh.transform(d => Par.byCols(d, col("cell")))
-        .write.mode("append").partitionBy("cell")
-        .parquet(appendGen().getAbsolutePath)
-    } finally { assigned.unpersist(); () }
+      appendCells(storedIds
+        .map(si => rows.join(si, Seq(idCol), "left_anti"))
+        .getOrElse(rows))
+    } finally { rows.unpersist(); () }
   }
 
   /** Live generation path (plan audits / external scans) — the
     * [[SimHashIndex.currentGenerationPath]] convention. */
-  def currentGenerationPath: Option[String] =
-    gens.currentGen().map(_.getAbsolutePath)
+  def currentGenerationPath: Option[String] = gens.currentGenerationPath
 
   /** Whether any postings landed yet — a pure directory listing. */
-  def hasData: Boolean =
-    gens.hasData(f => f.isDirectory && f.getName.startsWith("cell="))
+  def hasData: Boolean = gens.hasData(present)
 
   /** The live postings as (id, vec, cell) — the store-reading face for
     * callers pairing their own probe machinery with the stored layout
@@ -239,7 +233,7 @@ class IvfIndex(spark: SparkSession, path: String, idCol: String,
       // artifact) and a fresh quantizer would silently probe cells the
       // postings were not laid out under. Listing-only check — no reason
       // to pay a parquet schema-inference job for an existence question.
-      if (gens.hasData(f => f.isDirectory && f.getName.startsWith("cell=")))
+      if (hasData)
         throw new IllegalStateException(
           s"IVF index at $path has postings but no persisted quantizer — " +
             "training one now would not match the stored cell layout")
@@ -279,82 +273,69 @@ class IvfIndex(spark: SparkSession, path: String, idCol: String,
     * pair, never a mix. Returns what the monitor saw (None when no policy
     * ran: no postings, no policy, or no owned quantizer). */
   def compact(recall: Option[RecallPolicy] = None): Option[CompactStats] =
-      StoreLock.exclusive(new File(path)) {
-    val prev = gens.currentGen()
-    postings().map { pAll =>
-      val p = pAll.dropDuplicates(idCol).persist()
-      try {
-        val cents = quantizerIn(prev)
-        val stats = (recall, cents) match {
-          case (Some(pol), Some(c)) =>
-            // deterministic hash-ordered sample: orderBy+limit compiles to
-            // TakeOrderedAndProject (per-partition top-N, no global sort)
-            val sample = p
-              .orderBy(xxhash64(col(idCol)))
-              .limit(pol.sampleN)
-              .select(col(idCol), col(vecCol))
-              .localCheckpoint(true)
-            val profile = Similarity.ivfProbeProfile(sample, p, idCol,
-              vecCol, c, Seq(pol.nprobe), pol.k)
-            val exact = Similarity.bruteForceTopK(sample, p, idCol, vecCol,
-              pol.k)
-            val rec = Similarity.probeRecalls(profile, exact, Seq(pol.nprobe))
-              .select(col("recall").cast("double")).head().getDouble(0)
-            Some(CompactStats(rec, retrained = rec < pol.target))
-          case _ => None
-        }
-        val next = gens.newGenDir()
-        val retrainTo =
-          if (stats.exists(_.retrained)) {
-            // retrains SIZE the quantizer to the corpus it now holds
-            // (√n rule, [[IvfIndex.grownCells]]): a store that grew 100×
-            // since training would otherwise keep its original cell
-            // count forever, and per-cell postings lists — hence every
-            // probe's candidate volume — would grow linearly with the
-            // corpus. The retrain is already a full rewrite, so growing
-            // the cell count costs nothing extra beyond the fit itself.
-            val grown = IvfIndex.grownCells(cents.get.length, p.count(),
-              recall.get.cellsPerSqrtN)
-            Some(KMeans.fit(p, idCol, vecCol, grown, recall.get.refitIters))
-          } else None
-        val rebucketed = retrainTo match {
-          case Some(nc) =>
-            p.withColumn("cell", KMeans.assignExpr(col(vecCol), nc))
-          case None => p
-        }
-        rebucketed.transform(d => Par.byCols(d, col("cell")))
-          .write.partitionBy("cell").parquet(next.getAbsolutePath)
-        // quantizer travels with its layout — written BEFORE the swap
-        retrainTo.orElse(cents).foreach(cs => KMeans.saveCentroids(spark,
-          new File(next, "_quantizer").getAbsolutePath, cs))
-        // the tuned probe budget travels with the LAYOUT it was priced
-        // for: carried verbatim when the layout is unchanged, DROPPED on
-        // a retrain (cells moved and grew — the old budget would price
-        // probes against a layout that no longer exists; the next
-        // [[tunedProbeBudget]] call re-prices against the new one)
-        if (retrainTo.isEmpty)
-          prev.foreach(ProbeBudgetFile.carry(_, next))
-        gens.swapPointer(next.getName)
-        gens.reapExcept(Set(next.getName) ++ prev.map(_.getName))
-        stats
-      } finally { p.unpersist(); () }
-    }.flatten
-  }
+      gens.rewrite(present) { (cur, next) =>
+    val p = spark.read.parquet(cur.getAbsolutePath)
+      .dropDuplicates(idCol).persist()
+    try {
+      val cents = quantizerIn(Some(cur))
+      val stats = (recall, cents) match {
+        case (Some(pol), Some(c)) =>
+          // deterministic hash-ordered sample: orderBy+limit compiles to
+          // TakeOrderedAndProject (per-partition top-N, no global sort)
+          val sample = p
+            .orderBy(xxhash64(col(idCol)))
+            .limit(pol.sampleN)
+            .select(col(idCol), col(vecCol))
+            .localCheckpoint(true)
+          val profile = Similarity.ivfProbeProfile(sample, p, idCol,
+            vecCol, c, Seq(pol.nprobe), pol.k)
+          val exact = Similarity.bruteForceTopK(sample, p, idCol, vecCol,
+            pol.k)
+          val rec = Similarity.probeRecalls(profile, exact, Seq(pol.nprobe))
+            .select(col("recall").cast("double")).head().getDouble(0)
+          Some(CompactStats(rec, retrained = rec < pol.target))
+        case _ => None
+      }
+      val retrainTo =
+        if (stats.exists(_.retrained)) {
+          // retrains SIZE the quantizer to the corpus it now holds
+          // (√n rule, [[IvfIndex.grownCells]]): a store that grew 100×
+          // since training would otherwise keep its original cell
+          // count forever, and per-cell postings lists — hence every
+          // probe's candidate volume — would grow linearly with the
+          // corpus. The retrain is already a full rewrite, so growing
+          // the cell count costs nothing extra beyond the fit itself.
+          val grown = IvfIndex.grownCells(cents.get.length, p.count(),
+            recall.get.cellsPerSqrtN)
+          Some(KMeans.fit(p, idCol, vecCol, grown, recall.get.refitIters))
+        } else None
+      val rebucketed = retrainTo match {
+        case Some(nc) =>
+          p.withColumn("cell", KMeans.assignExpr(col(vecCol), nc))
+        case None => p
+      }
+      rebucketed.transform(d => Par.byCols(d, col("cell")))
+        .write.partitionBy("cell").parquet(next.getAbsolutePath)
+      // quantizer travels with its layout — written BEFORE the swap
+      retrainTo.orElse(cents).foreach(cs => KMeans.saveCentroids(spark,
+        new File(next, "_quantizer").getAbsolutePath, cs))
+      // the tuned probe budget travels with the LAYOUT it was priced
+      // for: carried verbatim when the layout is unchanged, DROPPED on
+      // a retrain (cells moved and grew — the old budget would price
+      // probes against a layout that no longer exists; the next
+      // [[tunedProbeBudget]] call re-prices against the new one)
+      if (retrainTo.isEmpty) ProbeBudgetFile.carry(cur, next)
+      stats
+    } finally { p.unpersist(); () }
+  }.flatten
 
-  /** Count-triggered [[compact]] — the maintenance-loop policy
-    * ([[EdgeIndex.compactIfDue]] generalized): fires when the widest
-    * cell has accumulated `maxBatches` uncompacted append files
-    * ([[GenStore.appendDepth]]; `>=` so the advertised read budget is
-    * never overshot), forwarding the [[IvfIndex.RecallPolicy]] to the
-    * compaction it triggers (so the drift monitor runs exactly when the
-    * store is rewritten anyway). A fire on an under-threshold store is
-    * a pure directory listing. Returns true when it compacted. */
+  /** Count-triggered [[compact]] ([[GenStore.compactIfDue]] over the
+    * widest cell's file count), forwarding the [[IvfIndex.RecallPolicy]]
+    * to the compaction it triggers — so the drift monitor runs exactly
+    * when the store is rewritten anyway. */
   def compactIfDue(maxBatches: Int,
-                   recall: Option[RecallPolicy] = None): Boolean = {
-    val due = gens.appendDepth() >= maxBatches
-    if (due) compact(recall)
-    due
-  }
+                   recall: Option[RecallPolicy] = None): Boolean =
+    gens.compactIfDue(maxBatches)(compact(recall))
 }
 
 object IvfIndex {

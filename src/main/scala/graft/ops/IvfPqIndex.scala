@@ -52,8 +52,6 @@ final class IvfPqIndex(spark: SparkSession, path: String, idCol: String,
 
   private val gens = new GenStore(path)
 
-  private def appendGen(): File = gens.liveOrCreate()
-
   // per-generation quantizer memo: loading two tiny parquet artifacts per
   // op would be pure overhead on the hot path
   private val pairMemo = new java.util.concurrent.ConcurrentHashMap[
@@ -90,8 +88,8 @@ final class IvfPqIndex(spark: SparkSession, path: String, idCol: String,
     * same scan — under the LIVE generation's quantizers — and only
     * (id, codes, cell) is written, never the vector. */
   def add(batch: DataFrame): Unit =
-      StoreLock.exclusive(new File(path)) {
-    val g = appendGen()
+      StoreLock.exclusive(gens.root) {
+    val g = gens.liveOrCreate()
     // first write into a fresh generation pins the constructor pair to it,
     // so the generation is self-contained from its first row
     if (!new File(new File(g, "_pq"), "_SUCCESS").exists())
@@ -115,7 +113,6 @@ final class IvfPqIndex(spark: SparkSession, path: String, idCol: String,
   // shortlist quality, so the old budget's cleared recall no longer
   // holds)
   override protected def probeBudgetGens: GenStore = gens
-  override protected def probeBudgetRoot: File = new File(path)
 
   /** Rewrite to one file per cell in a fresh generation (atomic pointer
     * swap; the replaced generation stays readable for one cycle).
@@ -129,83 +126,72 @@ final class IvfPqIndex(spark: SparkSession, path: String, idCol: String,
     * (None when it did not run). */
   def compact(recallWith: Option[(DataFrame, IvfPqIndex.RecallPolicy)] = None)
       : Option[IvfPqIndex.CompactStats] =
-      StoreLock.exclusive(new File(path)) {
-    gens.currentGen().map { cur =>
-      val (liveModel, liveCoarse) = pairIn(cur)
-      val p = spark.read.parquet(cur.getAbsolutePath)
-        .dropDuplicates().persist()
-      try {
-        val clash = p.groupBy(col(idCol)).agg(count(lit(1)).as("__n"))
-          .where(col("__n") > 1).limit(1).collect()
-        if (clash.nonEmpty) throw new IllegalStateException(
-          s"IvfPqIndex at $path: id ${clash.head.get(0)} has conflicting " +
-            "code rows — ids are immutable once added (delete + rebuild to " +
-            "change a vector)")
-        val stats = recallWith.map { case (full, pol) =>
+      gens.rewrite(GenStore.partitionDir("cell")) { (cur, next) =>
+    val (liveModel, liveCoarse) = pairIn(cur)
+    val p = spark.read.parquet(cur.getAbsolutePath)
+      .dropDuplicates().persist()
+    try {
+      val clash = p.groupBy(col(idCol)).agg(count(lit(1)).as("__n"))
+        .where(col("__n") > 1).limit(1).collect()
+      if (clash.nonEmpty) throw new IllegalStateException(
+        s"IvfPqIndex at $path: id ${clash.head.get(0)} has conflicting " +
+          "code rows — ids are immutable once added (delete + rebuild to " +
+          "change a vector)")
+      val stats = recallWith.map { case (full, pol) =>
+        val storedFull = full
+          .join(p.select(col(idCol)), Seq(idCol), "left_semi")
+        val sample = storedFull.orderBy(xxhash64(col(idCol)))
+          .limit(pol.sampleN).select(col(idCol), col(vecCol))
+          .localCheckpoint(true)
+        val approx = searchAgainst(p, liveModel, liveCoarse, sample, full,
+          pol.nprobe, pol.k, pol.shortlist)
+          .select(col("query_id"), col("neighbor_id"))
+        val exact = Similarity.bruteForceTopK(sample, storedFull, idCol,
+          vecCol, pol.k).select(col("query_id"), col("neighbor_id"))
+        val slots = exact.count()
+        require(slots > 0, "IvfPqIndex.compact: recall undefined — the " +
+          "sample produced no exact neighbors")
+        val hits = approx.join(exact, Seq("query_id", "neighbor_id"))
+          .count()
+        IvfPqIndex.CompactStats(hits.toDouble / slots,
+          retrained = hits.toDouble / slots < pol.target)
+      }
+      val (outModel, rows) = stats match {
+        case Some(st) if st.retrained =>
+          val (full, pol) = recallWith.get
           val storedFull = full
             .join(p.select(col(idCol)), Seq(idCol), "left_semi")
-          val sample = storedFull.orderBy(xxhash64(col(idCol)))
-            .limit(pol.sampleN).select(col(idCol), col(vecCol))
-            .localCheckpoint(true)
-          val approx = searchAgainst(p, liveModel, liveCoarse, sample, full,
-            pol.nprobe, pol.k, pol.shortlist)
-            .select(col("query_id"), col("neighbor_id"))
-          val exact = Similarity.bruteForceTopK(sample, storedFull, idCol,
-            vecCol, pol.k).select(col("query_id"), col("neighbor_id"))
-          val slots = exact.count()
-          require(slots > 0, "IvfPqIndex.compact: recall undefined — the " +
-            "sample produced no exact neighbors")
-          val hits = approx.join(exact, Seq("query_id", "neighbor_id"))
-            .count()
-          IvfPqIndex.CompactStats(hits.toDouble / slots,
-            retrained = hits.toDouble / slots < pol.target)
-        }
-        val next = gens.newGenDir()
-        val (outModel, rows) = stats match {
-          case Some(st) if st.retrained =>
-            val (full, pol) = recallWith.get
-            val storedFull = full
-              .join(p.select(col(idCol)), Seq(idCol), "left_semi")
-            val nm = Pq.train(storedFull, idCol, vecCol, liveModel.m,
-              liveModel.codebooks(0).length, pol.refitIters)
-            // cells keep the coarse layout; only the codes re-encode
-            val re = storedFull.select(col(idCol), col(vecCol))
-              .join(p.select(col(idCol), col("cell")), Seq(idCol))
-              .select(col(idCol),
-                Pq.encodeExpr(col(vecCol), nm).as("codes"), col("cell"))
-            (nm, re)
-          case _ => (liveModel, p)
-        }
-        rows.transform(d => Par.byCols(d, col("cell")))
-          .write.partitionBy("cell").parquet(next.getAbsolutePath)
-        // quantizers travel with their layout — written BEFORE the swap
-        savePair(next, outModel, liveCoarse)
-        // the tuned probe budget travels with the quantizer pair it was
-        // priced for: carried verbatim when the pair is unchanged,
-        // DROPPED on a codebook retrain (the next tunedProbeBudget call
-        // re-prices against the new codes)
-        if (!stats.exists(_.retrained))
-          ProbeBudgetFile.carry(cur, next)
-        gens.swapPointer(next.getName)
-        gens.reapExcept(Set(next.getName, cur.getName))
-        stats
-      } finally { p.unpersist(); () }
-    }.flatten }
+          val nm = Pq.train(storedFull, idCol, vecCol, liveModel.m,
+            liveModel.codebooks(0).length, pol.refitIters)
+          // cells keep the coarse layout; only the codes re-encode
+          val re = storedFull.select(col(idCol), col(vecCol))
+            .join(p.select(col(idCol), col("cell")), Seq(idCol))
+            .select(col(idCol),
+              Pq.encodeExpr(col(vecCol), nm).as("codes"), col("cell"))
+          (nm, re)
+        case _ => (liveModel, p)
+      }
+      rows.transform(d => Par.byCols(d, col("cell")))
+        .write.partitionBy("cell").parquet(next.getAbsolutePath)
+      // quantizers travel with their layout — written BEFORE the swap
+      savePair(next, outModel, liveCoarse)
+      // the tuned probe budget travels with the quantizer pair it was
+      // priced for: carried verbatim when the pair is unchanged,
+      // DROPPED on a codebook retrain (the next tunedProbeBudget call
+      // re-prices against the new codes)
+      if (!stats.exists(_.retrained))
+        ProbeBudgetFile.carry(cur, next)
+      stats
+    } finally { p.unpersist(); () }
+  }.flatten
 
-  /** Count-triggered [[compact]] — the maintenance-loop policy
-    * ([[EdgeIndex.compactIfDue]] generalized): fires when the widest
-    * cell has accumulated `maxBatches` uncompacted append files
-    * ([[GenStore.appendDepth]]; `>=` so the advertised read budget is
-    * never overshot), forwarding the recall monitor to the compaction
-    * it triggers. A fire on an under-threshold store is a pure
-    * directory listing. Returns true when it compacted. */
+  /** Count-triggered [[compact]] ([[GenStore.compactIfDue]] over the
+    * widest cell's file count), forwarding the recall monitor to the
+    * compaction it triggers. */
   def compactIfDue(maxBatches: Int,
       recallWith: Option[(DataFrame, IvfPqIndex.RecallPolicy)] = None)
-      : Boolean = {
-    val due = gens.appendDepth() >= maxBatches
-    if (due) compact(recallWith)
-    due
-  }
+      : Boolean =
+    gens.compactIfDue(maxBatches)(compact(recallWith))
 
   /** IVFADC+R search over the stored codes: probed cells are collected
     * from the (tiny, broadcast) query set and pushed as a STATIC partition

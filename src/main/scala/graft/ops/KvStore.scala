@@ -100,12 +100,10 @@ class ParquetKvStore(spark: SparkSession, path: String, keyCols: Seq[String],
 
   // generation-directory layout + crash-safe pointer: shared [[GenStore]]
   private val gens = new GenStore(path)
-  private def currentGen(): Option[File] = gens.currentGen()
 
   /** Absolute path of the live generation, if any — lets [[BucketedKvStore]]
     * read all buckets in ONE multi-path scan instead of a union of N. */
-  private[ops] def currentGenPath: Option[String] =
-    currentGen().map(_.getAbsolutePath)
+  private[ops] def currentGenPath: Option[String] = gens.currentGenerationPath
 
   private def notExpired(df: DataFrame): DataFrame =
     KvStoreExpiry.notExpired(df, expireAtCol)
@@ -116,7 +114,7 @@ class ParquetKvStore(spark: SparkSession, path: String, keyCols: Seq[String],
   private[ops] def reap(): Unit =
     currentGenPath.foreach(g => merge(spark.read.parquet(g).limit(0)))
 
-  override def read(): DataFrame = currentGen() match {
+  override def read(): DataFrame = gens.currentGen() match {
     case Some(gen) =>
       notExpired(spark.read.parquet(gen.getAbsolutePath))
         .where(col(valueCol).isNotNull) // tombstones are bookkeeping
@@ -125,14 +123,24 @@ class ParquetKvStore(spark: SparkSession, path: String, keyCols: Seq[String],
       s"ParquetKvStore at $path has no state yet (no merge ran)")
   }
 
-  override def merge(lastPerKey: DataFrame): Unit = {
+  /** One merge = one [[GenStore.replaceLive]]: the merged state lands in
+    * a new generation and the pointer swaps onto it, so readers see the
+    * old complete generation until the rename lands, the new one after.
+    * The live generation AND the one it replaced are kept: a lazy
+    * DataFrame handed out by read() before this merge is still bound to
+    * the previous generation's files and must stay scannable. Anything
+    * older (including orphans from a crash between write and swap) is
+    * dead weight. A reader that holds one read() result across MORE than
+    * one merge cycle must re-resolve via read() — that is the documented
+    * staleness bound. */
+  override def merge(lastPerKey: DataFrame): Unit =
+      gens.replaceLive { (prevGen, gen) =>
     // expired entries are reaped BEFORE compaction — and on BOTH sides of
     // the merge, so an expired incoming entry cannot shadow-win against
     // live stored data (and vice versa) and the outcome is independent of
     // which side of a merge an entry arrives on; tombstones are kept and
     // compete by ord — the convergence guarantee
     val now = System.currentTimeMillis()
-    val prevGen = currentGen()
     // an incoming batch never carries the reap stamp; null-fill it so the
     // union is schema-stable whichever side a row arrives on (and a store
     // predating the horizon option null-fills the stored side)
@@ -163,18 +171,7 @@ class ParquetKvStore(spark: SparkSession, path: String, keyCols: Seq[String],
           .otherwise(coalesce(col("__reap_at"), lit(now + h))))
       case None => compacted
     }
-    val gen = gens.newGenDir()
     merged.write.mode("overwrite").parquet(gen.getAbsolutePath)
-    // atomic pointer swap: readers see the old complete generation until
-    // the rename lands, the new one after
-    gens.swapPointer(gen.getName)
-    // keep the live generation AND the one it replaced: a lazy DataFrame
-    // handed out by read() before this merge is still bound to the previous
-    // generation's files and must stay scannable. Anything older (including
-    // orphans from a crash between write and swap) is dead weight. A reader
-    // that holds one read() result across MORE than one merge cycle must
-    // re-resolve via read() — that is the documented staleness bound.
-    gens.reapExcept(Set(gen.getName) ++ prevGen.map(_.getName))
   }
 }
 
@@ -239,10 +236,9 @@ class BucketedKvStore(spark: SparkSession, path: String, keyCols: Seq[String],
   private def bucketExpr: Column =
     pmod(hash(keyCols.map(col): _*), lit(buckets))
 
-  private def bucketStore(b: Int): ParquetKvStore =
-    new ParquetKvStore(spark,
-      new File(path, f"bucket-$b%05d").getAbsolutePath,
-      keyCols, ord, valueCol, expireAtCol, tombstoneRetainMs)
+  private def bucketStore(dir: File): ParquetKvStore =
+    new ParquetKvStore(spark, dir.getAbsolutePath, keyCols, ord, valueCol,
+      expireAtCol, tombstoneRetainMs)
 
   override def merge(lastPerKey: DataFrame): Unit = {
     // ONE pass over the batch writes it partitioned by bucket; only the
@@ -264,7 +260,8 @@ class BucketedKvStore(spark: SparkSession, path: String, keyCols: Seq[String],
       // serial Spark jobs
       inParallel(touched.toSeq) { case (b, slice) =>
         // reading the partition dir directly omits the __b column
-        bucketStore(b).merge(spark.read.parquet(slice.getAbsolutePath))
+        bucketStore(new File(path, f"bucket-$b%05d"))
+          .merge(spark.read.parquet(slice.getAbsolutePath))
       }
     } finally Fs.deleteRecursively(staging)
   }
@@ -276,10 +273,7 @@ class BucketedKvStore(spark: SparkSession, path: String, keyCols: Seq[String],
     * Tombstones are reaped only past `tombstoneRetainMs` (never, when
     * unset): they must outlive any replayable older upsert to keep
     * convergence. */
-  def reapAll(): Unit =
-    inParallel(bucketDirs().toSeq)(b =>
-      new ParquetKvStore(spark, b.getAbsolutePath, keyCols, ord,
-        valueCol, expireAtCol, tombstoneRetainMs).reap())
+  def reapAll(): Unit = inParallel(bucketDirs().toSeq)(bucketStore(_).reap())
 
   private def inParallel[A](work: Seq[A])(f: A => Unit): Unit =
     Fs.inParallel(work, maxThreads = 8)(f)
@@ -290,9 +284,7 @@ class BucketedKvStore(spark: SparkSession, path: String, keyCols: Seq[String],
       .sortBy(_.getName)
 
   override def read(): DataFrame = {
-    val gens = bucketDirs()
-      .flatMap(b => new ParquetKvStore(spark, b.getAbsolutePath, keyCols, ord,
-        valueCol, expireAtCol).currentGenPath)
+    val gens = bucketDirs().flatMap(bucketStore(_).currentGenPath)
     if (gens.isEmpty) throw new IllegalStateException(
       s"BucketedKvStore at $path has no state yet (no merge ran)")
     KvStoreExpiry.notExpired(spark.read.parquet(gens.toIndexedSeq: _*),

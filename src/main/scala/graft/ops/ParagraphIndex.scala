@@ -24,9 +24,10 @@ import org.apache.spark.sql.functions._
   * the drop rule exempts the occurrence that equals the stored keeper, so
   * the replay returns the same excision and the anti-join lands the
   * remainder exactly once — the store converges to one keeper per unit
-  * (arbitrated by (ord, id, pos) at read). Appends are serialized by a
-  * single driver (the shared cron-loop contract); [[compact]] rewrites one
-  * file per partition under the atomic pointer swap.
+  * (arbitrated by (ord, id, pos) at read). Appends and compaction
+  * serialize across threads and processes on [[StoreLock]]
+  * ([[GenStore.append]]); [[compact]] rewrites one file per partition
+  * under the atomic pointer swap.
   */
 final class ParagraphIndex(spark: SparkSession, path: String,
                            idCol: String, textCol: String,
@@ -34,6 +35,7 @@ final class ParagraphIndex(spark: SparkSession, path: String,
                            strictOrd: Boolean = false) {
 
   private val gens = new GenStore(path)
+  private val present = GenStore.partitionDir("php")
 
   // the shared ord-discipline advisory: cross-batch keep-first is
   // arbitrated by min(struct(ord, id, pos)) at read and compact — a
@@ -44,31 +46,33 @@ final class ParagraphIndex(spark: SparkSession, path: String,
 
   private def php = concat(lit("p"), substring(col("ph"), 1, 1))
 
-  /** Stored keepers, optionally pruned to the `php` partitions a batch
-    * touches BEFORE the arbitration aggregate — an isin on the partition
-    * column prunes directories at planning time, so both the scan and the
-    * per-ph min run over only the touched slices (the un-pruned face
-    * aggregated the whole store every probe). */
+  /** One arbitrated keeper (ph, id, pos, ord) per unit hash: the
+    * smallest (ord, id, pos) occurrence. */
+  private def arbitrated(rows: DataFrame): DataFrame =
+    rows.groupBy(col("ph"))
+      .agg(min(struct(col("ord"), col(idCol), col("pos"))).as("__k"))
+      .select(col("ph"), col(s"__k.$idCol").as(idCol),
+        col("__k.pos").as("pos"), col("__k.ord").as("ord"))
+
+  /** Stored keepers as (ph, __kid, __kpos), optionally pruned to the
+    * `php` partitions a batch touches BEFORE the arbitration aggregate —
+    * an isin on the partition column prunes directories at planning
+    * time, so both the scan and the per-ph min run over only the touched
+    * slices (the un-pruned face aggregated the whole store every probe). */
   private def storedKeepers(
       phpTouched: Option[Seq[String]] = None): Option[DataFrame] =
-    gens.readLive(spark,
-        f => f.isDirectory && f.getName.startsWith("php="))
-      .map { df =>
-        phpTouched.map(t => df.where(col("php").isin(t: _*))).getOrElse(df)
-          .groupBy(col("ph"))
-          .agg(min(struct(col("ord"), col(idCol), col("pos"))).as("__k"))
-          .select(col("ph"), col(s"__k.$idCol").as("__kid"),
-            col("__k.pos").as("__kpos"))
-      }
+    gens.readLive(spark, present).map { df =>
+      arbitrated(phpTouched.map(t => df.where(col("php").isin(t: _*)))
+          .getOrElse(df))
+        .select(col("ph"), col(idCol).as("__kid"), col("pos").as("__kpos"))
+    }
 
   /** Probe + excise + append one batch; returns the batch's documents
     * with every non-first unit occurrence excised (same contract as
     * [[ParagraphDedup.excise]]: untouched docs verbatim, fully-excised
     * docs as empty rows). */
   def addAndExcise(batch: DataFrame, ord: Long): DataFrame =
-      StoreLock.exclusive(new java.io.File(path)) {
-    hwm.check(ord)
-    gens.liveOrCreate()
+      gens.append(hwm, ord) { gen =>
     // materialized once per add (batch-sized): the touched-prefix collect,
     // the novel write, and the returned excise frame each re-ran the
     // explode + md5 subtree when it was lazy (~4 evaluations per add)
@@ -79,14 +83,12 @@ final class ParagraphIndex(spark: SparkSession, path: String,
     // store keepers for ONLY the partitions this batch's hashes touch —
     // pruned on the php partition column inside storedKeepers, so the
     // scan AND the arbitration aggregate cover just the touched slices
-    val pruned =
-      if (gens.currentGen().isEmpty) None
-      else {
-        val touched = u.select(substring(col("ph"), 1, 1)).distinct()
-          .collect().map(r => "p" + r.getString(0))
-        if (touched.isEmpty) None
-        else storedKeepers(Some(touched.toSeq))
-      }
+    val pruned = {
+      val touched = u.select(substring(col("ph"), 1, 1)).distinct()
+        .collect().map(r => "p" + r.getString(0))
+      if (touched.isEmpty) None
+      else storedKeepers(Some(touched.toSeq))
+    }
 
     // batch-first occurrence per unit (map-side combinable min)
     val first = u.groupBy(col("ph"))
@@ -124,8 +126,7 @@ final class ParagraphIndex(spark: SparkSession, path: String,
       .withColumn("php", php)
       .transform(d => Par.byCols(d, col("php")))
       .write.mode("append").partitionBy("php")
-      .parquet(gens.currentGen().get.getAbsolutePath)
-    hwm.advance(ord)
+      .parquet(gen.getAbsolutePath)
 
     exciseByDrops(batch, idCol, textCol, sep, u, drops)
   }
@@ -140,38 +141,18 @@ final class ParagraphIndex(spark: SparkSession, path: String,
 
   /** Rewrite the live generation to one arbitrated keeper per unit, one
     * file per partition; keeps the replaced generation for one cycle. */
-  def compact(): Unit = StoreLock.exclusive(new java.io.File(path)) {
-    gens.currentGen().foreach { cur =>
-    val next = gens.newGenDir()
-    spark.read.parquet(cur.getAbsolutePath)
-      .groupBy(col("ph"))
-      .agg(min(struct(col("ord"), col(idCol), col("pos"))).as("__k"))
-      .select(col("ph"), col(s"__k.$idCol").as(idCol),
-        col("__k.pos").as("pos"), col("__k.ord").as("ord"), php.as("php"))
+  def compact(): Unit = gens.rewrite(present) { (cur, next) =>
+    arbitrated(spark.read.parquet(cur.getAbsolutePath))
+      .withColumn("php", php)
       .transform(d => Par.byCols(d, col("php")))
       .write.mode("overwrite").partitionBy("php")
       .parquet(next.getAbsolutePath)
-    gens.swapPointer(next.getName)
-    gens.reapExcept(Set(next.getName, cur.getName))
-  } }
-
-  /** Count-triggered compaction — the maintenance-loop policy
-    * ([[EdgeIndex.compactIfDue]] generalized to the probe stores):
-    * compact when the widest partition has accumulated `maxBatches`
-    * uncompacted append files ([[GenStore.appendDepth]]); price K with
-    * [[CompactionPolicy.maxBatches]] and this family's measured
-    * per-append read cost ([[CompactionPolicy.ProbeStorePerBatchReadCostS]]
-    * — milder than the edge store's union-plan growth, so K is larger).
-    * Each cron fire is a pure directory listing unless the store is
-    * actually due; `>=` so the advertised budget is never overshot.
-    * Returns true when it compacted. */
-  def compactIfDue(maxBatches: Int): Boolean = {
-    val due = gens.appendDepth() >= maxBatches
-    if (due) compact()
-    due
   }
 
+  /** [[GenStore.compactIfDue]] over the widest partition's file count. */
+  def compactIfDue(maxBatches: Int): Boolean =
+    gens.compactIfDue(maxBatches)(compact())
+
   /** Live generation path (plan audits / external scans). */
-  def currentGenerationPath: Option[String] =
-    gens.currentGen().map(_.getAbsolutePath)
+  def currentGenerationPath: Option[String] = gens.currentGenerationPath
 }

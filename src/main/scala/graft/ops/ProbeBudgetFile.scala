@@ -49,11 +49,10 @@ object ProbeBudgetFile {
   * vs codebook retrain — the carry/drop decision lives there, not
   * here). */
 trait ProbeBudgeted {
-  /** The store's generation pointer (the budget lives in the live
-    * generation, beside the quantizer artifacts). */
+  /** The store's generations (the budget lives in the live generation,
+    * beside the quantizer artifacts; the write serializes under the
+    * root's [[StoreLock]]). */
   protected def probeBudgetGens: GenStore
-  /** The store root (the write serializes under its [[StoreLock]]). */
-  protected def probeBudgetRoot: File
 
   /** The live generation's tuned probe budget: (nprobe, the
     * recall/agreement it cleared when tuned), or None when never tuned
@@ -72,7 +71,7 @@ trait ProbeBudgeted {
     * the lock they already hold. Same constraint for
     * [[tunedProbeBudget]], which calls this on the tune path. */
   def saveProbeBudget(nprobe: Int, recall: Double): Unit =
-    StoreLock.exclusive(probeBudgetRoot) {
+    StoreLock.exclusive(probeBudgetGens.root) {
       ProbeBudgetFile.write(probeBudgetGens.liveOrCreate(), nprobe, recall)
     }
 

@@ -39,14 +39,15 @@ import org.apache.spark.sql.functions._
   * append: self-matches are exempted by id, so verdicts are unchanged
   * (a doc this batch deduped still finds its in-batch keeper in the
   * store), and the append re-lands behind an id anti-join — the store
-  * converges. Appends are serialized by a single driver (the shared
-  * cron-loop contract); [[compact]] rewrites one file per partition under
-  * the atomic pointer swap.
+  * converges. Appends and compaction serialize across threads and
+  * processes on [[StoreLock]] ([[GenStore.append]]); [[compact]] rewrites
+  * one file per partition under the atomic pointer swap.
   */
 final class SimHashIndex(spark: SparkSession, path: String, idCol: String,
                          maxHamming: Int = 1, strictOrd: Boolean = false) {
 
   private val gens = new GenStore(path)
+  private val present = GenStore.partitionDir("pb")
 
   // the shared ord-discipline advisory: the dup flag is EXISTS-EARLIER,
   // where "earlier" is (earlier batch, or smaller id in-batch) — a
@@ -75,9 +76,7 @@ final class SimHashIndex(spark: SparkSession, path: String, idCol: String,
     * HAS a fingerprint: (id, simhash, is_dup, keeper) — keeper the
     * smallest earlier id within `maxHamming`, null for novel docs. */
   def addAndDedup(batch: DataFrame, textCol: String, ord: Long): DataFrame =
-      StoreLock.exclusive(new java.io.File(path)) {
-    hwm.check(ord)
-    gens.liveOrCreate()
+      gens.append(hwm, ord) { gen =>
     // materialize the (md5-heavy) fingerprint subtree ONCE: `m` below
     // covers the posting consumers, but the verdict join re-reads `sh`
     // itself — lazy, that re-ran the per-token hashing over the batch a
@@ -85,81 +84,77 @@ final class SimHashIndex(spark: SparkSession, path: String, idCol: String,
     val sh = SimHashDedup.simhash16(batch, idCol, textCol)
       .localCheckpoint(true)
     val m = melt(sh).persist()
+    try {
+      // probe planning: the touched bucket keys, collected ONCE
+      val touched = m.select(bucketKey.as("k")).distinct()
+        .collect().map(_.getLong(0))
 
-    // probe planning: the touched bucket keys, collected ONCE
-    val touched = m.select(bucketKey.as("k")).distinct()
-      .collect().map(_.getLong(0))
+      // pb isin stays a literal partition filter (planning-time pruning,
+      // never codegen'd); the exact-bucket narrowing goes through the
+      // reference-based set so the probe plan's generated source is
+      // byte-stable across batches ([[graft.functions.LongSetContains]])
+      val stored = gens.readLive(spark, present)
+        .filter(_ => touched.nonEmpty)
+        .map(_.where(col("pb").isin(
+            touched.map(k => s"b${k / 65536}").distinct.toSeq: _*)
+            && graft.functions.Params.inLongSet(bucketKey, touched.toSet)))
+      // ≤ 2^(16−width) rows per bucket: per-fingerprint min id
+      val storeAgg = stored.map(_.groupBy(col("blk"), col("v"), col("simhash"))
+        .agg(min(col(idCol)).as("cand")))
 
-    // pb isin stays a literal partition filter (planning-time pruning,
-    // never codegen'd); the exact-bucket narrowing goes through the
-    // reference-based set so the probe plan's generated source is
-    // byte-stable across batches ([[graft.functions.LongSetContains]])
-    val stored = gens.readLive(spark,
-        f => f.isDirectory && f.getName.startsWith("pb="))
-      .filter(_ => touched.nonEmpty)
-      .map(_.where(col("pb").isin(
-          touched.map(k => s"b${k / 65536}").distinct.toSeq: _*)
-          && graft.functions.Params.inLongSet(bucketKey, touched.toSet)))
-    // ≤ 2^(16−width) rows per bucket: per-fingerprint min id
-    val storeAgg = stored.map(_.groupBy(col("blk"), col("v"), col("simhash"))
-      .agg(min(col(idCol)).as("cand")))
+      def ham(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =
+        bit_count(a.bitwiseXOR(b))
 
-    def ham(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =
-      bit_count(a.bitwiseXOR(b))
+      // store-side matches (self exempted → replay-stable verdicts)
+      val fromStore = storeAgg.map { sa =>
+        m.join(sa.withColumnRenamed("simhash", "s2"), Seq("blk", "v"))
+          .where(ham(col("simhash"), col("s2")) <= maxHamming &&
+            col("cand") =!= col(idCol))
+          .select(col(idCol), col("cand"))
+      }.getOrElse(spark.emptyDataFrame
+        .withColumn(idCol, lit(0L)).withColumn("cand", lit(0L))
+        .limit(0))
 
-    // store-side matches (self exempted → replay-stable verdicts)
-    val fromStore = storeAgg.map { sa =>
-      m.join(sa.withColumnRenamed("simhash", "s2"), Seq("blk", "v"))
+      // batch-internal matches against per-fingerprint batch minima
+      val batchAgg = m.groupBy(col("blk"), col("v"), col("simhash"))
+        .agg(min(col(idCol)).as("cand"))
+      val fromBatch = m
+        .join(batchAgg.withColumnRenamed("simhash", "s2"), Seq("blk", "v"))
         .where(ham(col("simhash"), col("s2")) <= maxHamming &&
-          col("cand") =!= col(idCol))
+          col("cand") < col(idCol))
         .select(col(idCol), col("cand"))
-    }.getOrElse(spark.emptyDataFrame
-      .withColumn(idCol, lit(0L)).withColumn("cand", lit(0L))
-      .limit(0))
 
-    // batch-internal matches against per-fingerprint batch minima
-    val batchAgg = m.groupBy(col("blk"), col("v"), col("simhash"))
-      .agg(min(col(idCol)).as("cand"))
-    val fromBatch = m
-      .join(batchAgg.withColumnRenamed("simhash", "s2"), Seq("blk", "v"))
-      .where(ham(col("simhash"), col("s2")) <= maxHamming &&
-        col("cand") < col(idCol))
-      .select(col(idCol), col("cand"))
+      val dups = fromStore.union(fromBatch)
+        .groupBy(col(idCol)).agg(min(col("cand")).as("keeper"))
 
-    val dups = fromStore.union(fromBatch)
-      .groupBy(col(idCol)).agg(min(col("cand")).as("keeper"))
+      val verdict = sh.join(dups, Seq(idCol), "left")
+        .select(col(idCol), col("simhash"),
+          col("keeper").isNotNull.as("is_dup"), col("keeper"))
 
-    val verdict = sh.join(dups, Seq(idCol), "left")
-      .select(col(idCol), col("simhash"),
-        col("keeper").isNotNull.as("is_dup"), col("keeper"))
-
-    // EVERY batch doc's postings append once (the id anti-join makes a
-    // crash replay a no-op — a replayed doc's rows sit in exactly the
-    // buckets the pruned read fetched)
-    val storedIds = stored.map(_.select(col(idCol)).distinct())
-    val fresh = storedIds
-      .map(si => m.join(si, Seq(idCol), "left_anti"))
-      .getOrElse(m)
-    // paramLong keeps the append plan's generated source batch-stable;
-    // the pre-write repartition on the partition column lands ONE file
-    // per touched leaf per append (the appendDepth contract) instead of
-    // one per (task × leaf)
-    fresh.withColumn("ord", graft.functions.Params.paramLong(ord))
-      .withColumn("pb", concat(lit("b"), col("blk")))
-      .repartition(blocks, col("pb"))
-      .write.mode("append").partitionBy("pb")
-      .parquet(gens.currentGen().get.getAbsolutePath)
-    hwm.advance(ord)
-    m.unpersist()
-    verdict
+      // EVERY batch doc's postings append once (the id anti-join makes a
+      // crash replay a no-op — a replayed doc's rows sit in exactly the
+      // buckets the pruned read fetched)
+      val storedIds = stored.map(_.select(col(idCol)).distinct())
+      val fresh = storedIds
+        .map(si => m.join(si, Seq(idCol), "left_anti"))
+        .getOrElse(m)
+      // paramLong keeps the append plan's generated source batch-stable;
+      // the pre-write repartition on the partition column lands ONE file
+      // per touched leaf per append (the appendDepth contract) instead of
+      // one per (task × leaf)
+      fresh.withColumn("ord", graft.functions.Params.paramLong(ord))
+        .withColumn("pb", concat(lit("b"), col("blk")))
+        .repartition(blocks, col("pb"))
+        .write.mode("append").partitionBy("pb")
+        .parquet(gen.getAbsolutePath)
+      verdict
+    } finally { m.unpersist(); () }
   }
 
   /** Rewrite the live generation to distinct posting rows (crash-replay
     * residue collapsed), one file per partition; keeps the replaced
     * generation for one cycle. */
-  def compact(): Unit = StoreLock.exclusive(new java.io.File(path)) {
-    gens.currentGen().foreach { cur =>
-    val next = gens.newGenDir()
+  def compact(): Unit = gens.rewrite(present) { (cur, next) =>
     spark.read.parquet(cur.getAbsolutePath)
       // full-row distinct: true replays collapse, while a conflicting
       // re-add (same id, different fingerprint) stays visible rather than
@@ -170,27 +165,12 @@ final class SimHashIndex(spark: SparkSession, path: String, idCol: String,
       .transform(d => Par.byCols(d, col("pb")))
       .write.mode("overwrite").partitionBy("pb")
       .parquet(next.getAbsolutePath)
-    gens.swapPointer(next.getName)
-    gens.reapExcept(Set(next.getName, cur.getName))
-  } }
-
-  /** Count-triggered compaction — the maintenance-loop policy
-    * ([[EdgeIndex.compactIfDue]] generalized to the probe stores):
-    * compact when the widest partition has accumulated `maxBatches`
-    * uncompacted append files ([[GenStore.appendDepth]]); price K with
-    * [[CompactionPolicy.maxBatches]] and this family's measured
-    * per-append read cost ([[CompactionPolicy.ProbeStorePerBatchReadCostS]]
-    * — milder than the edge store's union-plan growth, so K is larger).
-    * Each cron fire is a pure directory listing unless the store is
-    * actually due; `>=` so the advertised budget is never overshot.
-    * Returns true when it compacted. */
-  def compactIfDue(maxBatches: Int): Boolean = {
-    val due = gens.appendDepth() >= maxBatches
-    if (due) compact()
-    due
   }
 
+  /** [[GenStore.compactIfDue]] over the widest partition's file count. */
+  def compactIfDue(maxBatches: Int): Boolean =
+    gens.compactIfDue(maxBatches)(compact())
+
   /** Live generation path (plan audits / external scans). */
-  def currentGenerationPath: Option[String] =
-    gens.currentGen().map(_.getAbsolutePath)
+  def currentGenerationPath: Option[String] = gens.currentGenerationPath
 }

@@ -113,56 +113,27 @@ object StoreFence {
   private def readOwner(afs: AdvisoryFs, root: String): Option[Owner] =
     afs.read(ownerPath(afs, root)).map { rawFull =>
       val raw = rawFull.trim
+      def reject(what: String) = new FencedStoreException(
+        s"$what owner file at ${ownerPath(afs, root)}: '$raw' — " +
+          "refusing to write")
       raw.split('|') match {
-        // current format: v2|epoch|ownerId|nonce|heartbeatMs|#. The
+        // the one format: v2|epoch|ownerId|nonce|heartbeatMs|#. The
         // terminator proves the heartbeat field arrived whole; a v2
         // record missing it (any truncation under a non-atomic replace)
         // falls through to the v2-prefix reject case below.
         case Array("v2", e, id, n, hb, "#") if e.nonEmpty && hb.nonEmpty =>
           try Owner(e.toLong, id, n, hb.toLong)
-          catch { case _: NumberFormatException =>
-            throw new FencedStoreException(
-              s"unparseable owner file at ${ownerPath(afs, root)}: " +
-                s"'$raw' — refusing to write")
-          }
+          catch { case _: NumberFormatException => throw reject("unparseable") }
         // anything else leading with the v2 marker is a torn v2 record:
         // REJECT. This case is what closes the truncated-record ADMIT
         // path — a prefix cut mid-heartbeat (`v2|7|driver|ab12|17`)
         // must not parse as a complete record from 1970.
         case fields if fields.headOption.contains("v2") =>
-          throw new FencedStoreException(
-            s"torn v2 owner file at ${ownerPath(afs, root)}: '$raw' — " +
-              "refusing to write")
-        // legacy pre-terminator format: epoch|ownerId|nonce|heartbeatMs.
-        // Kept readable for stores last written by old code; note a
-        // LEGACY record truncated mid-heartbeat is indistinguishable
-        // from a complete legacy record (the hazard v2 closes). The
-        // window is ONE attach wide: every write path emits v2
-        // ([[writeOwner]]), so the store's first acquire — or the
-        // incumbent's first heartbeat — migrates the record on disk
-        // (HadoopFsSpec pins the acquire-migrates case for both legacy
-        // forms); only a store nobody has touched since the upgrade
-        // still carries the ambiguity.
-        case Array(e, id, n, hb) if e.nonEmpty && hb.nonEmpty =>
-          try Owner(e.toLong, id, n, hb.toLong)
-          catch { case _: NumberFormatException =>
-            throw new FencedStoreException(
-              s"unparseable owner file at ${ownerPath(afs, root)}: " +
-                s"'$raw' — refusing to write")
-          }
-        // legacy nonce-less format: reads as an empty nonce, which never
-        // equals a live process's nonce — a legacy record is always
-        // "someone else's", the fail-safe direction
-        case Array(e, id, hb) if e.nonEmpty && hb.nonEmpty =>
-          try Owner(e.toLong, id, "", hb.toLong)
-          catch { case _: NumberFormatException =>
-            throw new FencedStoreException(
-              s"unparseable owner file at ${ownerPath(afs, root)}: " +
-                s"'$raw' — refusing to write")
-          }
-        case _ => throw new FencedStoreException(
-          s"unparseable owner file at ${ownerPath(afs, root)}: '$raw' — " +
-            "refusing to write")
+          throw reject("torn v2")
+        // everything else — including the retired pre-terminator
+        // (`epoch|id|nonce|hb`) and nonce-less (`epoch|id|hb`) records —
+        // is unparseable: REJECT; a forced acquire recovers past it
+        case _ => throw reject("unparseable")
       }
     }
 
@@ -202,9 +173,9 @@ object StoreFence {
         try readOwner(afs, root)
         catch {
           case _: FencedStoreException if force =>
-            // epoch field: first for legacy records, second behind the
-            // `v2` marker — a torn v2 prefix keeps its marker, so the
-            // salvage still resumes past the crashed holder's epoch
+            // epoch field: first for a retired pre-v2 record, second
+            // behind the `v2` marker — a torn v2 prefix keeps its marker,
+            // so the salvage still resumes past the crashed holder's epoch
             val salvaged = afs.read(ownerPath(afs, root))
               .map(_.trim.split('|').toSeq)
               .map(fs => if (fs.headOption.contains("v2")) fs.drop(1) else fs)

@@ -6,7 +6,8 @@ import java.nio.file.StandardOpenOption
 
 /** Cross-process WRITE-face serialization for the single-writer persisted
   * stores (exact dedup, LSH postings, components, BM25, IVF/IVF-PQ,
-  * SimHash, paragraph index).
+  * SimHash, paragraph index, KV merges): [[GenStore.append]] and
+  * [[GenStore.rewrite]] run under it.
   *
   * Those stores append with `mode("append")` straight into the live
   * generation directory. Two concurrent append JOBS into one directory

@@ -84,40 +84,6 @@ class Bm25Spec extends SparkSuite {
     assert(idx.search(qs, 10).collect().toSet == oneShot)
   }
 
-  test("pre-per-ord stores are detected: marker stamped at creation, absence flags risk") {
-    // a store created by CURRENT code carries the _stats_format marker
-    // from its first add, so legacyStatsRisk stays false for its lifetime
-    val dir = java.nio.file.Files.createTempDirectory("bm25fmt").toFile
-    val idx = new Bm25Index(spark, dir.getAbsolutePath, "id", "text")
-    idx.add(corpus.where(col("id") <= 3), 1L)
-    assert(new java.io.File(dir, "_stats_format").exists())
-    assert(!idx.legacyStatsRisk)
-    idx.compact()
-    assert(!idx.legacyStatsRisk)
-
-    // a store predating the marker (stats data, no marker) may carry the
-    // pre-per-ord AGGREGATE stats row — the add path must flag it (and
-    // warn) rather than silently risking the max-ord replay collision;
-    // no in-place migration can tell an aggregate from a batch row, so
-    // the documented safe path is a rebuild
-    new java.io.File(dir, "_stats_format").delete()
-    assert(idx.legacyStatsRisk)
-    idx.add(corpus.where(col("id") > 3), 2L) // warns, never bricks
-    assert(idx.legacyStatsRisk, "an add must NOT silence the risk flag")
-
-    // a pre-marker store with a generation but NO stats data yet (all
-    // adds were empty) has nothing a legacy aggregate could hide in:
-    // the first real add stamps the marker instead of flagging forever
-    val dir2 = java.nio.file.Files.createTempDirectory("bm25fmt2").toFile
-    val idx2 = new Bm25Index(spark, dir2.getAbsolutePath, "id", "text")
-    idx2.add(corpus.limit(0), 1L) // empty: creates the gen, no stats
-    new java.io.File(dir2, "_stats_format").delete()
-    assert(!idx2.legacyStatsRisk)
-    idx2.add(corpus.where(col("id") <= 3), 2L)
-    assert(new java.io.File(dir2, "_stats_format").exists())
-    assert(!idx2.legacyStatsRisk)
-  }
-
   test("streamed ingest (foreachBatch, epoch = ord) equals one-shot search") {
     val topic = java.nio.file.Files.createTempDirectory("bm25-topic")
       .toFile.getAbsolutePath

@@ -109,13 +109,21 @@ class FencingSpec extends SparkSuite {
     assert(readOwnerFile(root.getPath) == "v2|99|driver-b|beefbeefbeef|12345|#",
       "a fenced heartbeat must leave the successor's record untouched")
 
-    // (5) a legacy 3-field (nonce-less) record is always someone
-    // else's, even under this driver's own id at the held epoch —
-    // the fail-safe parse direction
-    writeOwnerFile(root.getPath,
-      s"${e0 + 5}|driver-a|${System.currentTimeMillis()}")
-    val lg = intercept[FencedStoreException](StoreFence.verify(root))
-    assert(lg.getMessage.contains("DIFFERENT"))
+    // (5) a retired 3-field (nonce-less) or 4-field (pre-terminator)
+    // record, even under this driver's own id at the held epoch, is
+    // unparseable: verify and an ordinary acquire refuse it, and a
+    // forced acquire takes over past it, resuming from its first field
+    val hb = System.currentTimeMillis()
+    Seq(s"${e0 + 5}|driver-a|$hb", s"${e0 + 6}|driver-a|$myNonce|$hb")
+      .foreach { record =>
+        writeOwnerFile(root.getPath, record)
+        val lg = intercept[FencedStoreException](StoreFence.verify(root))
+        assert(lg.getMessage.contains("unparseable"), lg.getMessage)
+        intercept[FencedStoreException](StoreFence.acquire(root, "driver-a"))
+        val first = record.takeWhile(_ != '|').toLong
+        assert(StoreFence.acquire(root, "driver-a", force = true) == first + 1)
+        StoreFence.verify(root)
+      }
     StoreFence.release(root, deleteOwnerFile = true)
   }
 

@@ -53,7 +53,7 @@ class HadoopFsSpec extends AnyFunSuite {
     intercept[FencedStoreException](
       StoreFence.acquire(afs, root, "driver-b", 60000L, false))
     // a remote takeover (foreign nonce, higher epoch) fences this holder
-    val successor = s"99|driver-b|beefbeefbeef|$now"
+    val successor = s"v2|99|driver-b|beefbeefbeef|$now|#"
     afs.write(afs.child(root, "_owner"), successor)
     intercept[FencedStoreException](StoreFence.verify(afs, root))
     intercept[FencedStoreException](StoreFence.heartbeat(afs, root))
@@ -110,30 +110,28 @@ class HadoopFsSpec extends AnyFunSuite {
     StoreFence.release(afs, root, deleteOwnerFile = true)
   }
 
-  test("first contact migrates a legacy owner record to v2 on disk") {
+  test("a retired 3- or 4-field owner record is refused; force takes over past it") {
     val afs = localAfs()
-    // a store last written by pre-terminator code: 4-field legacy record
-    // with an expired heartbeat. Until something rewrites it, the
-    // truncation-ambiguity hazard (a prefix cut mid-heartbeat parses as
-    // a complete ancient record) stays open — the migration contract is
-    // that the store's FIRST acquire closes it by leaving a v2 record,
-    // so the legacy window lasts exactly one attach, never "until some
-    // later v2-era write happens to land".
-    val root = Files.createTempDirectory("hfs-legacy").toString
-    afs.write(afs.child(root, "_owner"), s"7|old-driver|abcdabcdabcd|12345")
-    val epoch = StoreFence.acquire(afs, root, "driver-a", 60000L, false)
-    assert(epoch == 8L, "acquire must resume past the legacy epoch")
-    val rec = afs.read(afs.child(root, "_owner")).get
-    assert(rec.startsWith("v2|8|driver-a|") && rec.endsWith("|#"),
-      s"acquire over a legacy record must leave a v2 record on disk: $rec")
-    // same for the 3-field nonce-less form
-    val root2 = Files.createTempDirectory("hfs-legacy3").toString
-    afs.write(afs.child(root2, "_owner"), s"3|older-driver|12345")
-    assert(StoreFence.acquire(afs, root2, "driver-a", 60000L, false) == 4L)
-    val rec2 = afs.read(afs.child(root2, "_owner")).get
-    assert(rec2.startsWith("v2|4|") && rec2.endsWith("|#"), rec2)
-    StoreFence.release(afs, root, deleteOwnerFile = true)
-    StoreFence.release(afs, root2, deleteOwnerFile = true)
+    // the pre-terminator (epoch|id|nonce|hb) and nonce-less (epoch|id|hb)
+    // records are no longer a format: like any unparseable record they
+    // REJECT writers and ordinary attachers, and the forced acquire is
+    // the way out, resuming past the record's first field
+    Seq(s"7|old-driver|abcdabcdabcd|12345" -> 8L,
+        s"3|older-driver|12345" -> 4L).foreach { case (record, epoch) =>
+      val root = Files.createTempDirectory("hfs-retired").toString
+      afs.write(afs.child(root, "_owner"), record)
+      val e = intercept[FencedStoreException](StoreFence.verify(afs, root))
+      assert(e.getMessage.contains("unparseable"), e.getMessage)
+      intercept[FencedStoreException](
+        StoreFence.acquire(afs, root, "driver-a", 60000L, false))
+      assert(afs.read(afs.child(root, "_owner")).contains(record),
+        "a refused acquire must leave the record untouched")
+      assert(StoreFence.acquire(afs, root, "driver-a", 60000L, true) == epoch)
+      val rec = afs.read(afs.child(root, "_owner")).get
+      assert(rec.startsWith(s"v2|$epoch|driver-a|") && rec.endsWith("|#"), rec)
+      StoreFence.verify(afs, root)
+      StoreFence.release(afs, root, deleteOwnerFile = true)
+    }
   }
 
   test("release racing a forced takeover: successor's beat closes the window") {
@@ -182,7 +180,7 @@ class HadoopFsSpec extends AnyFunSuite {
   test("one on-disk format: a Hadoop-face record fences the File face") {
     val afs = localAfs()
     val root = Files.createTempDirectory("hfs-interop").toString
-    afs.write(afs.child(root, "_owner"), s"5|hdfs-driver|cafecafecafe|$now")
+    afs.write(afs.child(root, "_owner"), s"v2|5|hdfs-driver|cafecafecafe|$now|#")
     // a local-face process that never acquired reads the same record
     // and is fenced — the two faces share one format, not two stores
     val e = intercept[FencedStoreException](

@@ -195,7 +195,7 @@ class IncrementalDedupSpec extends SparkSuite {
       "replayed epoch must re-emit exactly its own pairs")
   }
 
-  test("compact ignores crash-orphan generations and a pre-generation layout fails loudly") {
+  test("compact ignores crash-orphan generations") {
     val docs = corpus()
     val dir = Files.createTempDirectory("lsh-idx-orphan").toFile
     val idx = new MinHashIndex(spark, dir.getAbsolutePath, "doc_id", "text")
@@ -209,13 +209,6 @@ class IncrementalDedupSpec extends SparkSuite {
     assert(!new java.io.File(dir, "gen-7").exists(), "orphan must be reaped")
     assert(pairSet(idx.addAndFindPairs(docs.where(col("doc_id") === 13))) ==
       (1L to 5L).map((_, 13L)).toSet)
-    // a flat pre-generation layout must throw, not probe an empty index
-    val legacy = Files.createTempDirectory("lsh-idx-legacy").toFile
-    new java.io.File(legacy, "band=0").mkdirs()
-    val bad = new MinHashIndex(spark, legacy.getAbsolutePath, "doc_id", "text")
-    intercept[IllegalStateException] {
-      bad.addAndFindPairs(docs.where(col("doc_id") === 1))
-    }
   }
 
   test("the prefix width the index was created with wins over the constructor") {
