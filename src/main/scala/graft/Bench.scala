@@ -169,14 +169,9 @@ object Bench {
     require(!quietCapture || (threads == 1 && repeat == 1),
       "SPARK_GRAFT_QUIET_CAPTURE=1 is the serial-board face; drop " +
         "--threads/--repeat for a quiet capture")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
+    val builder = graft.core.GraftSession
+      .builder(s"local[$cpus]", shufflePartitions = Some(cpus.toInt))
       .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
     // service posture under a concurrent board: FIFO lets one query's wide
     // stage occupy every task slot while an ITERATIVE query's many small
     // jobs starve behind it once per iteration (measured 11–24× inflation

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
 
 /** Scale-evidence main for the shingle-pair dedup family (r17 verdict
@@ -63,13 +63,8 @@ object PairScale {
     require(dirs.nonEmpty, "pass at least one sf dir")
     val out = outArg.getOrElse("PAIR_SCALE_LOCAL.json")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
+    val spark = graft.core.GraftSession
+      .builder(s"local[$cpus]", shufflePartitions = Some(cpus.toInt))
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 

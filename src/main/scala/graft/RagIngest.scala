@@ -50,14 +50,9 @@ object RagIngest {
     val out = outArg.getOrElse("RAG_INGEST_LOCAL.json")
     val nBatches = batchArg.map(_.toInt).getOrElse(16)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
+    val spark = graft.core.GraftSession
+      .builder(s"local[$cpus]", shufflePartitions = Some(cpus.toInt))
       .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Streaming throughput benchmark (supplementary to Bench): replays the
@@ -18,9 +17,8 @@ object StreamBench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
+    val spark = graft.core.GraftSession
+      .builder(s"local[$cpus]", shufflePartitions = Some(cpus.toInt))
       // AQE OFF — measured, not assumed (r19): Spark keeps AQE off the
       // true streaming plans either way, and for the foreachBatch store
       // ops the coalescing win (16-task micro-stages -> the few
@@ -34,9 +32,6 @@ object StreamBench {
       // under a multi-store trigger's ~120 classes, recompiling every
       // batch; sized to hold every steady-state plan of the pipeline
       .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._

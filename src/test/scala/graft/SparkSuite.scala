@@ -6,14 +6,9 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared session for all suites (one JVM-wide SparkSession via getOrCreate). */
 trait SparkSuite extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
+  lazy val spark: SparkSession = graft.core.GraftSession
+    .builder("local[4]", shufflePartitions = Some(4))
     .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.adaptive.enabled", "true")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
     .getOrCreate()
 
   def ts(s: String): java.sql.Timestamp = {
