@@ -11,23 +11,24 @@ import graft.sources.v2.{SegmentCodec, SegmentStats, TopicTable}
   * store; reads fall through to the offloaded copy transparently).
   *
   * Eligibility comes from the per-segment sidecar (newest publish time older
-  * than the horizon), the move rewrites the row-oriented JSONL segment into
-  * a columnar parquet twin (the reference offloader likewise rewrites
-  * ledgers into its own block format), and the segment KEEPS its
-  * (partition, logical-name) identity — so batch readers, pruning, and
-  * crucially the name-keyed stream cursor are all unaffected: an already
-  * -consumed segment stays consumed after offload, an unconsumed one is
-  * still delivered from the cold tier, columnar. */
+  * than the horizon), the move rewrites the JSONL segment into a parquet
+  * twin (the reference offloader likewise rewrites ledgers into its own
+  * block format), and the segment KEEPS its (partition, logical-name)
+  * identity — so batch readers, pruning, and crucially the name-keyed
+  * stream cursor are all unaffected: an already-consumed segment stays
+  * consumed after offload, an unconsumed one is still delivered from the
+  * cold tier. */
 object Offloader {
 
   /** Offload sealed segments whose newest message is older than `olderThanMs`.
     * JSONL segments are REWRITTEN as parquet twins ([[SegmentCodec]]) under
-    * the same logical name — cold reads become columnar (no JSON re-parse;
-    * footer min/max stats serve pruning when the sidecar is absent) while
-    * the stream cursor stays oblivious. The rewrite lands first (tmp +
-    * rename) and the hot copy is deleted after, so a crash mid-offload
-    * leaves at worst BOTH copies, which the listing dedupes to one
-    * ([[TopicTable.listPartitioned]]) — never a window with neither.
+    * the same logical name — cold reads decode only the requested columns
+    * (no JSON re-parse; footer min/max stats serve pruning when the sidecar
+    * is absent) while the stream cursor stays oblivious. The rewrite
+    * lands first (tmp + rename) and the hot copy is deleted after, so a
+    * crash mid-offload leaves at worst BOTH copies, which the listing
+    * dedupes to one ([[TopicTable.listPartitioned]]) — never a window
+    * with neither.
     * Already-parquet segments (a recalled twin going cold again) move by
     * rename. Returns the number of segments offloaded. */
   def offload(dir: String, olderThanMs: Long): Int = {

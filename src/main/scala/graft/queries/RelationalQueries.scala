@@ -66,11 +66,11 @@ object RelationalQueries {
     "q_scan_hot" -> ((s, d) =>
       scanAgg(s, TopicStage.eventsTopic(s, d, cold = false))),
 
-    // §2.1 cold-tier topic scan: the SAME rows offloaded to columnar
-    // parquet twins, read by the vectorized column-at-a-time reader
-    // (ParquetColumnarSegmentReader) — only the 4 requested columns are
-    // decompressed. Same oracle as q_scan_hot; the bench delta between the
-    // two is the measured value of tiered-storage offload.
+    // §2.1 cold-tier topic scan: the SAME rows offloaded to parquet twins,
+    // read by the cold reader (ParquetSegmentReader), which decodes only
+    // the 4 requested columns, column-at-a-time, and serves rows from the
+    // decoded batch. Same oracle as q_scan_hot; the bench delta between
+    // the two is the measured value of tiered-storage offload.
     "q_scan_cold" -> ((s, d) =>
       scanAgg(s, TopicStage.eventsTopic(s, d, cold = true))),
 

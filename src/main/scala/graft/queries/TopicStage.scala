@@ -10,11 +10,11 @@ import org.apache.spark.sql.functions._
 
 /** Stages the `events` table as a graft topic, once per JVM per scale
   * factor, so scan queries can measure the two storage codecs on identical
-  * data: `hot` leaves the segments as row-oriented JSONL; `cold` offloads
-  * every segment into its columnar parquet twin (the tiered-storage path,
-  * [[graft.ops.Offloader]]). The pair `q_scan_hot`/`q_scan_cold` share one
-  * DuckDB oracle — same rows either way — and their bench delta is the
-  * measured value of the offload rewrite + vectorized cold reader.
+  * data: `hot` leaves the segments as JSONL; `cold` offloads every segment
+  * into its parquet twin (the tiered-storage path, [[graft.ops.Offloader]]).
+  * The pair `q_scan_hot`/`q_scan_cold` share one DuckDB oracle — same rows
+  * either way — and their bench delta is the measured value of the offload
+  * rewrite + the cold reader's column-at-a-time decode.
   *
   * 32 topic partitions (`event_id % 32`): one segment per partition after
   * the partition-aligned repartition, so the scan parallelizes across the

@@ -5,20 +5,22 @@ import java.io.File
 import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.ObjectMapper
-import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.Path
-import org.apache.parquet.example.data.Group
+import org.apache.parquet.column.{ColumnDescriptor, ColumnReader}
+import org.apache.parquet.column.impl.ColumnReadStoreImpl
 import org.apache.parquet.example.data.simple.SimpleGroupFactory
-import org.apache.parquet.hadoop.example.{ExampleParquetWriter, GroupReadSupport, GroupWriteSupport}
-import org.apache.parquet.hadoop.{ParquetFileReader, ParquetReader}
-import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.example.ExampleParquetWriter
+import org.apache.parquet.hadoop.metadata.CompressionCodecName
+import org.apache.parquet.io.{LocalInputFile, LocalOutputFile}
+import org.apache.parquet.io.api.{Converter, GroupConverter, PrimitiveConverter}
 import org.apache.parquet.schema.LogicalTypeAnnotation.stringType
 import org.apache.parquet.schema.MessageType
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
 import org.apache.parquet.schema.Types
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.SpecificInternalRow
 import org.apache.spark.sql.connector.read.PartitionReader
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Columnar (parquet) segment codec for the COLD tier: the offloader rewrites
@@ -30,7 +32,12 @@ import org.apache.spark.unsafe.types.UTF8String
   * families, and consumed-checks are oblivious to the codec; readers dispatch
   * on the physical extension. Cold reads stop re-parsing JSON on every scan,
   * and pruning can fall back to the parquet footer's column statistics when a
-  * `.meta` sidecar is missing. */
+  * `.meta` sidecar is missing.
+  *
+  * Segments are always local files, so twins and footers go through
+  * parquet's `LocalInputFile`/`LocalOutputFile` (plain `java.nio` channels)
+  * rather than a Hadoop `FileSystem`: no JVM-wide filesystem cache decides
+  * which `file:` class serves them, and no checksum file follows a twin. */
 object SegmentCodec {
 
   /** Physical suffix of a parquet-rewritten segment. A codec detail, never
@@ -59,15 +66,12 @@ object SegmentCodec {
     val gf = new SimpleGroupFactory(parquetSchema)
     val tmp = new File(dst.getParentFile, "." + dst.getName + ".tmp")
     tmp.delete()
-    val conf = new Configuration()
-    GroupWriteSupport.setSchema(parquetSchema, conf)
     // zstd: the cold tier is the 100 TB tier — storage footprint and read
-    // I/O dominate there, and the vectorized reader decompresses pages
+    // I/O dominate there, and the column reader decompresses pages
     // transparently either way
-    val w = ExampleParquetWriter.builder(new Path(tmp.getAbsolutePath))
-      .withConf(conf).withType(parquetSchema)
-      .withCompressionCodec(
-        org.apache.parquet.hadoop.metadata.CompressionCodecName.ZSTD)
+    val w = ExampleParquetWriter.builder(new LocalOutputFile(tmp.toPath))
+      .withType(parquetSchema)
+      .withCompressionCodec(CompressionCodecName.ZSTD)
       .build()
     try {
       val in = scala.io.Source.fromFile(src, "UTF-8")
@@ -103,8 +107,7 @@ object SegmentCodec {
     * destruction refuses it — never the destructive direction. */
   def footerStats(f: File): Option[SegmentStats.Stats] =
     try {
-      val pf = ParquetFileReader.open(HadoopInputFile.fromPath(
-        new Path(f.getAbsolutePath), new Configuration()))
+      val pf = ParquetFileReader.open(new LocalInputFile(f.toPath))
       try {
         val blocks = pf.getFooter.getBlocks.asScala
         if (blocks.map(_.getRowCount).sum == 0) None
@@ -157,100 +160,162 @@ object SegmentCodec {
     }
 }
 
-/** Reads one parquet-rewritten segment; the pruned columns are pushed into
-  * the parquet reader as a requested projection, so unrequested columns are
-  * never decompressed or assembled — the columnar read the offload rewrite
-  * exists for. The columnar twin of [[SegmentReader]]. */
+/** Reads one parquet cold segment: each row group is decoded
+  * column-at-a-time through parquet's column API (`ColumnReadStoreImpl`/
+  * `ColumnReader`) into a batch of up to [[ParquetSegmentReader.BatchSize]]
+  * reusable rows, which are then served one by one — the cold twin of
+  * [[SegmentReader]], and the reason the offload rewrite exists (offloaded
+  * ledgers are read back through an index, not re-parsed:
+  * tiered-storage/jcloud/.../BlobStoreBackedReadHandleImpl.java). Only the
+  * requested columns are decompressed; a count-only scan takes its row
+  * count from the footer and never opens a page.
+  *
+  * AS OF reads skip every row whose publish time is unknown or later than
+  * t (the [[SegmentReader]] contract); when the query projected
+  * `publish_time` away it is decoded as one extra hidden column. */
 class ParquetSegmentReader(file: String, required: StructType,
                            asOfMs: Option[Long] = None)
   extends PartitionReader[InternalRow] {
-  // envelope column name → on-disk parquet field: shared with the
-  // vectorized reader so the two cold readers can't drift
-  private def diskField(name: String): String =
-    ColumnarSegments.diskField(name)
+  import ParquetSegmentReader._
 
-  /** Fields actually present in THIS file: a legacy twin predating an
-    * envelope column must null-fill it (the columnar reader's behavior),
-    * not fail parquet's requested-schema containment check. */
-  private val fileFields: Set[String] = {
-    val pf = ParquetFileReader.open(HadoopInputFile.fromPath(
-      new Path(file), new Configuration()))
-    try pf.getFooter.getFileMetaData.getSchema.getFields.asScala
-      .map(_.getName).toSet
-    finally pf.close()
-  }
+  private val reader = ParquetFileReader.open(
+    new LocalInputFile(new File(file).toPath))
+  private val createdBy = reader.getFooter.getFileMetaData.getCreatedBy
 
-  /** Disk fields in the read projection — lookups outside it (missing from
-    * the file, or pruned) answer null / not-visible. */
-  private val projectedFields: Set[String] = {
-    // an AS OF read needs the publish stamp for visibility even when the
-    // query projected it away
-    val wanted = required.fields.map(f => diskField(f.name)).toSet ++
-      (if (asOfMs.isDefined) Set("publish_time_ms") else Set.empty)
-    wanted.intersect(fileFields)
+  private val hiddenPt =
+    asOfMs.isDefined && !required.fieldNames.contains("publish_time")
+  private val requestedSchema: MessageType = {
+    val wanted = required.fieldNames.map(diskField).toSet ++
+      (if (hiddenPt) Set("publish_time_ms") else Set.empty)
+    new MessageType("graft_segment", SegmentCodec.parquetSchema.getFields
+      .asScala.filter(f => wanted.contains(f.getName)).toList.asJava)
   }
+  reader.setRequestedSchema(requestedSchema)
 
-  private val reader = {
-    val conf = new Configuration()
-    val projected = SegmentCodec.parquetSchema.getFields.asScala
-      .filter(f => projectedFields.contains(f.getName)).toList
-    // an empty projection (count-only scan, or every wanted column absent
-    // from the file) still needs one column to drive row iteration — use
-    // the narrowest one the file has
-    val fields =
-      if (projected.nonEmpty) projected
-      else SegmentCodec.parquetSchema.getFields.asScala
-        .filter(f => fileFields.contains(f.getName)).take(1).toList
-    conf.set(org.apache.parquet.hadoop.api.ReadSupport.PARQUET_READ_SCHEMA,
-      new MessageType("graft_segment", fields.asJava).toString)
-    ParquetReader.builder(new GroupReadSupport(), new Path(file))
-      .withConf(conf).build()
-  }
-  private var row: InternalRow = _
+  private def descriptor(disk: String): ColumnDescriptor =
+    requestedSchema.getColumnDescription(Array(disk))
+  /** Descriptor per required field, in output order. */
+  private val descriptors: Array[ColumnDescriptor] =
+    required.fields.map(f => descriptor(diskField(f.name)))
+  private val ptDescriptor: Option[ColumnDescriptor] =
+    if (hiddenPt) Some(descriptor("publish_time_ms")) else None
+  private val ptOrdinal =
+    if (asOfMs.isEmpty || hiddenPt) -1 else required.fieldIndex("publish_time")
 
-  private def fieldValue(g: Group, name: String): Any = {
-    def has(k: String) =
-      projectedFields.contains(k) && g.getFieldRepetitionCount(k) > 0
-    def str(k: String) =
-      if (has(k)) UTF8String.fromString(g.getString(k, 0)) else null
-    name match {
-      case "topic" => str("topic")
-      case "partition" =>
-        if (has("partition")) g.getInteger("partition", 0) else null
-      case "offset" => if (has("offset")) g.getLong("offset", 0) else null
-      case "key" => str("key")
-      case "value" => str("value")
-      case "event_time" => // ms on disk → micros in the envelope
-        if (has("event_time_ms")) g.getLong("event_time_ms", 0) * 1000L else null
-      case "publish_time" =>
-        if (has("publish_time_ms")) g.getLong("publish_time_ms", 0) * 1000L
-        else null
-      case "producer_name" => str("producer_name")
-      case "sequence_id" =>
-        if (has("sequence_id")) g.getLong("sequence_id", 0) else null
-      case "replicated_from" => str("replicated_from")
-    }
-  }
+  private val footerRows =
+    reader.getFooter.getBlocks.asScala.map(_.getRowCount).sum
+  private val rows: Array[SpecificInternalRow] =
+    Array.fill(math.min(BatchSize.toLong, footerRows).toInt)(
+      new SpecificInternalRow(required))
+  private val visible = new Array[Boolean](rows.length)
 
-  /** AS OF visibility (same contract as the JSONL reader): publish time
-    * known and ≤ t — a file with no publish column at all has no provably
-    * published rows. */
-  private def visibleAt(g: Group): Boolean = asOfMs.forall { t =>
-    projectedFields.contains("publish_time_ms") &&
-      g.getFieldRepetitionCount("publish_time_ms") > 0 &&
-      g.getLong("publish_time_ms", 0) <= t
-  }
+  // a count-only scan never opens a page: the footer's row count is all
+  // there is to read
+  private val pageless = requestedSchema.getFieldCount == 0
+  private var rowsLeftInGroup: Long = if (pageless) footerRows else 0L
+  private var colReaders: Array[ColumnReader] = _
+  private var ptReader: ColumnReader = _
+  private var n = 0
+  private var pos = 0
 
   override def next(): Boolean = {
-    var g = reader.read()
-    while (g != null && !visibleAt(g)) g = reader.read()
-    if (g == null) false
-    else {
-      row = InternalRow.fromSeq(required.fields.toIndexedSeq
-        .map(f => fieldValue(g, f.name)))
-      true
+    pos += 1
+    while (pos >= n || !(asOfMs.isEmpty || visible(pos))) {
+      if (pos >= n) {
+        if (!decodeBatch()) return false
+        pos = 0
+      } else pos += 1
+    }
+    true
+  }
+
+  /** Decodes the next batch into `rows` (and `visible` for AS OF); false
+    * at the end of the file. */
+  private def decodeBatch(): Boolean = {
+    while (rowsLeftInGroup <= 0L) {
+      if (pageless) return false
+      val pages = reader.readNextRowGroup()
+      if (pages == null) return false
+      rowsLeftInGroup = pages.getRowCount
+      if (rowsLeftInGroup > 0L) {
+        val store =
+          new ColumnReadStoreImpl(pages, NoopRoot, requestedSchema, createdBy)
+        colReaders = descriptors.map(store.getColumnReader)
+        ptReader = ptDescriptor.map(store.getColumnReader).orNull
+      }
+    }
+    n = math.min(BatchSize.toLong, rowsLeftInGroup).toInt
+    var j = 0
+    while (j < descriptors.length) {
+      decodeColumn(j); j += 1
+    }
+    asOfMs.foreach { t =>
+      var i = 0
+      if (hiddenPt) {
+        val maxDef = ptDescriptor.get.getMaxDefinitionLevel
+        while (i < n) {
+          visible(i) = ptReader.getCurrentDefinitionLevel == maxDef &&
+            ptReader.getLong <= t
+          ptReader.consume(); i += 1
+        }
+      } else while (i < n) {
+        visible(i) = !rows(i).isNullAt(ptOrdinal) &&
+          rows(i).getLong(ptOrdinal) / 1000L <= t
+        i += 1
+      }
+    }
+    rowsLeftInGroup -= n
+    true
+  }
+
+  /** Field `j`'s next `n` values into `rows`; type dispatch once per
+    * column, not per value. */
+  private def decodeColumn(j: Int): Unit = {
+    val cr = colReaders(j)
+    val maxDef = descriptors(j).getMaxDefinitionLevel
+    def fill(put: SpecificInternalRow => Unit): Unit = {
+      var i = 0
+      while (i < n) {
+        if (cr.getCurrentDefinitionLevel == maxDef) put(rows(i))
+        else rows(i).setNullAt(j)
+        cr.consume(); i += 1
+      }
+    }
+    required.fields(j).dataType match {
+      case StringType =>
+        fill(_.update(j, UTF8String.fromBytes(cr.getBinary.getBytes)))
+      case IntegerType => fill(_.setInt(j, cr.getInteger))
+      case LongType => fill(_.setLong(j, cr.getLong))
+      // ms on disk → micros in the envelope
+      case TimestampType => fill(_.setLong(j, cr.getLong * 1000L))
+      case dt =>
+        throw new UnsupportedOperationException(s"segment envelope type $dt")
     }
   }
-  override def get(): InternalRow = row
+
+  override def get(): InternalRow = rows(pos)
   override def close(): Unit = reader.close()
+}
+
+object ParquetSegmentReader {
+  /** Rows per decoded batch — Spark's own parquet reader default. */
+  val BatchSize = 4096
+
+  /** Envelope column name → on-disk parquet field (ms-epoch twins for the
+    * timestamp columns). */
+  def diskField(name: String): String = name match {
+    case "event_time" => "event_time_ms"
+    case "publish_time" => "publish_time_ms"
+    case other => other
+  }
+
+  /** Inert converter tree: `ColumnReadStoreImpl` requires a converter for
+    * dictionary-support probing, but values are pulled through the
+    * `ColumnReader` getters, never pushed into the converter. */
+  private object NoopRoot extends GroupConverter {
+    private val prim = new PrimitiveConverter {}
+    override def getConverter(i: Int): Converter = prim
+    override def start(): Unit = ()
+    override def end(): Unit = ()
+  }
 }

@@ -30,15 +30,26 @@ import org.apache.spark.unsafe.types.UTF8String
   * pulsar-client/.../PartitionedProducerImpl.java) over the managed-ledger
   * analog (a ledger is sealed once written; reference:
   * managed-ledger/.../ManagedLedgerImpl.java:767-794). Segments directly in
-  * the topic root are accepted as a legacy/flat single-partition layout.
+  * the topic root list as one flat partition: that is how a single
+  * partition directory reads on its own as a topic (DelayedBuckets drains
+  * each parked bucket's partition that way).
   *
-  * Read paths:
+  * Read paths — one row-based path, with one reader per segment codec
+  * ([[SegmentReader]] for hot JSONL, [[ParquetSegmentReader]] for cold
+  * parquet twins) serving batch, AS OF and micro-batch reads alike:
   *  - batch scan = Reader from earliest to latest (Reader.java:148-174), with
   *    pushed filters on `offset`/`publish_time` used to PRUNE whole segments
   *    via a per-segment min/max footer — the seek-by-timestamp binary search
   *    (PersistentMessageFinder.java:57-64) and compacted-topic findStartPoint
   *    (CompactedTopicImpl.java:169-197) as DSv2 pruning. Column pruning is
-  *    pushed into the row parser.
+  *    pushed into both readers: the JSONL parser builds only the requested
+  *    fields, the parquet reader decodes only the requested columns.
+  *    Every operator above the scan is row-based, so the per-segment
+  *    sidecar and footer stats are where the layout pays off, not a
+  *    columnar hand-off to Spark.
+  *  - AS OF (time travel) = the batch scan plus a row filter in the reader
+  *    (publish time known and ≤ t), after segments wholly newer than t are
+  *    pruned from the same stats.
   *  - micro-batch stream = Consumer subscribe (ConsumerImpl): one
   *    InputPartition per (topic partition, sealed segment); the partition
   *    list is re-discovered at every micro-batch plan, so a topic growing
@@ -78,8 +89,8 @@ object TopicTable {
     StructField("sequence_id", LongType),
     StructField("replicated_from", StringType)))
 
-  /** Bookkeeping id for segments sitting flat in the topic root (legacy
-    * single-partition layout). */
+  /** Bookkeeping id for segments sitting directly in the topic root (a
+    * partition directory read on its own as a topic). */
   val FlatPartition: Int = -1
 
   private val PartDirRx = "partition-(\\d+)".r
@@ -110,7 +121,7 @@ object TopicTable {
   val OffloadTier = "offloaded"
 
   /** Every (partitionId, segment) in the topic: partition subdirectories,
-    * the cold tier's mirror tree, plus legacy flat-root segments (partition
+    * the cold tier's mirror tree, plus flat-root segments (partition
     * [[FlatPartition]]). Re-listed at every micro-batch plan —
     * partition-count evolution is picked up live. One LOGICAL name maps to
     * exactly one file: an offload race (parquet twin written, JSONL not yet
@@ -148,6 +159,25 @@ object TopicTable {
 
   def listSegments(dir: String): Array[File] =
     listPartitioned(dir).map(_._2).toArray
+
+  /** Where segment `f` of a partition directory, listed earlier, lives
+    * now: offload rewrites a
+    * segment into the cold tier (twin first, hot copy deleted after) and
+    * recall renames it back, both keeping its (partition, logical name),
+    * so the same segment is under one of these four paths. Same preference
+    * as [[listPartitioned]]: JSONL before twin, hot before cold. Returns
+    * `f` when no copy exists. */
+  private[v2] def relocate(f: File): File = {
+    val part = f.getParentFile
+    val tierRoot = part.getParentFile
+    val root =
+      if (tierRoot.getName == OffloadTier) tierRoot.getParentFile else tierRoot
+    val copies = for {
+      ext <- Seq("", SegmentCodec.ColdExt)
+      tier <- Seq(root, new File(root, OffloadTier))
+    } yield new File(new File(tier, part.getName), logicalName(f) + ext)
+    copies.find(_.exists()).getOrElse(f)
+  }
 
   /** Segment-name family: the non-digit prefix after `segment-` ("e" for
     * epoch-named streaming segments, "b" for batch appends, "txn-e" for
@@ -277,9 +307,7 @@ class TopicScan(path: String, filters: Array[Filter], required: StructType,
       .toArray
   }
   override def createReaderFactory(): PartitionReaderFactory =
-    // the as-of row filter lives in the row-based readers; AS OF scans are
-    // rare archaeology, so they trade the columnar path for simplicity
-    new TopicReaderFactory(required, columnar = asOfMs.isEmpty, asOfMs)
+    new TopicReaderFactory(required, asOfMs)
 }
 
 case class TopicInputPartition(file: String) extends InputPartition
@@ -292,9 +320,9 @@ object SegmentStats {
   private val mapper = new ObjectMapper()
 
   /** `nullPt` counts rows whose publish time is NULL (unknown age); −1 means
-    * the count itself is unknown (a sidecar written before the field
-    * existed), which age-based destruction must treat as "may contain
-    * unknown-age rows". */
+    * the count itself is unknown (a parquet footer with missing or
+    * unreadable statistics), which age-based destruction must treat as "may
+    * contain unknown-age rows". */
   case class Stats(minOff: Long, maxOff: Long, minPt: Long, maxPt: Long,
                    nullPt: Long)
 
@@ -334,8 +362,7 @@ object SegmentStats {
         java.nio.file.Files.readAllBytes(side.toPath), "UTF-8"))
       Some(Stats(n.get("min_offset").asLong, n.get("max_offset").asLong,
         n.get("min_publish_time_ms").asLong, n.get("max_publish_time_ms").asLong,
-        if (n.has("null_publish_time")) n.get("null_publish_time").asLong
-        else -1L))
+        n.get("null_publish_time").asLong))
     } else {
       // fallback: one pass over the segment. Offsets come from the first and
       // last lines (write order), but the publish-time range must be min/max
@@ -408,32 +435,27 @@ object SegmentStats {
   }
 }
 
-class TopicReaderFactory(required: StructType, columnar: Boolean = false,
-                         asOfMs: Option[Long] = None)
+class TopicReaderFactory(required: StructType, asOfMs: Option[Long] = None)
   extends PartitionReaderFactory {
+  /** An offload or recall may have moved the planned segment to another
+    * tier or codec since planning; the reader then opens it where it is
+    * now ([[TopicTable.relocate]]). */
+  override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
+    val planned = new File(p.asInstanceOf[TopicInputPartition].file)
+    try open(planned)
+    catch {
+      case _: java.io.FileNotFoundException |
+           _: java.nio.file.NoSuchFileException =>
+        open(TopicTable.relocate(planned))
+    }
+  }
+
   /** Dispatch on the physical extension: hot segments are JSONL, offloaded
     * cold segments may be parquet twins ([[SegmentCodec]]). */
-  override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
-    val f = p.asInstanceOf[TopicInputPartition].file
-    if (f.endsWith(SegmentCodec.ColdExt))
-      new ParquetSegmentReader(f, required, asOfMs)
-    else new SegmentReader(f, required, asOfMs)
-  }
-
-  /** Batch scans run columnar (Spark requires all partitions agree, so the
-    * hot JSONL reader is batch-wrapped); cold parquet segments get the
-    * truly vectorized column-at-a-time reader. Streaming stays row-based:
-    * micro-batches read the hot tier, where batching buys nothing over the
-    * JSON parse. */
-  override def supportColumnarReads(p: InputPartition): Boolean = columnar
-
-  override def createColumnarReader(
-      p: InputPartition): PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] = {
-    val f = p.asInstanceOf[TopicInputPartition].file
-    if (f.endsWith(SegmentCodec.ColdExt))
-      new ParquetColumnarSegmentReader(f, required)
-    else new RowBatchingSegmentReader(new SegmentReader(f, required), required)
-  }
+  private def open(f: File): PartitionReader[InternalRow] =
+    if (f.getName.endsWith(SegmentCodec.ColdExt))
+      new ParquetSegmentReader(f.getPath, required, asOfMs)
+    else new SegmentReader(f.getPath, required, asOfMs)
 }
 
 /** Parses one segment; projects only the pruned columns into InternalRows. */
@@ -590,28 +612,19 @@ object TopicOffset {
     TopicOffset(parts)
   }
 
-  def fromJson(json: String, listed: => Seq[(String, String)]): TopicOffset = {
-    val mapper = new ObjectMapper()
-    val node = mapper.readTree(json)
-    if (node.has("segments")) {
-      // legacy v1 checkpoint: the full consumed-segment name set (flat layout)
-      val consumed = node.get("segments").elements().asScala
-        .map(n => (TopicTable.FlatPartition.toString, n.asText)).toSet
-      marking(listed, consumed)
-    } else {
-      val po = node.get("parts")
-      val parts = po.fieldNames().asScala.map { k =>
-        val cn = po.get(k)
-        val fo = cn.get("f")
-        val frontiers = fo.fieldNames().asScala
-          .map(f => f -> fo.get(f).asText).toMap
-        val pending =
-          if (cn.has("x")) cn.get("x").elements().asScala.map(_.asText).toSet
-          else Set.empty[String]
-        k -> PartCursor(frontiers, pending)
-      }.toMap
-      TopicOffset(parts)
-    }
+  def fromJson(json: String): TopicOffset = {
+    val po = new ObjectMapper().readTree(json).get("parts")
+    val parts = po.fieldNames().asScala.map { k =>
+      val cn = po.get(k)
+      val fo = cn.get("f")
+      val frontiers = fo.fieldNames().asScala
+        .map(f => f -> fo.get(f).asText).toMap
+      val pending =
+        if (cn.has("x")) cn.get("x").elements().asScala.map(_.asText).toSet
+        else Set.empty[String]
+      k -> PartCursor(frontiers, pending)
+    }.toMap
+    TopicOffset(parts)
   }
 }
 
@@ -870,7 +883,7 @@ class TopicMicroBatchStream(path: String,
   override def getDefaultReadLimit: ReadLimit = ReadLimit.allAvailable()
 
   override def deserializeOffset(json: String): Offset =
-    TopicOffset.fromJson(json, listedNames)
+    TopicOffset.fromJson(json)
   override def commit(end: Offset): Unit = () // cursor markDelete analog
   override def stop(): Unit = ()
 
@@ -918,8 +931,6 @@ class TopicWriteBuilder(path: String, queryId: String, schema: StructType)
   }
 }
 
-case class SegmentCommit(files: Seq[String]) extends WriterCommitMessage
-
 /** One staged-but-invisible segment from a task: the tmp file plus the
   * pruning stats gathered while writing it. `name` is the final segment
   * name for streaming epochs (computed from the epoch id) and empty for
@@ -934,7 +945,7 @@ case class SegmentCommit(files: Seq[String]) extends WriterCommitMessage
 case class StagedSegment(path: String, name: String, n: Long,
                          minOff: Long, maxOff: Long,
                          minPt: Long, maxPt: Long, nullPt: Long,
-                         taskPart: Int = -1)
+                         taskPart: Int)
 case class StagedCommit(segments: Seq[StagedSegment]) extends WriterCommitMessage
 
 /** Shared driver-side reveal: rename staged tmps to their final names in
@@ -991,9 +1002,6 @@ private[v2] object SegmentReveal {
   def abortStaged(messages: Array[WriterCommitMessage]): Unit =
     messages.foreach {
       case StagedCommit(ss) => ss.foreach(s => new File(s.path).delete())
-      case SegmentCommit(fs) => fs.foreach { f =>
-        new File(f).delete(); SegmentStats.sidecarFor(new File(f)).delete()
-      }
       case _ => ()
     }
 }
@@ -1019,13 +1027,10 @@ class TopicBatchWrite(path: String, queryId: String, schema: StructType)
     // order by (envelope partition, staging task partition): both are
     // functions of the DATA, so the name↔content assignment is identical
     // across runs of the same write — ordering on the UUID tmp path made
-    // it a scheduling accident (see [[StagedSegment.taskPart]]). The path
-    // tiebreak only matters for a replayed legacy commit message without
-    // taskPart.
+    // it a scheduling accident (see [[StagedSegment.taskPart]])
     val staged = messages.toSeq
       .collect { case StagedCommit(ss) => ss }.flatten
-      .sortBy(s => (new File(s.path).getParentFile.getName, s.taskPart,
-        s.path))
+      .sortBy(s => (new File(s.path).getParentFile.getName, s.taskPart))
     // stamping and reveal share ONE critical section (the reveal's lock is
     // reentrant): if stamps were issued outside it, two concurrent batch
     // commits could interleave so the job holding HIGHER stamps reveals
@@ -1142,7 +1147,7 @@ class TopicStreamWriterFactory(path: String, alphaQueryId: String,
                             epochId: Long): DataWriter[InternalRow] =
     new SegmentWriter(path,
       stagedName = f"segment-e$alphaQueryId$epochId%010d-p$partitionId%05d.jsonl",
-      writeSchema = schema)
+      writeSchema = schema, taskPart = partitionId)
 }
 
 /** Routes each row to its envelope partition's subdirectory — the producer's
@@ -1158,8 +1163,7 @@ class TopicStreamWriterFactory(path: String, alphaQueryId: String,
   * persists as null (partition defaults to 0), so legacy 9-column producers
   * and full-envelope producers coexist. */
 class SegmentWriter(root: String, stagedName: String,
-                    writeSchema: StructType = TopicTable.schema,
-                    taskPart: Int = -1)
+                    writeSchema: StructType, taskPart: Int)
   extends DataWriter[InternalRow] {
   private val nf = JsonNodeFactory.instance
   private val fieldIdx: Map[String, Int] =

@@ -45,6 +45,51 @@ class OffloaderSpec extends SparkSuite {
       .count() == 80)
   }
 
+  test("offload and recall leave only segments and their sidecars in the tier directories") {
+    val dir = Files.createTempDirectory("offload-clean").toFile.getAbsolutePath
+    writeAt(dir, "2024-01-01 00:00:00", 0 until 50)
+    writeAt(dir, "2024-01-02 00:00:00", 50 until 80)
+    val hot = new File(dir, "partition-000")
+    val cold = new File(dir, s"${TopicTable.OffloadTier}/partition-000")
+    // every file is a segment (`segment-*`, either codec) or its `.meta`
+    // sidecar — no staging tmp, no checksum file left behind
+    def strays(d: File): Seq[String] =
+      Option(d.listFiles()).getOrElse(Array.empty).toSeq.map(_.getName)
+        .filterNot(_.startsWith("segment-"))
+    assert(Offloader.offload(dir, ts("2024-06-01 00:00:00").getTime) == 2)
+    assert(cold.listFiles().count(_.getName.endsWith(".jsonl.parquet")) == 2)
+    assert(strays(hot).isEmpty && strays(cold).isEmpty,
+      s"after offload: hot ${strays(hot)}, cold ${strays(cold)}")
+    assert(Offloader.recall(dir) == 2)
+    assert(hot.listFiles().count(_.getName.endsWith(".jsonl.parquet")) == 2)
+    assert(strays(hot).isEmpty && strays(cold).isEmpty,
+      s"after recall: hot ${strays(hot)}, cold ${strays(cold)}")
+  }
+
+  test("a segment that moves between tiers after planning is read where it is now") {
+    import graft.sources.v2.{TopicInputPartition, TopicReaderFactory}
+    val dir = Files.createTempDirectory("offload-moved").toFile.getAbsolutePath
+    writeAt(dir, "2024-01-01 00:00:00", 0 until 20)
+    def planned() = TopicTable.listSegments(dir).toSeq
+      .map(f => TopicInputPartition(f.getAbsolutePath))
+    val factory = new TopicReaderFactory(TopicTable.schema)
+    def offsets(parts: Seq[TopicInputPartition]): Seq[Long] =
+      parts.flatMap { p =>
+        val r = factory.createReader(p)
+        try Iterator.continually(r.next()).takeWhile(identity)
+          .map(_ => r.get().getLong(2)).toList
+        finally r.close()
+      }.sorted
+    // planned on the hot JSONL path, read after offload moved it cold
+    val hot = planned()
+    assert(Offloader.offload(dir, ts("2024-06-01 00:00:00").getTime) == 1)
+    assert(offsets(hot) == (0L until 20L))
+    // planned on the cold twin, read after recall moved it back
+    val cold = planned()
+    assert(Offloader.recall(dir) == 1)
+    assert(offsets(cold) == (0L until 20L))
+  }
+
   test("parquet twin round-trips every column including nulls") {
     val dir = Files.createTempDirectory("offload-nulls").toFile.getAbsolutePath
     val rows = Seq(

@@ -28,7 +28,7 @@ class RevealConcurrencyProperties extends SparkSuite {
     Files.write(tmp.toPath,
       s"""{"topic":"t","partition":$pid,"offset":1,"key":"k","value":"$payload","event_time_ms":0,"publish_time_ms":0,"producer_name":"p","sequence_id":1}"""
         .getBytes("UTF-8"))
-    StagedSegment(tmp.getAbsolutePath, "", 1, 1, 1, 0, 0, 0)
+    StagedSegment(tmp.getAbsolutePath, "", 1, 1, 1, 0, 0, 0, taskPart = 0)
   }
 
   test("concurrent batch + epoch commits deliver exactly once to a live frontier reader") {

@@ -408,31 +408,6 @@ class TopicDataSourceSpec extends SparkSuite {
     assert(n2 == 35, s"post-batch epoch write lost (got $n2)")
   }
 
-  test("legacy v1 set-offset checkpoints migrate to the frontier cursor") {
-    import graft.sources.v2.{TopicMicroBatchStream, TopicOffset}
-    import org.apache.spark.sql.connector.read.streaming.ReadLimit
-    val dir = tmpDir()
-    // legacy flat layout: segments in the topic root
-    (1 to 4).foreach { i =>
-      java.nio.file.Files.write(
-        new java.io.File(dir, f"segment-e$i%010d-p00000.jsonl").toPath,
-        s"""{"topic":"t","partition":0,"offset":$i,"key":"k","value":"v","event_time_ms":0,"publish_time_ms":0,"producer_name":"p","sequence_id":$i}"""
-          .getBytes("UTF-8"))
-    }
-    val stream = new TopicMicroBatchStream(dir)
-    // v1 checkpoint: segments 1 and 3 consumed (2 pending below the frontier)
-    val legacy =
-      """{"segments":["segment-e0000000001-p00000.jsonl","segment-e0000000003-p00000.jsonl"]}"""
-    val migrated = stream.deserializeOffset(legacy).asInstanceOf[TopicOffset]
-    val latest = stream.latestOffset(migrated, ReadLimit.allAvailable())
-    val batch = stream.planInputPartitions(migrated, latest)
-    assert(batch.length == 2) // exactly the unconsumed 2 and 4
-    val names = batch.map(_.asInstanceOf[graft.sources.v2.TopicInputPartition]
-      .file.split("/").last).sorted
-    assert(names.toSeq == Seq("segment-e0000000002-p00000.jsonl",
-      "segment-e0000000004-p00000.jsonl"))
-  }
-
   test("frontierGraceMs: observation-age pacing an mtime-forging writer cannot bypass") {
     import graft.sources.v2.{TopicMicroBatchStream, TopicOffset}
     import org.apache.spark.sql.connector.read.streaming.ReadLimit
@@ -677,13 +652,6 @@ class TopicDataSourceSpec extends SparkSuite {
       s"""{"topic":"t","partition":0,"offset":3,"key":"k","value":"old","event_time_ms":0,"publish_time_ms":1000,"producer_name":"p","sequence_id":3}"""
         .getBytes("UTF-8"))
     assert(SegmentStats.whollyOlderThan(known, horizonMs = 5000L))
-    // a pre-null-count sidecar (unknown count) must be treated as unsafe
-    SegmentStats.writeSidecar(known, SegmentStats.statsFor(known).get)
-    val side = SegmentStats.sidecarFor(known)
-    val trimmed = new String(java.nio.file.Files.readAllBytes(side.toPath),
-      "UTF-8").replaceAll(""","null_publish_time":\d+""", "")
-    java.nio.file.Files.write(side.toPath, trimmed.getBytes("UTF-8"))
-    assert(!SegmentStats.whollyOlderThan(known, horizonMs = 5000L))
   }
 
   test("null offset and sequence_id round-trip as null (not 0)") {
