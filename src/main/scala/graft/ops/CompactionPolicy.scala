@@ -14,7 +14,9 @@ package graft.ops
   *   K = readLatencyBudget / perBatchReadCost
   *
   * — compact once K batches have accumulated since the last compaction
-  * (the one trigger every store runs is [[GenStore.compactIfDue]]).
+  * (the one trigger every store runs is [[GenStore.compactIfDue]], and
+  * each compaction it fires is one [[GenStore.rewrite]], EdgeIndex's
+  * included).
   * Count, not cadence: a cron that compacts every fire
   * rewrites quiet stores for nothing (EdgeIndex compaction was the
   * single most expensive maintenance op measured, 24.7 s at n=200),

@@ -293,19 +293,11 @@ class ComponentsIndex(spark: SparkSession, path: String,
   private val hwm = new OrdHighWater(new java.io.File(path), "components",
     strictOrd)
 
-  /** Parquet files directly in `dir` that hold rows. A zero-row append
-    * still lands one schema-only file, which holds nothing to read or
-    * compact; its row count comes from the file footer, no Spark job. */
-  private def dataFilesIn(dir: File): Iterable[File] =
-    Option(dir.listFiles()).getOrElse(Array.empty).view
-      .filter(f => f.isFile && f.getName.endsWith(".parquet"))
-      .filter { f =>
-        val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-            new org.apache.hadoop.fs.Path(f.toURI),
-            spark.sparkContext.hadoopConfiguration))
-        try r.getRecordCount > 0 finally r.close()
-      }
+  /** Parquet files directly in `dir` — a pure listing; an empty append
+    * leaves none ([[addPairs]]). */
+  private def dataFilesIn(dir: File): Seq[File] =
+    Option(dir.listFiles()).getOrElse(Array.empty[File])
+      .filter(f => f.isFile && f.getName.endsWith(".parquet")).toSeq
 
   private def readDir(dir: File): Option[DataFrame] =
     if (dataFilesIn(dir).isEmpty) None
@@ -339,17 +331,30 @@ class ComponentsIndex(spark: SparkSession, path: String,
   /** Append one batch of pairs, stamped `ord` (epoch-ms or any monotone
     * batch stamp — the evidence-age axis [[compact]]'s retention prunes
     * on). Each pair lands twice (once headed by each endpoint), so the
-    * append is O(2·batch) rows; no closure work happens here. */
+    * append is O(2·batch) rows; no closure work happens here. A batch
+    * without pairs leaves no file: Spark still writes one schema-only
+    * file for an empty write, so the write's row count is observed
+    * (no extra job) and, at zero, the entries it added are deleted
+    * under the append's lock. */
   def addPairs(pairs: DataFrame, aCol: String = "doc_a",
                bCol: String = "doc_b", ord: Long): Unit =
       gens.append(hwm, ord) { gen =>
+    val dir = new File(gen, "delta")
+    def names = Option(dir.list()).getOrElse(Array.empty[String]).toSet
+    val before = names
+    val rows = Observation()
     val p = pairs.select(col(aCol).as("a"), col(bCol).as("b"))
       .where(col("a") =!= col("b"))
       .distinct()
     p.unionByName(p.select(col("b").as("a"), col("a").as("b")))
       .withColumn("ord", graft.functions.Params.paramLong(ord))
+      .observe(rows, count(lit(1)).as("n"))
       .write.mode("append")
-      .parquet(new File(gen, "delta").getAbsolutePath)
+      .parquet(dir.getAbsolutePath)
+    if (rows.get("n") == 0L) {
+      (names -- before).foreach(n => new File(dir, n).delete())
+      dir.delete() // only succeeds when the write created it
+    }
   }
 
   /** Delta links contracted onto their snapshot roots: each endpoint maps

@@ -15,12 +15,14 @@ import org.apache.spark.sql.functions._
   * complete ep-partitioned parquet dataset (`ep` = hash(src, dst) mod 16,
   * so membership probes prune to one partition within every batch).
   * Appends are staged-then-renamed: the batch writes to a private
-  * `.stage-*` dir and ONE atomic rename publishes it into the live
-  * generation. That makes concurrent appenders safe — a Hadoop committer
-  * stages task files under `_temporary` INSIDE the output directory, so
-  * two concurrent `mode("append")` jobs into one dir delete each other's
-  * in-flight task files; per-batch staging gives every job its own
-  * committer root (spec'd by the concurrent-appenders EdgeIndexSpec case).
+  * `.stage-*` dir OUTSIDE the lock — a Hadoop committer stages task files
+  * under `_temporary` INSIDE the output directory, so per-batch staging
+  * gives every job its own committer root and concurrent appenders write
+  * in parallel (spec'd by the concurrent-appenders EdgeIndexSpec case).
+  * Only the publish, ONE atomic rename into the live generation, runs
+  * under [[StoreLock]], like every other store write; [[compact]] is a
+  * [[GenStore.rewrite]] under the same lock, so a batch is never moved
+  * between generations.
   *
   * '''Crash contract''' (the shared [[GenStore]] discipline, swept by
   * FaultInjectionSpec): a crash before the publish rename leaves an
@@ -29,11 +31,6 @@ import org.apache.spark.sql.functions._
   * identical `(src, dst, ord)` rows under a fresh name and [[edges]]
   * collapses them, so replay never changes the graph. [[compact]]
   * rewrites one arbitrated row per edge under the atomic pointer swap.
-  * APPENDS may race each other — and race compact — freely: the
-  * publish-retry/carry-over handshake (see [[addEdges]]) converges
-  * every append-vs-compact interleaving without a lock, and
-  * CrossProcessStoreSpec exercises it under cross-process compaction
-  * churn. Compact-vs-compact is the one [[StoreLock]]-serialized pair.
   *
   * Reference analog: ledger ADD-entry appends with periodic compaction
   * (managed-ledger/.../ManagedLedgerImpl.java) — state accumulates by
@@ -45,125 +42,37 @@ final class EdgeIndex(spark: SparkSession, path: String) {
 
   private def ep = pmod(xxhash64(col("src"), col("dst")), lit(16))
 
+  /** A published batch: a `batch-*` dataset holding data files. */
+  private def isBatch(f: File): Boolean =
+    f.isDirectory && f.getName.startsWith("batch-") && Fs.hasDataFiles(f)
+
   private def batchDirs(gen: File): Seq[File] =
     Option(gen.listFiles()).getOrElse(Array.empty[File])
-      .filter(f => f.isDirectory && f.getName.startsWith("batch-")
-        && Fs.hasDataFiles(f))
-      .sortBy(_.getName).toSeq
+      .filter(isBatch).sortBy(_.getName).toSeq
 
   /** Append one crawl batch's edges. Duplicate edges within the batch
     * collapse before the write; duplicates ACROSS batches (or from a
     * crash-replayed batch) are collapsed by [[edges]]/[[compact]]. An
     * EMPTY batch (a crawl delta with no new links, or a replayed epoch
     * whose every doc was already stored upstream) publishes nothing —
-    * the staged dir has no data files and is discarded.
-    *
-    * '''Append vs compact''' (the one pair the per-store [[StoreLock]]
-    * does NOT serialize here — appenders stay lock-free and parallel):
-    * a [[compact]] that listed batches BEFORE this publish and swapped
-    * the pointer after it would strand the batch in the replaced
-    * generation. Both sides close the window without a lock — after
-    * publishing, the appender re-reads the pointer and MOVES its batch
-    * into the new live generation if it changed (one atomic rename per
-    * swap it lost against), while compact carries over any batch that
-    * appeared in the replaced generation after its listing. Whichever
-    * side sees the race moves the dir; the loser of the (at most one)
-    * double-move gets NoSuchFile and stops. A batch that lands twice in
-    * the read set is harmless by the store's replay contract —
-    * [[edges]]/[[compact]] collapse byte-identical rows. A crash between
-    * publish and the re-check is the ordinary crash-replay case: the
-    * caller re-appends, the stranded copy is reaped with its
-    * generation. */
+    * the staged dir has no data files and is discarded. The staged write
+    * runs outside the lock; the publish rename runs under
+    * [[StoreLock.exclusive]], whose fencing check therefore lands at the
+    * instant the batch becomes visible. */
   def addEdges(batch: DataFrame, ord: Long): Unit = {
-    // lock-free appends never pass through StoreLock.exclusive, so the
-    // multi-driver fencing check runs explicitly: an appender whose
-    // driver lost (or never held) a fenced store's ownership fails
-    // loudly here instead of publishing into a store it no longer owns
-    StoreFence.verify(gens.root)
-    var attempts = 0
-    var done = false
-    while (!done) {
-      attempts += 1
-      // losing requires a full swap+reap cycle landing inside one
-      // publish window — 5 consecutive losses means a runaway
-      // compactor, which deserves a loud failure, not a spin
-      require(attempts <= 5,
-        s"addEdges lost against $attempts maintenance cycles at $path")
-      done = tryPublish(batch, ord)
-    }
-  }
-
-  /** The live generation. Cold start is the ONE append step that must
-    * serialize across processes (two creators could allocate DIFFERENT
-    * generations and the later pointer swap would orphan the earlier
-    * one's batches — GenStore's in-process lock can't see another JVM),
-    * so it takes the [[StoreLock]]; steady-state appends never do. */
-  private def liveGen(): File = gens.currentGen().getOrElse(
-    StoreLock.exclusive(gens.root)(gens.liveOrCreate()))
-
-  /** One staged-write + publish attempt. Returns false — replay the
-    * batch — only when a concurrent reap deleted it before it reached
-    * the live generation (two full maintenance cycles inside one
-    * publish window); a replayed batch that ALSO survived elsewhere
-    * collapses under the store's replay dedup. */
-  private def tryPublish(batch: DataFrame, ord: Long): Boolean = {
-    val gen = liveGen()
-    val stage = new File(path,
-      s".stage-${java.util.UUID.randomUUID()}")
+    val stage = new File(path, s".stage-${java.util.UUID.randomUUID()}")
     batch.select(col("src"), col("dst")).distinct()
       .withColumn("ord", graft.functions.Params.paramLong(ord))
       .withColumn("ep", ep)
       .write.mode("overwrite").partitionBy("ep")
       .parquet(stage.getAbsolutePath)
     Fs.step("edge.batch-staged")
-    if (!Fs.hasDataFiles(stage)) { Fs.deleteRecursively(stage); return true }
-    // the staged write above is the LONG part of an append — re-check the
-    // fence right before the batch becomes visible, so a takeover landing
-    // mid-write is caught at the publish instant instead of leaking one
-    // batch into a store this driver no longer owns
-    try StoreFence.verify(gens.root)
-    catch { case t: Throwable => Fs.deleteRecursively(stage); throw t }
-    val name = s"batch-$ord-${java.util.UUID.randomUUID()}"
-    // publish: the generation we grabbed can be reaped under us by
-    // back-to-back compactions — re-aim the rename at the live pointer
-    var target = new File(gen, name)
-    var published = false
-    while (!published) {
-      try {
-        java.nio.file.Files.move(stage.toPath, target.toPath,
-          java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-        published = true
-      } catch {
-        case _: java.nio.file.NoSuchFileException =>
-          if (!stage.isDirectory) return false
-          target = new File(liveGen(), name)
-      }
-    }
-    Fs.step("edge.batch-published")
-    // follow any compaction swap(s) since the publish, so the batch is
-    // never stranded in a replaced generation (the append-vs-compact
-    // handshake — compact's carry-over covers the other orderings)
-    var cur = target
-    var live = gens.currentGen().orNull
-    while (cur != null && live != null &&
-        cur.getParentFile.getCanonicalPath != live.getCanonicalPath) {
-      try {
-        val moved = new File(live, name)
-        java.nio.file.Files.move(cur.toPath, moved.toPath,
-          java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-        cur = moved
-      } catch {
-        // a concurrent compactor's carry-over moved it — or a reap won
-        case _: java.nio.file.NoSuchFileException => cur = null
-      }
-      live = gens.currentGen().orNull
-    }
-    // when the move chain lost track, distinguish carried-over (name
-    // present in the live generation) from reaped (gone — replay). A
-    // batch a compactor FOLDED into its rewrite reads as absent and
-    // replays; the duplicate collapses under the replay dedup.
-    cur != null ||
-      gens.currentGen().exists(g => new File(g, name).isDirectory)
+    try if (Fs.hasDataFiles(stage)) StoreLock.exclusive(gens.root) {
+      java.nio.file.Files.move(stage.toPath, new File(gens.liveOrCreate(),
+        s"batch-$ord-${java.util.UUID.randomUUID()}").toPath,
+        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+      Fs.step("edge.batch-published")
+    } finally Fs.deleteRecursively(stage)
   }
 
   /** The live generation's raw `(src, dst, ord)` rows across all
@@ -182,61 +91,25 @@ final class EdgeIndex(spark: SparkSession, path: String) {
   }
 
   /** The accumulated edge set, deduped — equal to a full rebuild over
-    * the union of every appended batch (spec'd in EdgeIndexSpec).
-    *
-    * '''Reader staleness bound''' (weaker for LATE-PUBLISHED batches
-    * than the plain one-cycle [[GenStore]] guarantee): the
-    * append-vs-compact handshake MOVES a batch dir between generations
-    * — compact's carry-over, or the appender's own follow-the-pointer
-    * retry — so a lazy reader whose plan captured a listing that
-    * included such a batch can hit NoSuchFile mid-scan even though
-    * neither generation was reaped yet. Plans consumed promptly
-    * (collect/count/write within the maintenance cadence, every use in
-    * this library) never see it; a long-lived cached plan should be
-    * re-created from a fresh `edges()` call on scan failure rather
-    * than retried. Batches present at compaction's LISTING keep the
-    * full one-cycle guarantee — they are folded into the rewrite and
-    * their source generation is retained for one cycle. */
+    * the union of every appended batch (spec'd in EdgeIndexSpec). A
+    * reader bound to a replaced generation stays scannable for one
+    * [[compact]] cycle, the [[GenStore]] guarantee. */
   def edges(): DataFrame =
     rawRows().select(col("src"), col("dst")).dropDuplicates("src", "dst")
 
   /** Rewrite the live generation to one row per edge (earliest ord wins —
-    * pure bookkeeping, the edge set is unchanged); keeps the replaced
-    * generation for one cycle. Safe against concurrent appenders: after
-    * the swap, one carry-over pass moves any batch published into the
-    * replaced generation after the listing (the other half of the
-    * [[addEdges]] append-vs-compact handshake). Compact-vs-COMPACT is
-    * serialized on [[StoreLock]] — two unserialized compactors would
-    * race `nextGenIndex` onto one generation name and share a committer
-    * `_temporary` root inside it (the corruption StoreLock exists for);
-    * appends never take the lock. */
-  def compact(): Unit = StoreLock.exclusive(gens.root) {
-    gens.currentGen().foreach { cur =>
-    val dirs = batchDirs(cur)
-    if (dirs.nonEmpty) {
-      val next = gens.newGenDir()
-      dirs.map(d => spark.read.parquet(d.getAbsolutePath))
-        .reduce(_ unionByName _)
-        .groupBy(col("src"), col("dst")).agg(min(col("ord")).as("ord"))
-        .withColumn("ep", ep)
-        .transform(d => Par.byCols(d, col("ep")))
-        .write.mode("overwrite").partitionBy("ep")
-        .parquet(new File(next, "batch-0-compacted").getAbsolutePath)
-      gens.swapPointer(next.getName)
-      Fs.step("edge.compact-swapped")
-      val seen = dirs.map(_.getName).toSet
-      batchDirs(cur).filterNot(d => seen(d.getName)).foreach { late =>
-        try java.nio.file.Files.move(late.toPath,
-          new File(next, late.getName).toPath,
-          java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-        catch {
-          // the appender's own pointer re-check moved it first
-          case _: java.nio.file.NoSuchFileException => ()
-        }
-      }
-      gens.reapExcept(Set(next.getName, cur.getName))
-    }
-  } }
+    * pure bookkeeping, the edge set is unchanged) through
+    * [[GenStore.rewrite]]; keeps the replaced generation for one cycle.
+    * Appends wait for it at their publish. */
+  def compact(): Unit = gens.rewrite(isBatch) { (cur, next) =>
+    batchDirs(cur).map(d => spark.read.parquet(d.getAbsolutePath))
+      .reduce(_ unionByName _)
+      .groupBy(col("src"), col("dst")).agg(min(col("ord")).as("ord"))
+      .withColumn("ep", ep)
+      .transform(d => Par.byCols(d, col("ep")))
+      .write.partitionBy("ep")
+      .parquet(new File(next, "batch-0-compacted").getAbsolutePath)
+  }
 
   /** Published, uncompacted batch directories in the live generation —
     * the width of the union plan reads build, which is the axis read

@@ -22,6 +22,16 @@ object Fs {
     if (t != null) t(label)
   }
 
+  /** Full UTF-8 content of `f`, or None when absent. No exists-then-read:
+    * a concurrent delete between the two calls would escape as an
+    * exception instead of the absent ⇒ None answer. */
+  def readString(f: File): Option[String] =
+    try Some(new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8"))
+    catch {
+      case _: java.nio.file.NoSuchFileException |
+           _: java.io.FileNotFoundException => None
+    }
+
   /** Atomically replace `target` with `content` (UTF-8): write a tmp
     * sibling, ATOMIC_MOVE it over the target, and on filesystems without
     * atomic move fall back to a plain replacing copy — callers of this

@@ -120,34 +120,25 @@ private[ops] final class GenStore(path: String) {
     * mid-append leaves a pointed-at generation with partial state — which
     * each store's append semantics must make replayable).
     *
-    * '''Concurrency''': IN-PROCESS concurrent creators (e.g. crawl
-    * workers fanning out onto one empty [[EdgeIndex]]) serialize on a
-    * per-path lock — without it, racers allocate different generations
-    * and the last replacing pointer swap orphans every batch the other
-    * "winners" already published (POSIX rename REPLACES, so there is no
-    * portable filesystem test-and-set to build a lock-free cold start
-    * on). CROSS-process, the callers serialize creation on
-    * [[StoreLock]]: the probe-then-append stores hold it for every
-    * append anyway, and [[EdgeIndex]]'s lock-free appenders take it for
-    * the one cold-start step (CrossProcessStoreSpec races two real JVMs
-    * on an empty root to pin this). The reference's shape is the same
+    * '''Call under [[StoreLock]]''': two unserialized creators would
+    * allocate different generations and the last replacing pointer swap
+    * would orphan everything the other wrote (POSIX rename REPLACES, so
+    * there is no portable filesystem test-and-set to build a lock-free
+    * cold start on). Every caller holds the lock — [[append]], the IVF
+    * stores' appends and first quantizer save, and [[EdgeIndex]]'s
+    * publish (CrossProcessStoreSpec races two real JVMs on an empty root
+    * to pin this). The reference's shape is the same
     * metadata-op-before-appends: a ledger is created in one metadata
     * operation before entries are appended
     * (managed-ledger/.../ManagedLedgerImpl.java open-or-create). */
   def liveOrCreate(): File =
     currentGen().getOrElse {
-      val lock = GenStore.createLocks.computeIfAbsent(
-        root.getAbsolutePath, _ => new Object)
-      lock.synchronized {
-        currentGen().getOrElse {
-          root.mkdirs()
-          val gen = newGenDir()
-          gen.mkdirs()
-          Fs.step("create.gen-made")
-          swapPointer(gen.getName)
-          gen
-        }
-      }
+      root.mkdirs()
+      val gen = newGenDir()
+      gen.mkdirs()
+      Fs.step("create.gen-made")
+      swapPointer(gen.getName)
+      gen
     }
 
   /** Append one ord-stamped batch: under [[StoreLock]], check `ord`
@@ -286,10 +277,6 @@ private[ops] final class GenStore(path: String) {
 }
 
 private[ops] object GenStore {
-  /** Per-path cold-start creation locks (see [[GenStore.liveOrCreate]]). */
-  private val createLocks =
-    new java.util.concurrent.ConcurrentHashMap[String, Object]()
-
   /** The `present` test of the hash-partitioned stores: a Hive partition
     * directory `<column>=...` (a zero-row partitioned append creates
     * none). */

@@ -213,21 +213,21 @@ class IvfIndex(spark: SparkSession, path: String, idCol: String,
     * [[KMeans.assignExpr]] and probe with [[KMeans.probeExpr]] over THIS
     * array. */
   def centroids(train: DataFrame, k: Int, iters: Int): Array[Array[Double]] = {
-    quantizerIn(gens.currentGen()) match {
-      case Some(cents) =>
-        // the persisted artifact wins over the arguments — but silently
-        // returning a different-k quantizer breaks callers sized to k. The
-        // postings were laid out under THIS artifact, so the remedy is to
-        // match it, never to delete it (that would strand the postings).
-        // (A retraining compact refreshes the artifact and the postings
-        // TOGETHER, so "the live artifact" is always the live layout.)
+    // the persisted artifact wins over the arguments — but silently
+    // returning a different-k quantizer breaks callers sized to k. The
+    // postings were laid out under THIS artifact, so the remedy is to
+    // match it, never to delete it (that would strand the postings).
+    // (A retraining compact refreshes the artifact and the postings
+    // TOGETHER, so "the live artifact" is always the live layout.)
+    def persisted(): Option[Array[Array[Double]]] =
+      quantizerIn(gens.currentGen()).map { cents =>
         require(cents.length == k,
           s"persisted quantizer at $path has ${cents.length} cells but " +
             s"caller asked for $k — pass k=${cents.length} (the layout the " +
             "postings were written under), or rebuild the index to change k")
         cents
-      case None =>
-        locally {
+      }
+    persisted().getOrElse {
       // refuse to FIRST-train over existing postings: they were written
       // under some other cell layout (caller-provided cells, or a lost
       // artifact) and a fresh quantizer would silently probe cells the
@@ -244,12 +244,15 @@ class IvfIndex(spark: SparkSession, path: String, idCol: String,
       require(cents.length == k,
         s"training produced ${cents.length} < $k centroids — too few " +
           "distinct vectors in the training frame; lower k or train on more data")
-      // saved INSIDE the (possibly fresh) live generation, so quantizer and
-      // postings always travel — and swap — together
-      KMeans.saveCentroids(spark,
-        new File(gens.liveOrCreate(), "_quantizer").getAbsolutePath, cents)
-      cents
-        }
+      // saved under the lock, INSIDE the (possibly fresh) live generation,
+      // so quantizer and postings always travel — and swap — together. A
+      // concurrent first caller that saved while this one trained wins:
+      // postings may already be laid out under its quantizer.
+      StoreLock.exclusive(gens.root)(persisted().getOrElse {
+        KMeans.saveCentroids(spark,
+          new File(gens.liveOrCreate(), "_quantizer").getAbsolutePath, cents)
+        cents
+      })
     }
   }
 

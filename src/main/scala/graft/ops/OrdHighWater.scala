@@ -16,10 +16,8 @@ import java.io.File
   * wrongly (retention prunes on ord).
   *
   * This helper persists the max committed ord (`_ord_hwm` in the store
-  * root, written under the caller's [[StoreLock]] through [[AdvisoryFs]]
-  * — [[LocalAdvisoryFs]] behind the `File` constructor,
-  * [[HadoopAdvisoryFs]] for non-POSIX roots) and [[check]]s every
-  * append: below the
+  * root, replaced atomically through [[Fs.atomicWriteString]] under the
+  * caller's [[StoreLock]]) and [[check]]s every append: below the
   * mark logs a loud warning (legitimate only for a late CONCURRENT
   * appender whose batch genuinely predates the stored ones — the
   * cross-process fan-out shape), or fails when `strict` — the right
@@ -34,22 +32,19 @@ import java.io.File
   * re-admitting them (pulsar-broker/.../persistent/MessageDeduplication
   * .java isDuplicate).
   */
-private[ops] final class OrdHighWater(afs: AdvisoryFs, root: String,
-                                      store: String, strict: Boolean) {
-
-  def this(root: File, store: String, strict: Boolean) =
-    this(LocalAdvisoryFs, root.getPath, store, strict)
+private[ops] final class OrdHighWater(root: File, store: String,
+                                      strict: Boolean) {
 
   private lazy val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
-  private def hwmPath = afs.child(root, "_ord_hwm")
+  private def hwmFile = new File(root, "_ord_hwm")
 
   /** The highest ord any append has committed, if readable. */
   def value(): Option[Long] =
-    afs.read(hwmPath).flatMap { rawFull =>
+    Fs.readString(hwmFile).flatMap { rawFull =>
       val raw = rawFull.trim
       raw.toLongOption.orElse {
-        log.warn(s"unreadable ord high-water mark at $hwmPath ('$raw') — " +
+        log.warn(s"unreadable ord high-water mark at $hwmFile ('$raw') — " +
           "treating as absent; the next append rewrites it")
         None
       }
@@ -74,5 +69,5 @@ private[ops] final class OrdHighWater(afs: AdvisoryFs, root: String,
     * crash between append and advance leaves the mark stale-low, which
     * only weakens the advisory; never blocks the sanctioned replay. */
   def advance(ord: Long): Unit =
-    if (value().forall(_ < ord)) afs.write(hwmPath, ord.toString)
+    if (value().forall(_ < ord)) Fs.atomicWriteString(hwmFile, ord.toString)
 }

@@ -11,7 +11,7 @@ import scala.jdk.CollectionConverters._
   * appenders safe inside one JVM, but committer `_temporary` roots, POSIX
   * renames, and file locks are per-process state — so this spec forks two
   * REAL JVMs (ProcessBuilder → graft.tools.ForkAppend) appending
-  * overlapping batches to ONE EdgeIndex (lock-free staged-rename appends)
+  * overlapping batches to ONE EdgeIndex (staged writes, locked renames)
   * and ONE ExactDedupIndex (StoreLock-serialized probe-then-append)
   * concurrently, with a ready/go barrier so the append phases actually
   * overlap, and asserts both stores land on the serial baseline's state.
@@ -24,8 +24,9 @@ import scala.jdk.CollectionConverters._
   * two processes' append jobs into one directory share the committer's
   * `_temporary` root — each job DELETES that tree on commit, destroying
   * the other's in-flight task files; the probe-then-append stores are
-  * also semantically single-writer. The edge store needs no lock: every
-  * batch stages in a private dir and publishes by one atomic rename.
+  * also semantically single-writer. The edge store takes the lock only
+  * for its publish: every batch stages in a private dir and publishes by
+  * one atomic rename.
   *
   * Reference analog: exclusive-producer access vs shared topic appends
   * (pulsar-client-api/.../ProducerAccessMode.java) and ledger creation
@@ -100,8 +101,8 @@ class CrossProcessStoreSpec extends SparkSuite {
     // maintenance churn DURING the fan-out: this process compacts both
     // stores on a tight loop while the children append — generation
     // swaps and reaps must stay safe across processes (StoreLock
-    // serializes the exact store's faces; the edge store's publish
-    // retry + carry-over handshake covers its lock-free appends)
+    // serializes the exact store's faces and the edge store's publish
+    // renames against both compactions)
     @volatile var compactions = 0
     @volatile var churnFailure: Throwable = null
     val compactor = new Thread(() => {

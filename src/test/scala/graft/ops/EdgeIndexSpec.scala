@@ -71,55 +71,36 @@ class EdgeIndexSpec extends SparkSuite {
     assert(edgeSet(new EdgeIndex(spark, dir).edges()) == before)
   }
 
-  /** Run `body` with a one-shot action injected at the named Fs.step
-    * boundary (the injected action's own step crossings are ignored). */
-  private def withInjection(at: String)(action: => Unit)(body: => Unit): Unit = {
+  test("an append started mid-compact publishes into the new generation") {
+    // from compact's generation alloc (the store lock held, the batch
+    // listing not yet taken), a second thread appends: its staged write
+    // runs alongside the compaction and its publish waits for the lock,
+    // so the batch lands in the generation compact swapped in
+    val dir = freshDir()
+    val idx = new EdgeIndex(spark, dir)
+    idx.addEdges(b1, ord = 0)
+    val before = idx.currentGenerationPath
+    @volatile var failure: Throwable = null
+    val appender = new Thread(() =>
+      try idx.addEdges(b2, ord = 1)
+      catch { case t: Throwable => failure = t })
     val fired = new java.util.concurrent.atomic.AtomicBoolean(false)
     Fs.stepTrap = label =>
-      if (label == at && fired.compareAndSet(false, true)) {
-        val saved = Fs.stepTrap
-        Fs.stepTrap = null // the injected action crosses steps too
-        try action finally Fs.stepTrap = saved
-      }
-    try body finally Fs.stepTrap = null
-  }
-
-  // ---- append-vs-compact: the one writer pair not serialized by a lock.
-  // Both interleavings are driven DETERMINISTICALLY through the Fs.step
-  // hook instead of hoping a thread race lands in the window.
-
-  test("compact swapping mid-append: the appender re-publishes its batch") {
-    // compact runs while the batch is staged (so its listing excludes the
-    // batch) and swaps the pointer BEFORE the publish — the exact
-    // ordering that used to strand the batch in the replaced generation
-    val dir = freshDir()
-    val idx = new EdgeIndex(spark, dir)
-    idx.addEdges(b1, ord = 0)
-    withInjection(at = "edge.batch-staged")(idx.compact()) {
-      idx.addEdges(b2, ord = 1)
-    }
-    val want = edgeSet(b1.unionAll(b2).distinct())
-    assert(edgeSet(idx.edges()) == want,
-      "batch published into a replaced generation was lost")
-    // and it survives the NEXT maintenance cycle (the reap that would
-    // have deleted a stranded copy)
-    idx.compact()
-    assert(edgeSet(new EdgeIndex(spark, dir).edges()) == want)
-  }
-
-  test("append landing mid-compact: the carry-over publishes the late batch") {
-    // the appender publishes after compact's listing but before its swap
-    // completes its read of the world — compact's post-swap carry-over
-    // must move the late batch into the new generation
-    val dir = freshDir()
-    val idx = new EdgeIndex(spark, dir)
-    idx.addEdges(b1, ord = 0)
-    withInjection(at = "gen.alloc")(idx.addEdges(b2, ord = 1)) {
-      idx.compact()
-    }
+      if (label == "gen.alloc" && fired.compareAndSet(false, true))
+        appender.start()
+    try idx.compact() finally Fs.stepTrap = null
+    assert(fired.get(), "compact never allocated a generation")
+    appender.join(120000)
+    assert(!appender.isAlive, "the appender never published")
+    assert(failure == null, s"the append failed: $failure")
+    val live = idx.currentGenerationPath
+    assert(live.isDefined && live != before, "compact kept the live generation")
+    assert(new java.io.File(live.get).list().exists(_.startsWith("batch-1-")),
+      "the batch did not land in the new live generation")
     val want = edgeSet(b1.unionAll(b2).distinct())
     assert(edgeSet(idx.edges()) == want,
       "batch appended during compaction was lost")
+    // and it survives the next compaction, which reaps the replaced one
     idx.compact()
     assert(edgeSet(new EdgeIndex(spark, dir).edges()) == want)
   }

@@ -13,7 +13,7 @@ import scala.jdk.CollectionConverters._
   * that replaces the convention: attach-over-live-owner fails, a forced
   * takeover fences the incumbent, and a writer with a stale (or absent)
   * epoch gets a loud [[FencedStoreException]] on EVERY probe-then-append
-  * store's append face — plus the edge store's lock-free appends — with
+  * store's append face — plus the edge store's publish — with
   * a two-JVM variant for the genuine second-process case.
   *
   * Reference analog: exclusive-producer access modes
@@ -73,8 +73,8 @@ class FencingSpec extends SparkSuite {
     assert(myNonce.nonEmpty)
 
     // (1) same-nonce benign self-refresh: disk carries OUR nonce at a
-    // NEWER epoch (this driver's own in-flight re-acquire, seen by a
-    // lock-free verify before the held map updated) — verify passes,
+    // NEWER epoch (a record this process instance wrote that the held
+    // map has not caught up with) — verify passes,
     // and heartbeat adopts the newer epoch rather than regressing it
     writeOwnerFile(root.getPath,
       s"v2|${e0 + 5}|driver-a|$myNonce|${System.currentTimeMillis()}|#")
@@ -127,6 +127,103 @@ class FencingSpec extends SparkSuite {
     StoreFence.release(root, deleteOwnerFile = true)
   }
 
+  test("acquire/verify/heartbeat/release; a deposed release keeps the successor's record") {
+    val root = new File(tmp("fence-lifecycle"))
+    assert(StoreFence.acquire(root, "driver-a") == 1L)
+    StoreFence.verify(root) // the owner passes its own data path
+    StoreFence.heartbeat(root)
+    // a remote takeover (foreign nonce, higher epoch) fences this holder
+    remoteTakeover(root.getPath, epoch = 99L)
+    val successor = readOwnerFile(root.getPath)
+    intercept[FencedStoreException](StoreFence.verify(root))
+    intercept[FencedStoreException](StoreFence.heartbeat(root))
+    // the DEPOSED driver's clean shutdown must NOT delete its
+    // successor's owner record — that would un-fence the store for
+    // every writer until the successor's next beat
+    StoreFence.release(root, deleteOwnerFile = true)
+    assert(readOwnerFile(root.getPath) == successor)
+    // ... while the RIGHTFUL owner's release does delete its own record
+    Thread.sleep(5)
+    StoreFence.acquire(root, "driver-b", leaseMs = 1L) // lease expired
+    StoreFence.release(root, deleteOwnerFile = true)
+    assert(!new File(root, "_owner").exists())
+  }
+
+  test("an owner record deleted out of band: the owner's next heartbeat restores it") {
+    val root = new File(tmp("fence-restore"))
+    val e = StoreFence.acquire(root, "driver-b", force = true)
+    new File(root, "_owner").delete()
+    // the unfenced window is real: the record is absent...
+    assert(!new File(root, "_owner").exists())
+    // ...and the owner's next beat closes it from the held copy
+    StoreFence.heartbeat(root)
+    assert(readOwnerFile(root.getPath).startsWith(s"v2|$e|driver-b|"))
+    // closed: a second driver's ordinary attach is rejected again
+    intercept[FencedStoreException](StoreFence.acquire(root, "driver-c"))
+    StoreFence.release(root, deleteOwnerFile = true)
+  }
+
+  test("torn/unparseable owner records fail safe: REJECT, never admit") {
+    // a short record, bare and behind the v2 marker: the fencing path
+    // must reject writers on it, not treat the store as unfenced
+    Seq("7|drive" -> "unparseable", "v2|7|driv" -> "torn v2").foreach {
+      case (record, why) =>
+        val root = new File(tmp("fence-torn"))
+        writeOwnerFile(root.getPath, record)
+        val e = intercept[FencedStoreException](StoreFence.verify(root))
+        assert(e.getMessage.contains(why), e.getMessage)
+        // an ordinary (non-forced) acquire is rejected on it too
+        intercept[FencedStoreException](StoreFence.acquire(root, "driver-a"))
+        // ... but a torn record must not brick RECOVERY: force=true takes
+        // over, resuming past the salvaged epoch field (7), so the
+        // crashed holder's epoch stays fenced
+        assert(StoreFence.acquire(root, "driver-a", force = true) == 8L)
+        StoreFence.verify(root)
+        StoreFence.release(root, deleteOwnerFile = true)
+    }
+  }
+
+  test("a v2 record truncated mid-heartbeat REJECTS, never reads as ancient") {
+    val root = new File(tmp("fence-trunc"))
+    // the prefix a partial replace can expose when the writer dies
+    // mid-heartbeat-number: 5 fields, all non-empty. Read as a complete
+    // record, its heartbeat (17 ms after 1970) would have expired any
+    // lease — admitting a non-forced takeover over a LIVE owner, the one
+    // fail direction the fencing layer must never take. The v2 marker +
+    // `#` terminator make every proper prefix unreadable instead: REJECT.
+    writeOwnerFile(root.getPath, "v2|7|driver-a|ab12cd34ef56|17")
+    val e = intercept[FencedStoreException](StoreFence.verify(root))
+    assert(e.getMessage.contains("torn v2"))
+    intercept[FencedStoreException](StoreFence.acquire(root, "driver-b"))
+    // deliberate recovery stays possible, resuming past the salvaged
+    // epoch field (the marker is skipped, 7 survives)
+    assert(StoreFence.acquire(root, "driver-b", force = true) == 8L)
+    StoreFence.verify(root)
+    StoreFence.release(root, deleteOwnerFile = true)
+  }
+
+  test("a retired 3- or 4-field owner record is refused; force takes over past it") {
+    // the pre-terminator (epoch|id|nonce|hb) and nonce-less (epoch|id|hb)
+    // records are no longer a format: like any unparseable record they
+    // REJECT writers and ordinary attachers, and the forced acquire is
+    // the way out, keeping the epoch count past the record's first field
+    Seq("7|old-driver|abcdabcdabcd|12345" -> 8L,
+        "3|older-driver|12345" -> 4L).foreach { case (record, epoch) =>
+      val root = new File(tmp("fence-retired"))
+      writeOwnerFile(root.getPath, record)
+      val e = intercept[FencedStoreException](StoreFence.verify(root))
+      assert(e.getMessage.contains("unparseable"), e.getMessage)
+      intercept[FencedStoreException](StoreFence.acquire(root, "driver-a"))
+      assert(readOwnerFile(root.getPath) == record,
+        "a refused acquire must leave the record untouched")
+      assert(StoreFence.acquire(root, "driver-a", force = true) == epoch)
+      val rec = readOwnerFile(root.getPath)
+      assert(rec.startsWith(s"v2|$epoch|driver-a|") && rec.endsWith("|#"), rec)
+      StoreFence.verify(root)
+      StoreFence.release(root, deleteOwnerFile = true)
+    }
+  }
+
   test("a stale writer fails loudly on EVERY probe-then-append store") {
     val base = tmp("fence-stores")
     val docs = Seq((1L, "alpha beta gamma"), (2L, "delta epsilon zeta"))
@@ -176,7 +273,7 @@ class FencingSpec extends SparkSuite {
       StoreFence.release(new File(p))
     }
 
-    // the edge store's LOCK-FREE appends carry the same check
+    // the edge store's publish carries the same check
     val ep = s"$base/edges"
     StoreFence.acquire(new File(ep), "driver-a")
     val edges = new EdgeIndex(spark, ep)
@@ -248,8 +345,8 @@ class FencingSpec extends SparkSuite {
 
     // this driver force-acquires (one racer); a REAL second JVM leaves
     // the disk state of the other racer winning the same epoch (see
-    // ForkFence same-epoch-steal: the race itself needs a non-POSIX
-    // root — the local OS lock serializes acquires — so the child
+    // ForkFence same-epoch-steal: the race itself needs racers that do
+    // not share the OS lock, which serializes acquires — so the child
     // plants the post-race record under its own process nonce)
     StoreFence.acquire(new File(root), "parent-driver", force = true)
     idx.addAndDedup(docs, 1L).count()

@@ -101,6 +101,25 @@ class OrdHighWaterSpec extends SparkSuite {
       .count() // above the mark: fine
   }
 
+  test("the mark itself: strict check, same-ord replay, never regresses, heals") {
+    val dir = tmp("hwm-unit")
+    val hwm = new OrdHighWater(new File(dir), "hwm-spec", true)
+    assert(hwm.value().isEmpty)
+    hwm.check(5L)
+    hwm.advance(5L)
+    assert(hwm.value().contains(5L))
+    hwm.check(5L) // same-ord crash replay is the one sanctioned reuse
+    intercept[IllegalStateException](hwm.check(3L)) // strict: below fails
+    hwm.advance(3L) // the mark never regresses
+    assert(hwm.value().contains(5L))
+    // unreadable mark degrades to "no check" (advisory), next advance heals
+    Files.write(new File(dir, "_ord_hwm").toPath, "not-a-long".getBytes)
+    assert(hwm.value().isEmpty)
+    hwm.check(1L)
+    hwm.advance(9L)
+    assert(hwm.value().contains(9L))
+  }
+
   test("a torn/corrupt mark degrades to no-check and self-heals — never bricks appends") {
     val dir = tmp("hwm-torn")
     val idx = new Bm25Index(spark, dir, "id", "text", strictOrd = true)

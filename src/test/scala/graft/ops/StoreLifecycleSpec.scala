@@ -116,6 +116,16 @@ class StoreLifecycleSpec extends SparkSuite {
   private def generations(dir: String): Seq[String] =
     new GenStore(dir).generations()
 
+  test("components: an empty addPairs leaves no parquet file in delta/") {
+    val dir = fresh()
+    new ComponentsIndex(spark, dir)
+      .addPairs(pairs(0), "doc_a", "doc_b", 0L)
+    val left = new GenStore(dir).currentGen().toSeq.flatMap(g =>
+      Option(new java.io.File(g, "delta").list()).getOrElse(Array.empty[String]))
+      .filter(_.endsWith(".parquet"))
+    assert(left.isEmpty, s"an empty append left $left")
+  }
+
   stores.foreach { s =>
     test(s"${s.name}: compact after an empty append is a no-op") {
       s.emptyBatches.foreach { b =>

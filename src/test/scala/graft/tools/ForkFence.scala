@@ -8,8 +8,7 @@ import graft.ops.{FencedStoreException, StoreFence}
   * held-epoch map is per-PROCESS state, so a genuine second driver can
   * only be represented by a second JVM. No Spark session is needed: the
   * fencing check every store append runs ([[StoreFence.verify]]) is pure
-  * owner-file machinery, which is exactly what makes it deployable
-  * beyond POSIX.
+  * owner-file machinery.
   *
   * Modes:
   *  - `stale-writer <root>`: this process never attached. Expect
@@ -23,7 +22,7 @@ import graft.ops.{FencedStoreException, StoreFence}
   *    double force-takeover — both drivers read epoch N and wrote N+1;
   *    disk kept this child's record. The race itself cannot be staged on
   *    a local mount ([[graft.ops.StoreLock]]'s OS lock serializes
-  *    acquires there; only non-POSIX roots can interleave), so the child
+  *    acquires there), so the child
   *    reads the parent's owner record and rewrites it at the SAME epoch
   *    under its own freshly-minted process nonce — the exact disk state
   *    the race leaves. The parent (the disk loser) must then fail its
