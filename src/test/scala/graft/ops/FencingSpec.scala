@@ -127,7 +127,7 @@ class FencingSpec extends SparkSuite {
     StoreFence.release(root, deleteOwnerFile = true)
   }
 
-  test("acquire/verify/heartbeat/release; a deposed release keeps the successor's record") {
+  test("acquire/verify/heartbeat/release; a deposed release spares the successor") {
     val root = new File(tmp("fence-lifecycle"))
     assert(StoreFence.acquire(root, "driver-a") == 1L)
     StoreFence.verify(root) // the owner passes its own data path
