@@ -235,7 +235,7 @@ object Bench {
         return -1.0
       }
       val dt = (System.nanoTime() - t0) / 1e9
-      // UNTIMED inter-query hygiene: queries persist/localCheckpoint
+      // UNTIMED inter-query hygiene: queries persist/materialize
       // internally and their blocks outlive the query (freed only when the
       // RDD is GC'd), so a long board at larger SFs accumulates storage
       // blocks until eviction churn inflates later queries (measured ~10×

@@ -64,7 +64,7 @@ object RagIngest {
 
     val perDir = dirs.map { d =>
       val tmp = java.nio.file.Files.createTempDirectory("rag-ingest")
-      val chunks = chunkVecs(spark, d).localCheckpoint(true)
+      val chunks = graft.ops.Materialize(chunkVecs(spark, d))
       val nChunks = chunks.count()
       val k = graft.queries.VectorQueries.sqrtCells(nChunks)
       val idx = new graft.ops.IvfIndex(spark,
@@ -93,6 +93,7 @@ object RagIngest {
       val (retrieveS, nAnn) = timed(
         idx.searchOwn(queries, nprobe = 2, k = 5)
           .select(col("query_id")).distinct().count())
+      graft.ops.Materialize.release(chunks)
       val firstHalf = batchS.take(nBatches / 2).sum / (nBatches / 2)
       val secondHalf = batchS.drop(nBatches / 2).sum /
         (nBatches - nBatches / 2)

@@ -1,5 +1,6 @@
 package graft
 
+import graft.ops.Materialize
 import org.apache.spark.sql.functions._
 
 /** Streaming throughput benchmark (supplementary to Bench): replays the
@@ -217,13 +218,12 @@ object StreamBench {
         val docs = graft.core.Tables.documents(spark, sfDir)
         val nd = docs.count()
         val docsTopic = tmp.resolve("docs").toString // staged by the stage above
-        val evalFps = docs.where(col("doc_id") % 10 === 0)
+        val evalFps = Materialize(docs.where(col("doc_id") % 10 === 0)
           .select(graft.functions.TextFunctions.fingerprint(col("text"))
             .as("__fp"))
-          .distinct().localCheckpoint(true)
-        val emb = graft.core.Tables.embeddings(spark, sfDir)
-          .select(col("vec_id").as("doc_id"), col("embedding"))
-          .localCheckpoint(true)
+          .distinct())
+        val emb = Materialize(graft.core.Tables.embeddings(spark, sfDir)
+          .select(col("vec_id").as("doc_id"), col("embedding")))
         val lsh = new graft.ops.MinHashIndex(spark,
           tmp.resolve("lsh2").toString, "doc_id", "text", strictOrd = true)
         val cc = new graft.ops.ComponentsIndex(spark,
@@ -323,11 +323,10 @@ object StreamBench {
               // downstream
               val allRules = cascadeRules :+
                 ("model" -> (col("model_score") >= 0L))
-              // forces extract + normalize + model gate + cascade (the
-              // localCheckpoint materializes the whole upstream plan)
-              val decided = staged("extract_gate_cascade")(
-                graft.ops.FilterCascade
-                  .withVerdict(scored, allRules).localCheckpoint(true))
+              // forces extract + normalize + model gate + cascade
+              // (Materialize runs the whole upstream plan)
+              val decided = staged("extract_gate_cascade")(Materialize(
+                graft.ops.FilterCascade.withVerdict(scored, allRules)))
               val att = staged("attrition")(graft.ops.FilterCascade
                 .attrition(decided, allRules.map(_._1)).collect().head)
               attTotals.keys.foreach(k =>
@@ -340,15 +339,19 @@ object StreamBench {
                 graft.functions.TextFunctions.fingerprint(quality("text"))
                   === evalFps("__fp"), "left_anti")
                 .persist()
+              // the batch's materialized frames, released with `kept`
+              val held = scala.collection.mutable.ArrayBuffer(decided)
               try {
-                // localCheckpoint (NOT persist): the probe plan reads the
+                // Materialize (NOT persist): the probe plan reads the
                 // store being appended to — path-registered caches would
-                // be recached post-append with a refreshed listing
+                // be recached post-append with a refreshed listing, while
+                // a recompute re-reads the file list pinned in the RDD
                 // (this stage also materializes `kept`: the eval-set
                 // anti-join + the persist, the first action on it)
-                val novelIds = staged("exact_dedup")(
+                val novelIds = staged("exact_dedup")(Materialize(
                   exact.addAndDedup(kept, ord = e, bloom = true)
-                    .select(col("doc_id")).localCheckpoint(true))
+                    .select(col("doc_id"))))
+                held += novelIds
                 val fresh = kept.join(novelIds, Seq("doc_id"))
                 staged("edges_append")(edgeIdx.addEdges(fresh.select(
                   (col("doc_id") % 50).as("src"),
@@ -356,14 +359,15 @@ object StreamBench {
                 // strip corpus-recurring structural units before the
                 // text-side indexes (near-dup pairing + full-text) — the
                 // ingest-time boilerplate filter; embeddings keep the
-                // untouched doc ids. localCheckpoint: the excision is a
+                // untouched doc ids. Materialize: the excision is a
                 // LAZY plan over batch + para-store probe joins, and FOUR
                 // consumers read it (simhash, lsh→cc, bm25, chunk write)
                 // — without materializing once, each consumer re-ran the
                 // whole excision, which the r18 stage timers surfaced as
                 // inflated probe-store stages
                 val excised = staged("para_excise")(
-                  para.addAndExcise(fresh, ord = e).localCheckpoint(true))
+                  Materialize(para.addAndExcise(fresh, ord = e)))
+                held += excised
                 // cheap near-dup FLAG at ingest: the persisted simhash
                 // index marks docs within hamming 1 of any earlier
                 // arrival (exists-earlier detection) before the heavier
@@ -418,7 +422,10 @@ object StreamBench {
                   fired("ragivf", ragIvf.compactIfDue(probeK))
                   fired("edges", edgeIdx.compactIfDue(edgeK))
                 }
-              } finally { kept.unpersist(); () }
+              } finally {
+                kept.unpersist()
+                Materialize.release(held.toSeq: _*)
+              }
             }
             .option("checkpointLocation", tmp.resolve("cp5").toString).start()
         }

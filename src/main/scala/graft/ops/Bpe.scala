@@ -44,19 +44,19 @@ object Bpe {
   /** Learn `numMerges` merges from the corpus's whitespace words. Each
     * iteration is one distributed pair-count aggregate over the cached
     * word-type table plus a 1-row argmax collect; the table is re-written
-    * (one `replace`) and re-checkpointed, so plan depth stays O(1).
+    * (one `replace`) and re-materialized, so plan depth stays O(1), and
+    * the superseded table is released (the call leaves nothing persisted).
     * Fails loudly if the corpus runs out of adjacent pairs early — a
     * shorter table would silently desynchronize consumers sized to
     * `numMerges` (and the SQL oracle's unrolled replay). */
   def train(docs: DataFrame, textCol: String, numMerges: Int): Seq[Merge] = {
-    var words = docs
+    var words = Materialize(docs
       .select(explode(split(col(textCol), " ")).as("w"))
       .where(col("w") =!= "" && !col("w").contains(Delim))
       .groupBy("w").agg(count(lit(1)).as("freq"))
-      .select(wrap(col("w")).as("s"), col("freq"))
-      .localCheckpoint()
+      .select(wrap(col("w")).as("s"), col("freq")))
     val out = Seq.newBuilder[Merge]
-    (0 until numMerges).foreach { i =>
+    try (0 until numMerges).foreach { i =>
       val syms = split(regexp_replace(col("s"),
         s"^$Delim|$Delim$$", ""), s"$Delim$Delim")
       val best = words
@@ -74,10 +74,11 @@ object Bpe {
           s"corpus too small for numMerges=$numMerges")
       val m = Merge(best(0).getString(0), best(0).getString(1))
       out += m
-      words = words
-        .select(mergeOnce(col("s"), m).as("s"), col("freq"))
-        .localCheckpoint()
-    }
+      val prev = words
+      words = Materialize(
+        prev.select(mergeOnce(col("s"), m).as("s"), col("freq")))
+      Materialize.release(prev)
+    } finally Materialize.release(words)
     out.result()
   }
 

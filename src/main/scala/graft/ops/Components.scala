@@ -25,8 +25,9 @@ import org.apache.spark.sql.functions._
   * propagation needs L; cliques and star forests close in one. No neighbor
   * list is ever collected: a 100M-member boilerplate cluster contributes
   * one min per partition to its hub's aggregate, never an array. The
-  * driver loop is bounded (maxRounds) and every materialization truncates
-  * lineage, so plan depth stays O(1) instead of growing with rounds.
+  * driver loop is bounded (maxRounds) and every materialization cuts the
+  * plan ([[Materialize]]), so plan depth stays O(1) instead of growing
+  * with rounds.
   */
 object Components {
 
@@ -42,78 +43,11 @@ object Components {
 
   /** As [[connected]], also returning the number of alternating rounds the
     * algorithm took (exposed for tests asserting the O(log n) behavior).
-    *
-    * Lineage truncation between rounds: with a session checkpoint dir
-    * configured (the real-cluster deployment shape), each round's edge set
-    * and labelling are written to `<checkpointDir>/graft-cc/<uuid>/rN` and
-    * read back — reliable (survives executor loss, where localCheckpoint
-    * blocks die with their executor), computed once (Dataset.checkpoint
-    * would run the plan twice), and BOUNDED: a file set is deleted as soon
-    * as nothing later reads it, so a call holds at most two copies on disk
-    * and leaves exactly one (backing the returned frame). Lazy
-    * consumers clean the `graft-cc/` parent once results are consumed;
-    * eager consumers use [[connectedThenClean]], which leaves nothing.
-    * Without a checkpoint dir: localCheckpoint (local mode, tests), each
-    * checkpoint released as soon as nothing later reads it, so a call
-    * leaves one persisted RDD. */
+    * Each round's edge set and labelling go through [[Materialize]] and are
+    * released as soon as nothing later reads them, so a call leaves one
+    * persisted RDD: the returned frame's. */
   def connectedWithRounds(pairs: DataFrame, aCol: String, bCol: String,
                           maxRounds: Int = 50): (DataFrame, Int) = {
-    val (df, rounds, _) = connectedImpl(pairs, aCol, bCol, maxRounds)
-    (df, rounds)
-  }
-
-  /** Run the closure, hand the result to `consume` (which must FULLY read
-    * it — write it out, collect it), then delete the call's reliable-
-    * materialization residue. The shape for eager consumers like
-    * [[ComponentsIndex.compact]]: under the cron maintenance loop nothing
-    * accumulates beneath the checkpoint dir at all. */
-  def connectedThenClean[T](pairs: DataFrame, aCol: String, bCol: String,
-                            maxRounds: Int = 50)(
-      consume: DataFrame => T): T = {
-    val (df, _, residue) = connectedImpl(pairs, aCol, bCol, maxRounds)
-    // finally: a consumer that throws abandons the frame, so its backing
-    // files are garbage either way — without this, every failed cron
-    // compact would leak one residue dir forever
-    try consume(df)
-    finally residue.foreach(rmPath(pairs.sparkSession, _))
-  }
-
-  private def rmPath(spark: SparkSession, p: String): Unit = {
-    val hp = new org.apache.hadoop.fs.Path(p)
-    hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .delete(hp, true)
-  }
-
-  private def connectedImpl(pairs: DataFrame, aCol: String, bCol: String,
-                            maxRounds: Int): (DataFrame, Int, Option[String]) = {
-    val spark = pairs.sparkSession
-    val ckptBase = spark.sparkContext.getCheckpointDir.map(d =>
-      s"$d/graft-cc/${java.util.UUID.randomUUID()}")
-    // newest first: each materialized frame, with its files on the
-    // reliable path
-    type Held = (DataFrame, Option[String])
-    var written = List.empty[Held]
-    var seq = 0
-    def materialize(df: DataFrame): DataFrame = {
-      val (m, p) = ckptBase match {
-        case Some(base) =>
-          val p = s"$base/r$seq"; seq += 1
-          df.write.parquet(p)
-          (spark.read.parquet(p), Some(p))
-        case None => (df.localCheckpoint(), None)
-      }
-      written = (m, p) :: written
-      m
-    }
-    // each materialization reads only the one before it, so a call holds
-    // at most two and keeps only the returned frame's: files are deleted,
-    // local checkpoints released (Mmr.release)
-    def delete(pick: List[Held] => List[Held]): Unit = {
-      val gone = pick(written)
-      gone.foreach { case (m, p) => p.fold(Mmr.release(m))(rmPath(spark, _)) }
-      written = written.diff(gone)
-    }
-
     // large-star: every node u links its LARGER neighbors to the smallest
     // node it can see (min of u and u's neighbors) — long chains contract
     // geometrically because minima hop two edges per round. Every output
@@ -157,32 +91,34 @@ object Components {
 
     // one row per undirected edge, larger id first
     val edges = Observation()
-    val e0 = materialize(pairs
+    val e0 = Materialize(pairs
       .select(greatest(col(aCol), col(bCol)).as("a"),
         least(col(aCol), col(bCol)).as("b"))
       .where(col("a") =!= col("b"))
       .distinct()
       .observe(edges, count(lit(1)).as("n")))
 
+    // each materialization reads only the one before it, so a call holds
+    // at most two
     @annotation.tailrec
-    def loop(e: DataFrame, rounds: Int): (DataFrame, Int, Option[String]) = {
+    def loop(e: DataFrame, rounds: Int): (DataFrame, Int) = {
       require(rounds < maxRounds,
         s"connected components did not converge in $maxRounds rounds")
-      val s = materialize(smallStar(largeStar(e)))
-      delete(_.drop(1)) // e
+      val s = Materialize(smallStar(largeStar(e)))
+      Materialize.release(e)
       val bad = Observation()
-      val labels = materialize(labelling(s, bad))
+      val labels = Materialize(labelling(s, bad))
       if (bad.get("bad") == 0L) {
-        delete(_.drop(1)) // s
-        (labels, rounds + 1, ckptBase)
+        Materialize.release(s)
+        (labels, rounds + 1)
       } else {
-        delete(_.take(1)) // labels
+        Materialize.release(labels)
         loop(s, rounds + 1)
       }
     }
 
     if (edges.get("n") == 0L)
-      (e0.select(col("a").as("id"), col("b").as("component")), 0, ckptBase)
+      (e0.select(col("a").as("id"), col("b").as("component")), 0)
     else loop(e0, 0)
   }
 
@@ -429,27 +365,29 @@ class ComponentsIndex(spark: SparkSession, path: String,
     // evidence — a star's b-side (the root) gains nothing from its
     // members' freshness.
     val nodeOrd = all.groupBy(col("a").as("id")).agg(max("ord").as("__no"))
+    // the closure's result is written, then released
+    def closeAndWrite(links: DataFrame, aCol: String, bCol: String)(
+        stars: DataFrame => DataFrame): Unit = {
+      val cc = Components.connected(links, aCol, bCol)
+      try write(stars(cc)) finally Materialize.release(cc)
+    }
     def write(cc: DataFrame): Unit =
       cc.join(nodeOrd, "id")
         .select(col("id").as("a"), col("component").as("b"),
           col("__no").as("ord"))
         .write.parquet(new File(next, "stars").getAbsolutePath)
-    // the eager-consumer shape: the closure's reliable-materialization
-    // residue is deleted as soon as the stars generation is written, so
-    // the cron loop accumulates nothing under the checkpoint dir
     (retainOrdGe, st, dl) match {
       case (Some(h), _, _) =>
         val fresh = nodeOrd.where(col("__no") >= h)
         val kept = all.where(col("a") =!= col("b"))
           .join(fresh.select(col("id").as("a")), Seq("a"), "left_semi")
           .join(fresh.select(col("id").as("b")), Seq("b"), "left_semi")
-        Components.connectedThenClean(kept, "a", "b")(write)
+        closeAndWrite(kept, "a", "b")(identity)
       case (None, Some(s), Some(d)) =>
-        Components.connectedThenClean(contracted(s, d), "ra", "rb")(
-          cc => write(assemble(s, cc)))
+        closeAndWrite(contracted(s, d), "ra", "rb")(assemble(s, _))
       case (None, Some(s), None) =>
         write(s.select(col("a").as("id"), col("b").as("component")))
-      case _ => Components.connectedThenClean(all, "a", "b")(write)
+      case _ => closeAndWrite(all, "a", "b")(identity)
     }
   }
 

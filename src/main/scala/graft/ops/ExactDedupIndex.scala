@@ -110,21 +110,22 @@ final class ExactDedupIndex(spark: SparkSession, path: String,
           .select(col("fp")), Seq("fp"), "left_anti")
     }
     val haveBits = bloomDir(gen).exists()
-    // localCheckpoint, not cache: caching would register the plan with the
+    // Materialize, not cache: caching would register the plan with the
     // CacheManager, and this call's own appends then recacheByPath it with
     // a REFRESHED file listing — the probe must keep its pre-append
-    // snapshot. The eager checkpoint replaces the plan with already-
-    // computed blocks (no file relation left to refresh), AND the
-    // (md5-fingerprint + bloom-probe + anti-join) subtree runs ONCE
-    // instead of once per consumer — bits write, rows append, and the
-    // caller's action each re-ran it when lazy. Batch-sized.
-    val novel = (if (bloom && stored.isDefined && haveBits) {
+    // snapshot. The materialized frame's plan is one RDD leaf (no file
+    // relation left to refresh), and a recompute after a lost block
+    // re-reads the file list pinned in that RDD. The (md5-fingerprint +
+    // bloom-probe + anti-join) subtree runs ONCE instead of once per
+    // consumer — bits write, rows append, and the caller's action each
+    // re-ran it when lazy. Batch-sized.
+    val novel = Materialize(if (bloom && stored.isDefined && haveBits) {
       val bits = spark.read.parquet(bloomDir(gen).getAbsolutePath).distinct()
       val verdicts = Bloom.withHits(fps, "fp", bits, BloomK)
       val proven = verdicts.where(!col("bloom_hit")).drop("bloom_hit")
       proven.unionAll(antiJoin(
         verdicts.where(col("bloom_hit")).drop("bloom_hit")))
-    } else antiJoin(fps)).localCheckpoint(true)
+    } else antiJoin(fps))
     if (bloom) {
       // bits must cover EVERY stored fingerprint or false negatives
       // would re-append stored content: a store populated before bloom

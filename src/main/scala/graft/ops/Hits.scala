@@ -34,7 +34,7 @@ import LinkGraph.{Node, Slice}
   * total rides inside that shuffle: every map task sends its partial sum
   * to every reducer, so no partition waits on the driver or on a
   * single-partition exchange. A call runs one job for the overflow check
-  * (which also writes both edge shuffles) and one local-checkpoint job
+  * (which also writes both edge shuffles) and one materialization job
   * for all rounds; iteration count is a fixed constant.
   *
   * Reference analog: the load manager's two-sided ranking of brokers vs
@@ -98,7 +98,7 @@ object Hits {
       hub = normalized(g, g.in, auth, scale) // outgoing authority mass
     }
     // one job for every round: the graph's nodes with both final slices
-    g.checkpointed(
+    g.materialized(
       g.out.zipPartitions(g.in, hub, auth) { (o, i, h, a) =>
         val (hs, as) = (h.next(), a.next())
         LinkGraph.owned(o, i).filter(_ != null).map(v => Row(v, hs(v), as(v)))

@@ -61,8 +61,9 @@ class MinHashIndex(spark: SparkSession, path: String, idCol: String,
   // fresh-checkpoint footgun's shape for this store
   private val hwm = new OrdHighWater(new File(path), "minhash-lsh", strictOrd)
 
-  /** Runs just before the overlapped pair-expansion checkpoint — the seam a
-    * spec uses to make the concurrent postings append commit first. */
+  /** Runs just before the overlapped pair-expansion materialization — the
+    * seam a spec uses to make the concurrent postings append commit
+    * first. */
   @volatile private[ops] var beforeExpansion: () => Unit = () => ()
 
   /** Absolute path of the live postings generation, if any — for plan
@@ -190,16 +191,17 @@ class MinHashIndex(spark: SparkSession, path: String, idCol: String,
         .where(col("a.n") || col("b.n"))
         .select(col("a.id").as("doc_a"), col("b.id").as("doc_b"))
         .distinct()
-      // The pair-expansion checkpoint and the postings append are
+      // The pair-expansion materialization and the postings append are
       // INDEPENDENT consumers of the persisted newBB, so they run
       // OVERLAPPED (guide §2.6): the expansion's postings scan listed its
       // files when the probe plan was created, so the concurrent append's
       // new files are invisible to it (the same pinned-listing argument
-      // as the lazy-recompute note below), and the checkpoint still
-      // severs lineage before this call returns — the RETURNED pairs can
-      // never re-read the postings path. A crash between the two is the
-      // already-designed replay case: the member-dedup keeps re-appended
-      // postings idempotent. The generation is live before the first
+      // as the lazy-recompute note below), and the materialization still
+      // cuts the plan before this call returns — the RETURNED pairs never
+      // re-list the postings path (a recompute after a lost block
+      // re-reads the file list pinned in the RDD). A crash between the
+      // two is the already-designed replay case: the member-dedup keeps
+      // re-appended postings idempotent. The generation is live before the first
       // write (GenStore.append), so a partial one's rows simply re-pair
       // idempotently on replay.
       //
@@ -214,9 +216,11 @@ class MinHashIndex(spark: SparkSession, path: String, idCol: String,
       Fs.inParallel(Seq(true, false), maxThreads = 2) {
         case true =>
           beforeExpansion()
-          // sever lineage BEFORE this call returns: a lazily recomputed
-          // plan would read this batch's own postings back as "old"
-          pairsHolder(0) = pairsLazy.localCheckpoint(true)
+          // materialize BEFORE this call returns: a lazily re-planned
+          // probe would list this batch's own postings back as "old"; a
+          // recompute after a lost block re-reads the file list pinned
+          // in the RDD
+          pairsHolder(0) = Materialize(pairsLazy)
         case false =>
           newBB.drop("__new").withColumn("bp", bp)
             .withColumn("ord", graft.functions.Params.paramLong(batchOrd))

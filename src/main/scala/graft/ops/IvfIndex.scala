@@ -171,17 +171,16 @@ class IvfIndex(spark: SparkSession, path: String, idCol: String,
 
   private def searchStored(stored: DataFrame, queries: DataFrame,
                            probeCells: Column, k: Int): DataFrame = {
-    val q = queries.select(col(idCol).as("query_id"),
+    // queries feed two consumers (the probe-cell collect and the scoring
+    // join) and are small by contract — materialize the plan once
+    val q = Materialize(queries.select(col(idCol).as("query_id"),
         col(vecCol).as("__qv"), probeCells.as("__cells"))
       // explode_OUTER: a null/empty probe array must surface as a null cell
       // for the loud check below — plain explode would silently drop the
       // query from the results, indistinguishable from "no neighbors"
       .withColumn("__cell", explode_outer(col("__cells")))
       .withColumn("__cell", col("__cell").cast("int"))
-      .drop("__cells")
-      // queries feed two consumers (the probe-cell collect and the scoring
-      // join) and are small by contract — materialize the plan once
-      .localCheckpoint(true)
+      .drop("__cells"))
     // static partition filter from the driver-collected probe set: the scan
     // lists and reads ONLY the probed cell directories. Null, empty, or
     // null-element probe arrays fail here, loudly — isin(null) can never
@@ -285,17 +284,18 @@ class IvfIndex(spark: SparkSession, path: String, idCol: String,
         case (Some(pol), Some(c)) =>
           // deterministic hash-ordered sample: orderBy+limit compiles to
           // TakeOrderedAndProject (per-partition top-N, no global sort)
-          val sample = p
+          val sample = Materialize(p
             .orderBy(xxhash64(col(idCol)))
             .limit(pol.sampleN)
-            .select(col(idCol), col(vecCol))
-            .localCheckpoint(true)
-          val profile = Similarity.ivfProbeProfile(sample, p, idCol,
-            vecCol, c, Seq(pol.nprobe), pol.k)
-          val exact = Similarity.bruteForceTopK(sample, p, idCol, vecCol,
-            pol.k)
-          val rec = Similarity.probeRecalls(profile, exact, Seq(pol.nprobe))
-            .select(col("recall").cast("double")).head().getDouble(0)
+            .select(col(idCol), col(vecCol)))
+          val rec = try {
+            val profile = Similarity.ivfProbeProfile(sample, p, idCol,
+              vecCol, c, Seq(pol.nprobe), pol.k)
+            val exact = Similarity.bruteForceTopK(sample, p, idCol, vecCol,
+              pol.k)
+            Similarity.probeRecalls(profile, exact, Seq(pol.nprobe))
+              .select(col("recall").cast("double")).head().getDouble(0)
+          } finally Materialize.release(sample)
           Some(CompactStats(rec, retrained = rec < pol.target))
         case _ => None
       }

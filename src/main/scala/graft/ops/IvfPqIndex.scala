@@ -140,21 +140,22 @@ final class IvfPqIndex(spark: SparkSession, path: String, idCol: String,
       val stats = recallWith.map { case (full, pol) =>
         val storedFull = full
           .join(p.select(col(idCol)), Seq(idCol), "left_semi")
-        val sample = storedFull.orderBy(xxhash64(col(idCol)))
-          .limit(pol.sampleN).select(col(idCol), col(vecCol))
-          .localCheckpoint(true)
-        val approx = searchAgainst(p, liveModel, liveCoarse, sample, full,
-          pol.nprobe, pol.k, pol.shortlist)
-          .select(col("query_id"), col("neighbor_id"))
-        val exact = Similarity.bruteForceTopK(sample, storedFull, idCol,
-          vecCol, pol.k).select(col("query_id"), col("neighbor_id"))
-        val slots = exact.count()
-        require(slots > 0, "IvfPqIndex.compact: recall undefined — the " +
-          "sample produced no exact neighbors")
-        val hits = approx.join(exact, Seq("query_id", "neighbor_id"))
-          .count()
-        IvfPqIndex.CompactStats(hits.toDouble / slots,
-          retrained = hits.toDouble / slots < pol.target)
+        val sample = Materialize(storedFull.orderBy(xxhash64(col(idCol)))
+          .limit(pol.sampleN).select(col(idCol), col(vecCol)))
+        try {
+          val approx = searchAgainst(p, liveModel, liveCoarse, sample, full,
+            pol.nprobe, pol.k, pol.shortlist)
+            .select(col("query_id"), col("neighbor_id"))
+          val exact = Similarity.bruteForceTopK(sample, storedFull, idCol,
+            vecCol, pol.k).select(col("query_id"), col("neighbor_id"))
+          val slots = exact.count()
+          require(slots > 0, "IvfPqIndex.compact: recall undefined — the " +
+            "sample produced no exact neighbors")
+          val hits = approx.join(exact, Seq("query_id", "neighbor_id"))
+            .count()
+          IvfPqIndex.CompactStats(hits.toDouble / slots,
+            retrained = hits.toDouble / slots < pol.target)
+        } finally Materialize.release(sample)
       }
       val (outModel, rows) = stats match {
         case Some(st) if st.retrained =>

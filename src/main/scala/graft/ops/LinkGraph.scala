@@ -17,7 +17,7 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   * onto its edges is then a narrow `zipPartitions`, and a half-round is
   * exactly one shuffle to the other endpoint ([[sumToOwners]]), which also
   * carries the half-round's global total to every partition. All rounds of
-  * a call form one lineage, run by the one job of [[checkpointed]].
+  * a call form one lineage, run by the one job of [[materialized]].
   *
   * Null endpoints keep SQL join semantics: a null node is counted (degree,
   * node count) but never joins, so nothing reads its value through an edge
@@ -123,11 +123,10 @@ private[ops] final class LinkGraph(edges: DataFrame, srcCol: String,
     }
   }
 
-  /** `rows` as a frame, locally checkpointed: the call's one job over all
+  /** `rows` as a frame through [[Materialize]]: the call's one job over all
     * rounds, and the one RDD it leaves persisted. */
-  def checkpointed(rows: RDD[Row], fields: StructField*): DataFrame =
-    spark.createDataFrame(rows, StructType(nodeField +: fields))
-      .localCheckpoint(true)
+  def materialized(rows: RDD[Row], fields: StructField*): DataFrame =
+    Materialize(spark.createDataFrame(rows, StructType(nodeField +: fields)))
 }
 
 private[ops] object LinkGraph {

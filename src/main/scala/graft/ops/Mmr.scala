@@ -2,7 +2,6 @@ package graft.ops
 
 import graft.functions.VectorFunctions
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 
 /** Maximal Marginal Relevance re-ranking (Carbonell & Goldstein, SIGIR'98)
@@ -43,8 +42,8 @@ object Mmr {
     // (typically expensive — brute-force top-k) subtree three times in
     // the first round alone (measured 2 × ~1.4 s re-derivations in
     // q_rag_mmr). Shortlist-sized, same discipline as the per-round
-    // checkpoints below.
-    var remaining = cands.localCheckpoint(true)
+    // materializations below.
+    var remaining = Materialize(cands)
     for (step <- 1 to n) {
       val pen = picks.reduceOption(_.unionByName(_)) match {
         case None => remaining
@@ -63,8 +62,12 @@ object Mmr {
       // min_by over (−score, id): largest score, then SMALLEST candidate id
       // — negating the score (always numeric) instead of the id lets string
       // chunk keys (the realistic RAG store) work unchanged (same shape as
-      // KnnOps' vote tie-break).
-      val pick = scored.groupBy(col(queryCol))
+      // KnnOps' vote tie-break). Shortlist-sized: materialized per round,
+      // cutting the plan — without this, `remaining`'s anti-join chain
+      // re-derives every prior round per reference and the plan grows
+      // exponentially with n (the PageRank/HITS iterative discipline;
+      // measured 6.1 s → sub-second at sf0.1 for n=5)
+      val pick = Materialize(scored.groupBy(col(queryCol))
         .agg(min_by(
           struct(col(candCol), col(relCol), col(vecCol), col("__score")),
           struct((lit(0.0) - col("__score")).as("__ns"), col(candCol)))
@@ -72,40 +75,25 @@ object Mmr {
         .select(col(queryCol), col(s"__p.$candCol").as(candCol),
           col(s"__p.$relCol").as(relCol), col(s"__p.$vecCol").as(vecCol),
           col("__p.__score").as("__score"))
-        .withColumn("step", lit(step.toLong))
-        // shortlist-sized: eagerly materialized per round, truncating the
-        // lineage — without this, `remaining`'s anti-join chain re-derives
-        // every prior round per reference and the plan grows exponentially
-        // with n (the PageRank/HITS iterative discipline; measured 6.1 s →
-        // sub-second at sf0.1 for n=5)
-        .localCheckpoint(true)
+        .withColumn("step", lit(step.toLong)))
       picks += pick
-      // drop the SUPERSEDED remaining's checkpoint blocks once the next
-      // round's remaining is materialized from it (eager, so nothing can
-      // ever re-read the old one): without this every round's blocks
-      // linger until ContextCleaner GC — memory pressure for large
+      // drop the SUPERSEDED remaining's blocks once the next round's
+      // remaining is materialized from it: without this every round's
+      // blocks linger until ContextCleaner GC — memory pressure for large
       // shortlists or repeated rerank calls in one session
       val prevRemaining = remaining
-      remaining = remaining.join(
+      remaining = Materialize(remaining.join(
         pick.select(col(queryCol), col(candCol)), Seq(queryCol, candCol),
-        "left_anti")
-        .localCheckpoint(true)
-      release(prevRemaining)
+        "left_anti"))
+      Materialize.release(prevRemaining)
     }
-    // the result is ONE checkpoint of the n picks, so every per-round
-    // checkpoint — picks and the final remaining — is freed here and a call
+    // the result is ONE materialization of the n picks, so every per-round
+    // one — picks and the final remaining — is freed here and a call
     // leaves one persisted RDD behind whatever n is
-    val out = picks.reduce(_.unionByName(_)).select(col(queryCol), col("step"),
-      col(candCol), col(relCol), round(col("__score"), 6).as("mmr_score"))
-      .localCheckpoint(true)
-    (remaining +: picks.toSeq).foreach(release)
+    val out = Materialize(picks.reduce(_.unionByName(_)).select(
+      col(queryCol), col("step"), col(candCol), col(relCol),
+      round(col("__score"), 6).as("mmr_score")))
+    Materialize.release(remaining +: picks.toSeq: _*)
     out
   }
-
-  /** Frees a local checkpoint's blocks. `Dataset.unpersist` frees nothing
-    * here — a checkpoint is not a CacheManager entry — so unpersist the
-    * checkpointed RDD under the frame's LogicalRDD leaf itself. */
-  private[ops] def release(checkpointed: DataFrame): Unit =
-    checkpointed.queryExecution.analyzed
-      .collect { case r: LogicalRDD => r.rdd.unpersist(blocking = false) }
 }

@@ -31,7 +31,7 @@ import LinkGraph.Slice
   * rides inside that shuffle: every map task sends its partial to every
   * reducer, so no partition waits on the driver or on a single-partition
   * exchange. A call runs one job for the node count (which also writes
-  * both edge shuffles) and one local-checkpoint job for all rounds; the
+  * both edge shuffles) and one materialization job for all rounds; the
   * warm face adds one job for its seed's total. Nothing in the loop
   * touches document payloads, and iteration count is a fixed constant.
   *
@@ -146,7 +146,7 @@ object PageRank {
       }
     }
     // one job for every round: the graph's nodes (a null one included)
-    g.checkpointed(
+    g.materialized(
       g.out.zipPartitions(g.in, rank) { (o, i, r) =>
         val x = r.next()
         LinkGraph.owned(o, i).map(v => Row(v, x(v)))

@@ -76,9 +76,8 @@ final class ParagraphIndex(spark: SparkSession, path: String,
     // materialized once per add (batch-sized): the touched-prefix collect,
     // the novel write, and the returned excise frame each re-ran the
     // explode + md5 subtree when it was lazy (~4 evaluations per add)
-    val u = explodeUnits(batch, idCol, textCol, sep)
-      .withColumn("ph", md5(col("para")))
-      .localCheckpoint(true)
+    val u = Materialize(explodeUnits(batch, idCol, textCol, sep)
+      .withColumn("ph", md5(col("para"))))
 
     // store keepers for ONLY the partitions this batch's hashes touch —
     // pruned on the php partition column inside storedKeepers, so the

@@ -81,8 +81,7 @@ final class SimHashIndex(spark: SparkSession, path: String, idCol: String,
     // covers the posting consumers, but the verdict join re-reads `sh`
     // itself — lazy, that re-ran the per-token hashing over the batch a
     // second time (and the caller's action a third)
-    val sh = SimHashDedup.simhash16(batch, idCol, textCol)
-      .localCheckpoint(true)
+    val sh = Materialize(SimHashDedup.simhash16(batch, idCol, textCol))
     val m = melt(sh).persist()
     try {
       // probe planning: the touched bucket keys, collected ONCE

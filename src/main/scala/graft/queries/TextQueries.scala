@@ -2,7 +2,7 @@ package graft.queries
 
 import graft.core.Tables
 import graft.functions.TextFunctions._
-import graft.ops.{Dedup, MinHashLsh}
+import graft.ops.{Dedup, Materialize, MinHashLsh}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -98,12 +98,14 @@ object TextQueries {
       val lock = ragStoreLocks.computeIfAbsent(path, _ => new Object)
       lock.synchronized {
         if (!idx.hasData) {
-          val chunks = ragChunkVecs(s, d).localCheckpoint(true)
-          val cents = idx.centroids(chunks,
-            VectorQueries.sqrtCells(chunks.count()), iters = 2)
-          (0 until 4).foreach(b => idx.addIdempotent(
-            chunks.where(pmod(col("cid"), lit(4)) === b),
-            graft.ops.KMeans.assignExpr(col("vec"), cents)))
+          val chunks = Materialize(ragChunkVecs(s, d))
+          try {
+            val cents = idx.centroids(chunks,
+              VectorQueries.sqrtCells(chunks.count()), iters = 2)
+            (0 until 4).foreach(b => idx.addIdempotent(
+              chunks.where(pmod(col("cid"), lit(4)) === b),
+              graft.ops.KMeans.assignExpr(col("vec"), cents)))
+          } finally Materialize.release(chunks)
         }
       }
     }
@@ -1776,11 +1778,10 @@ object TextQueries {
         ProbeBudgets.tunedWithMetric(s, d, "rag", cents.length) {
           val budgets = Seq(2, 3, 4, 6, 8, 12, 16, 24)
             .filter(_ <= cents.length)
-          val exact = graft.ops.Similarity.bruteForceTopK(
+          val exact = Materialize(graft.ops.Similarity.bruteForceTopK(
             queries, assigned.select(col("cid"), col("vec")),
             "cid", "vec", 5)
-            .select(col("query_id"), col("neighbor_id"))
-            .localCheckpoint(true)
+            .select(col("query_id"), col("neighbor_id")))
           val profile = graft.ops.Similarity.ivfProbeProfilePreassigned(
             queries, assigned, "cid", "vec", "cell", cents, budgets, 5)
           val row = graft.ops.Similarity.chooseProbeBudget(

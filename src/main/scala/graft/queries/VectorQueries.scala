@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.core.Tables
-import graft.ops.Similarity
+import graft.ops.{Materialize, Similarity}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -584,19 +584,17 @@ object VectorQueries {
       val cents = unitCentroidsFor(s, d, k = sqrtCells(train.count()),
         iters = 2)
       val sample = test.where(col("vec_id") < 2000)
-      val exact = Similarity.bruteForceTopK(
+      // consumed by the tuner, the slot count and the recall join —
+      // bounded (sample×5 rows), materialize once
+      val exact = Materialize(Similarity.bruteForceTopK(
         sample, train, "vec_id", "embedding", 5)
-        .select(col("query_id"), col("neighbor_id"))
-        // consumed by the tuner, the slot count and the recall join —
-        // bounded (sample×5 rows), materialize once
-        .localCheckpoint(true)
+        .select(col("query_id"), col("neighbor_id")))
       val nprobe = tunedNprobe(d, sample, train, exact, cents)
-      val ann = Similarity.ivfTopKProbed(
+      // two consumers (completeness count + recall join) must not
+      // re-run the corpus-scale join; neighbors are anchors×5 rows
+      val ann = Materialize(Similarity.ivfTopKProbed(
         test, train, "vec_id", "embedding", cents, nprobe, k = 5)
-        .select(col("query_id"), col("neighbor_id"))
-        // two consumers (completeness count + recall join) must not
-        // re-run the corpus-scale join; neighbors are anchors×5 rows
-        .localCheckpoint(true)
+        .select(col("query_id"), col("neighbor_id")))
       val slots = exact.agg(count(lit(1)).as("__slots"))
       val nTest = test.agg(count(lit(1)).as("n_test"))
       val annQ = ann.agg(countDistinct(col("query_id")).as("__annq"))
@@ -639,20 +637,18 @@ object VectorQueries {
       // (agreement 0.72 there); rises with the √n cell count on grown
       // corpora (8-of-34 at 9×, agreement 0.73 measured).
       val sampleAnchors = anchors.where(col("vec_id") < 2000)
-      val exact = graft.ops.KnnOps.tripletMine(
-        sampleAnchors, uemb, "vec_id", "embedding", "label", margin = 0.1)
-        .localCheckpoint(true)
+      val exact = Materialize(graft.ops.KnnOps.tripletMine(
+        sampleAnchors, uemb, "vec_id", "embedding", "label", margin = 0.1))
       val nprobe = tunedTripletNprobe(d, sampleAnchors, uemb,
         exact.select(col("vec_id"), col("neg_id").as("ne")), cents)
-      val ivf = graft.ops.KnnOps.tripletMineIvf(
+      // two consumers (full count + sampled audit join): the mined set
+      // is anchors-sized, never re-run the corpus-scale mine
+      val ivf = Materialize(graft.ops.KnnOps.tripletMineIvf(
         anchors, uemb, "vec_id", "embedding", "label", cents,
         nprobe = nprobe, margin = 0.1, posCap = 512)
         .select(col("vec_id"), col("pos_id").as("pi"),
           col("pos_sim").as("psi"), col("neg_id").as("ni"),
-          col("neg_sim").as("nsi"))
-        // two consumers (full count + sampled audit join): the mined
-        // set is anchors-sized, never re-run the corpus-scale mine
-        .localCheckpoint(true)
+          col("neg_sim").as("nsi")))
       val audited = exact.select(col("vec_id"), col("pos_id").as("pe"),
           col("pos_sim").as("pse"), col("neg_id").as("ne"),
           col("neg_sim").as("nse"))

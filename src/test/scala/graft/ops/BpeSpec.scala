@@ -39,6 +39,14 @@ class BpeSpec extends SparkSuite {
     assert(merges == Seq(Bpe.Merge("a", "a"), Bpe.Merge("a", "b")))
   }
 
+  test("training releases every word table it materialized") {
+    // train returns merges, not a frame: no table it built is read later
+    val left = persistedBy {
+      assert(Bpe.train(docs("aa aa ab abc"), "text", numMerges = 3).size == 3)
+    }
+    assert(left.isEmpty, s"train left ${left.size} persisted RDDs behind")
+  }
+
   test("merge application is one left-to-right non-overlapping pass") {
     val m = Seq(Bpe.Merge("a", "a"))
     // aaa -> [aa, a], aaaa -> [aa, aa]: the leftmost pair merges first and

@@ -3,8 +3,11 @@ package graft.ops
 import java.util.concurrent.atomic.AtomicInteger
 
 import graft.SparkSuite
+import org.apache.spark.SparkEnv
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.RDDBlockId
 
 /** Crash-point fault-injection sweep over the shared [[GenStore]]
   * lifecycle: every persisted index claims "a crash between IO steps
@@ -230,5 +233,33 @@ class FaultInjectionSpec extends SparkSuite {
     } { dir =>
       canon(new Bm25Index(spark, dir, "id", "text").search(qs, 10))
     }
+  }
+
+  test("a materialized result survives loss of its cached blocks") {
+    // an executor loss takes a result's persisted blocks with it; the
+    // next read must recompute them from lineage, not fail the job
+    def bm = SparkEnv.get.blockManager
+    def blocks(df: DataFrame): Seq[RDDBlockId] =
+      df.queryExecution.analyzed.collect { case r: LogicalRDD => r.rdd }
+        .flatMap(r => r.partitions.indices.map(RDDBlockId(r.id, _)))
+        .filter(bm.getStatus(_).isDefined)
+    val path = Components.connected(
+      (0L until 63L).map(i => (i, i + 1)).toDF("doc_a", "doc_b"),
+      "doc_a", "doc_b")
+    val reranked = Mmr.rerank(Seq(
+        (0L, 1L, 0.99, Seq(1.0, 0.0)), (0L, 2L, 0.98, Seq(1.0, 0.001)),
+        (0L, 3L, 0.50, Seq(0.0, 1.0))).toDF("query_id", "cand_id", "rel",
+        "vec"),
+      "query_id", "cand_id", "rel", "vec", n = 2, lam = 0.7, lamComp = 0.3)
+    Seq(path, reranked).foreach { df =>
+      val rows = df.collect().toSet
+      val held = blocks(df)
+      assert(held.nonEmpty, "the result holds no cached blocks to lose")
+      held.foreach(bm.removeBlock(_))
+      assert(blocks(df).isEmpty)
+      assert(df.collect().toSet == rows)
+    }
+    assert(path.as[(Long, Long)].collect().toMap ==
+      (0L until 64L).map(_ -> 0L).toMap)
   }
 }
